@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Driver-visible evidence for the two rows-only registry queries.
@@ -22,20 +21,7 @@ object ApproxBounds {
   def main(args: Array[String]): Unit = {
     val sfDirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val (cpuStr, cpus) = GraftConf.cpuSpec(8)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpuStr]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Driver-generated fixtures carry naive (isAdjustedToUTC=false) parquet
-      // timestamps; read them as TIMESTAMP (session tz = UTC), not NTZ, so
-      // unix_micros/window arithmetic keeps the semantics every oracle pins.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftConf.cpuSpec(8)._2)
 
     def entry(sfDir: String): String = {
       val approxD = SparkEntry.queries("approx_distinct")(spark, sfDir).collect()(0)

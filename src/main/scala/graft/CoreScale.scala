@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Core-scaling audit (r19 verdict #3): the driver's 8-vs-32-core block
   * is uninformative at sf0.1 — every ratio ≈ 1 because the board is
   * fixed-cost-bound at that scale — so this main measures the heavy
@@ -16,10 +14,12 @@ import org.apache.spark.sql.SparkSession
   * Methodology matches Bench: shuffle partitions are DATA-sized (32 ×
   * factor, the dataSizedPartitions rule — identical at both core counts
   * so the partition count never masquerades as core scaling), each query
-  * is re-run until its two smallest samples agree within 2×, and the min
-  * is reported. Geometry-capped operators run at their documented ×10
-  * conf (ann.planes +log2(f), ann.centroidMod ×f), identical at both
-  * core counts.
+  * is re-run until its two smallest samples agree within 2× (the shared
+  * [[Bench.sample]] loop, at most 3 samples), and the min is reported; a
+  * query that fails or times out is listed under `"failed"` instead.
+  * Geometry-capped operators run at their documented ×10 conf
+  * (ann.planes +log2(f), ann.centroidMod ×f), identical at both core
+  * counts.
   *
   * Usage: SPARK_GRAFT_CPUS=8|32 runMain graft.CoreScale <outJson> [q,...]
   */
@@ -47,51 +47,27 @@ object CoreScale {
     val queries = args.lift(1)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultQueries)
-    val (cpuStr, cpus) = GraftConf.cpuSpec(32)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpuStr]")
-      .appName("graft-core-scale")
-      // data-sized, NOT core-sized: identical at both core counts
-      .config("spark.sql.shuffle.partitions", (32 * Factor).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftConf.cpuSpec(32)._2
+    // data-sized, NOT core-sized: identical at both core counts
+    val spark = GraftSession.local(cpus,
+      "spark.sql.shuffle.partitions" -> (32 * Factor).toString)
     val big = ScaleStress.synthesize(spark, "/root/testdata/sf0.1", Factor)
 
-    def timeOne(name: String): Double = {
+    val (samples, failed) = Bench.sample(queries, maxRuns = 3, Double.PositiveInfinity) { name =>
       spark.catalog.clearCache()
       val overrides = bigConf(name)
       overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-      val t0 = System.nanoTime()
-      try {
-        ops.GuardOps.runBounded(spark, s"corescale-$name", 600000L) {
-          SparkEntry.queries(name)(spark, big).count()
-        }
-      } catch { case _: Throwable => -1L }
-      finally overrides.keys.foreach(spark.conf.unset)
-      (System.nanoTime() - t0) / 1e9
+      try ops.GuardOps.timedRun(spark, s"corescale-$name", 600000L) {
+        SparkEntry.queries(name)(spark, big).count()
+      } finally overrides.keys.foreach(spark.conf.unset)
     }
 
-    def agreed(v: Vector[Double]): Boolean = v.size >= 2 && {
-      val s = v.sorted; s(1) <= math.max(2.0 * s(0), s(0) + 0.5)
-    }
-    val samples = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    for (n <- queries) samples(n) = Vector(timeOne(n))
-    for (n <- queries if !agreed(samples(n)) || samples(n).size < 2)
-      samples(n) = samples(n) :+ timeOne(n)
-    for (n <- queries if !agreed(samples(n)) && samples(n).size < 3)
-      samples(n) = samples(n) :+ timeOne(n)
-
-    def r3(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    import Bench.{jsonStrings, r3}
     val qs = samples.map { case (k, v) =>
       "\"" + k + "\":{\"min\":" + r3(v.min) + ",\"samples\":[" +
         v.map(r3).mkString(",") + "]}"
     }.mkString("{", ",", "}")
-    val line = s"""{"cpus":$cpus,"factor":$Factor,"shufflePartitions":${32 * Factor},"dir":"$big","queries":$qs}"""
+    val line = s"""{"cpus":$cpus,"factor":$Factor,"shufflePartitions":${32 * Factor},"dir":"$big","queries":$qs,"failed":${jsonStrings(failed)}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
       line.getBytes("UTF-8"))
     println(line)

@@ -16,9 +16,9 @@ object GraftConf {
   val round: String = "r17"
 
   /** `SPARK_GRAFT_CPUS` normalization, shared by EVERY main that builds a
-    * local session (one parser, five entry points — round-10 review
-    * finding: StageAudit alone accepted `local[8]` while the others
-    * interpolated it into `local[local[8]]`). Accepts a thread count
+    * local session (one parser — round-10 review finding: one main alone
+    * accepted `local[8]` while the others interpolated it into
+    * `local[local[8]]`). Accepts a thread count
     * ("8"), a bare "*" (all cores), or Spark's full "local[8]"/"local[*]"
     * spelling; rejects anything else at startup. Returns the core spec
     * for the `local[...]` master URL and the numeric count (used to size
@@ -152,9 +152,9 @@ object GraftConf {
 
   /** Cosine threshold for the SemDeDup pair graph (`dedup_semantic` and
     * its streaming twin). Default = the fixture-wide cluster threshold
-    * the registry oracle pins; the recall audit overrides it to measure
-    * blocking recall in the tight-τ production regime (Abbas et al.
-    * operate at ≈0.9+) without forking the operator. */
+    * the registry oracle pins; overriding it measures blocking recall in
+    * the tight-τ production regime (Abbas et al. operate at ≈0.9+)
+    * without forking the operator (SEMDEDUP_RECALL.json). */
   def semCosThreshold(spark: SparkSession): Double =
     spark.conf.get("spark.graft.sem.cosThreshold",
       graft.ops.SimOps.ClusterCosThreshold.toString).toDouble
@@ -219,8 +219,8 @@ object GraftConf {
     * at the quantizer level: the tight-τ pair recall the nprobe=1 cut
     * gives up across a decade (0.830 → 0.703, SEMDEDUP_RECALL r15) is
     * bought back by probing more super-cells at n·nprobe·O(√k) assign
-    * cost. Default 1 = the registry/oracle procedure; the recall audit
-    * measures the nprobe=2 operating point. */
+    * cost. Default 1 = the registry/oracle procedure; SEMDEDUP_RECALL.json
+    * records the nprobe=2 operating point. */
   def semNprobe(spark: SparkSession): Int = {
     val n = spark.conf.get("spark.graft.sem.nprobe", "1").toInt
     // loud-failure doctrine: nprobe < 1 would make the probe filter drop

@@ -369,19 +369,8 @@ object ScaleStress {
     // of the documents family must not pay a 600M-row lineitem write
     val tablesOnly = args.lift(4).map(_.split(",").map(_.trim).toSet)
     val heavies = only.fold(Heavies)(f => Heavies.filter(h => f(h.name)))
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[${GraftConf.cpuSpec(32)._1}]")
-      .appName("graft-scale-stress")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Driver-generated fixtures carry naive (isAdjustedToUTC=false) parquet
-      // timestamps; read them as TIMESTAMP (session tz = UTC), not NTZ, so
-      // unix_micros/window arithmetic keeps the semantics every oracle pins.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
+    val spark = GraftSession.local(GraftConf.cpuSpec(32)._2,
+      "spark.driver.memory" -> "8g",
       // Shuffle codec override for the disk-bound decades: zstd squeezes
       // the pair-heavy band exchanges ~2× tighter than lz4 (minhash slot
       // values are biased small — min of m uniform draws — so their high
@@ -389,10 +378,7 @@ object ScaleStress {
       // exponent is codec-neutral; absolute times are not comparable
       // across artifacts recorded under different codecs (the JSON
       // records the codec).
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
 
     val big = synthesize(spark, small, factor, tablesOnly)
 

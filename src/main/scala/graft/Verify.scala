@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,20 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // extra args = subset of query names (local iteration; driver passes 2)
     val only = args.drop(2).toSet
-    val (cpuStr, cpus) = GraftConf.cpuSpec(4)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpuStr]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Driver-generated fixtures carry naive (isAdjustedToUTC=false) parquet
-      // timestamps; read them as TIMESTAMP (session tz = UTC), not NTZ, so
-      // unix_micros/window arithmetic keeps the semantics every oracle pins.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftConf.cpuSpec(4)._2)
     new java.io.File(outDir).mkdirs()
     // O12 monitor/await applied to the correctness driver too (round-10
     // verdict #3): each query runs under a tagged job-group bound, so ONE

@@ -51,17 +51,7 @@ import java.util.{Comparator, PriorityQueue}
   */
 object BpeTrainer {
 
-  /** Per-merge-step evidence for the scale audit: how much work the step
-    * actually touched (delta-sized, not vocabulary-sized). */
-  final case class Step(
-      rank: Int, x: String, y: String, cnt: Long, touchedWords: Int,
-      pairUpdates: Int, nanos: Long)
-
-  def train(wordFreq: Seq[(String, Long)], maxMerges: Int): Vector[(String, String)] =
-    trainWithStats(wordFreq, maxMerges)._1
-
-  def trainWithStats(wordFreq: Seq[(String, Long)], maxMerges: Int)
-      : (Vector[(String, String)], Vector[Step]) = {
+  def train(wordFreq: Seq[(String, Long)], maxMerges: Int): Vector[(String, String)] = {
     val n = wordFreq.size
     val words = new Array[Array[String]](n)
     val freqs = new Array[Long](n)
@@ -116,7 +106,6 @@ object BpeTrainer {
     }
 
     val merges = Vector.newBuilder[(String, String)]
-    val steps = Vector.newBuilder[Step]
     var rank = 0
     var exhausted = false
     while (rank < maxMerges && !exhausted) {
@@ -128,11 +117,8 @@ object BpeTrainer {
       }
       if (best == null) exhausted = true // graceful break: corpus fully fused
       else {
-        val t0 = System.nanoTime()
-        val (cnt, x, y) = best
+        val (_, x, y) = best
         merges += ((x, y))
-        var touched = 0
-        var updates = 0
         val affected = pairWords.remove((x, y))
         if (affected != null) {
           val it = affected.iterator()
@@ -147,19 +133,18 @@ object BpeTrainer {
               has = syms(i) == x && syms(i + 1) == y; i += 1
             }
             if (has) {
-              touched += 1
               val f = freqs(wid)
               // delta update = subtract the word's old adjacency pairs,
               // add the new ones; only this word's pairs change
               i = 0
               while (i < syms.length - 1) {
-                bump((syms(i), syms(i + 1)), -f, wid); updates += 1; i += 1
+                bump((syms(i), syms(i + 1)), -f, wid); i += 1
               }
               val merged = BpeCore.applyMerge(syms, x, y)
               words(wid) = merged
               i = 0
               while (i < merged.length - 1) {
-                bump((merged(i), merged(i + 1)), f, wid); updates += 1; i += 1
+                bump((merged(i), merged(i + 1)), f, wid); i += 1
               }
             }
           }
@@ -169,10 +154,9 @@ object BpeTrainer {
         // the apply rule and the counter disagree
         require(pairCount.getOrDefault((x, y), 0L) == 0L,
           s"pair count for merged pair ($x, $y) did not drain to 0")
-        steps += Step(rank, x, y, cnt, touched, updates, System.nanoTime() - t0)
         rank += 1
       }
     }
-    (merges.result(), steps.result())
+    merges.result()
   }
 }

@@ -525,16 +525,16 @@ object DedupOps {
     * whose query just ran (the fixpoint loops fuse their per-round
     * convergence probe into the checkpoint action this way — one action
     * per round instead of two). The observation completes on the async
-    * listener bus a few ms after the action returns, so this waits a
-    * BOUNDED beat for it; if the bus ever drops the event (pathological
-    * load), the caller's fallback job recomputes the probe — the fusion
-    * can delay a round by at most the bound, never hang or change the
-    * answer. */
+    * listener bus a few ms after the action returns, so this waits up to
+    * 2 s for it; if the bus ever drops the event (pathological load) or
+    * the metric is missing under `key`, the caller's fallback job
+    * recomputes the probe — the fusion can delay a round by at most the
+    * bound, never hang or change the answer. */
   private[graft] def observedLong(obs: org.apache.spark.sql.Observation,
       key: String)(fallback: => Long): Long =
     scala.util.Try(scala.concurrent.Await.result(
-        obs.future, scala.concurrent.duration.Duration(2, "s")))
-      .toOption.map(_.getAs[Long](key)).getOrElse(fallback)
+        obs.future, scala.concurrent.duration.Duration(2, "s")).getAs[Long](key))
+      .getOrElse(fallback)
 
   private val MaxCcRounds = 50
 
@@ -566,9 +566,9 @@ object DedupOps {
       // around Long on billion-node/large-id graphs. Still one driver-side
       // long per round, no collect — and since r19 the count rides the
       // checkpoint action as an observed metric (one action per round,
-      // not two; hang-proof: getOrEmpty never blocks, and a missing
-      // metric falls back to the r18 count job over the checkpointed
-      // table).
+      // not two; the read waits at most 2 s for the listener bus, and a
+      // missing metric falls back to the r18 count job over the
+      // checkpointed table).
       val obs = org.apache.spark.sql.Observation()
       val next = eagerCheckpoint(prop
         .join(prop.select(col("doc_id").as("p_id"), col("label").as("p_label")),

@@ -287,8 +287,8 @@ object GraphOps {
     // the frontier-empty probe rides the checkpoint action as an
     // observed count(1) instead of a separate limit(1).count() job —
     // one action per round, not two (r19; the r18-rejected Observation
-    // idea, now hang-proof: getOrEmpty never blocks, and a missing
-    // metric falls back to the old probe). The seed frontier is one row
+    // idea, now bounded: the read waits at most 2 s for the listener bus,
+    // and a missing metric falls back to the old probe). The seed frontier is one row
     // by construction, so the first round needs no probe.
     var frontierRows = 1L
     var h = 0

@@ -62,4 +62,22 @@ object GuardOps {
         throw e.getCause
     } finally exec.shutdownNow()
   }
+
+  /** How one bounded run ended: `status` is `ok`, `timeout` or `error`;
+    * `seconds` is its wall time and is a timing only when `ok`. */
+  final case class Run(status: String, seconds: Double, failure: Option[Throwable]) {
+    def ok: Boolean = status == "ok"
+  }
+
+  /** [[runBounded]] as a measurement: never throws, records how it ended. */
+  def timedRun(spark: SparkSession, tag: String, timeoutMs: Long)(action: => Any): Run = {
+    val t0 = System.nanoTime()
+    val (status, failure) =
+      try { runBounded(spark, tag, timeoutMs)(action); ("ok", None) }
+      catch {
+        case e: TimeoutException => ("timeout", Some(e))
+        case e: Throwable        => ("error", Some(e))
+      }
+    Run(status, (System.nanoTime() - t0) / 1e9, failure)
+  }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * drops the storage and the `storageLevel == NONE` check rebuilds — the
   * `toksetCache` doctrine, generalized).
   *
-  * The cache key is the CANONICALIZED logical plan itself, compared
+  * The cache key is the CANONICALIZED analyzed plan itself, compared
   * structurally (plus the application id), so it needs no per-site key
   * discipline: two calls that build the same plan over the same source
   * share the entry, while a different corpus dir (different scan path)
@@ -41,8 +41,11 @@ private[graft] object PinCache {
     // and multi-app JVMs
     cache.entrySet.removeIf(e =>
       e.getValue.sparkSession.sparkContext.isStopped)
+    // the ANALYZED plan, not `logical`: the parsed plan of a SQL frame
+    // names its tables (`UnresolvedRelation(lineitem)`) without the scan
+    // path behind them, so two corpora's `spark.sql` pins shared one key
     val key = (df.sparkSession.sparkContext.applicationId,
-      df.queryExecution.logical.canonicalized)
+      df.queryExecution.analyzed.canonicalized)
     cache.compute(key, (_, old) =>
       if (old != null && old.storageLevel != StorageLevel.NONE) old
       else df.persist())

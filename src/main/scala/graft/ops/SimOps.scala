@@ -484,10 +484,8 @@ object SimOps {
         col("cent_id").as("cell"), col("ccos"))
   }
 
-  /** The assign [[dedupSemantic]] (and its recall audit) runs: indexed
-    * two-level by default ([[graft.GraftConf.semIndexedAssign]]), flat
-    * for A/B comparison. One definition so the shipped op and the audit
-    * can never diverge on the candidate blocking. */
+  /** The assign [[dedupSemantic]] runs: indexed two-level by default
+    * ([[graft.GraftConf.semIndexedAssign]]), flat for A/B comparison. */
   private[graft] def semAssignScored(spark: SparkSession, v: DataFrame): DataFrame = {
     val cents = ivfCentroids(spark, v)
     if (graft.GraftConf.semIndexedAssign(spark)) ivfAssignScoredIndexed(v, cents)
@@ -526,12 +524,11 @@ object SimOps {
     * it visibly entering at ×100; the r15 rerun measures the drop). The
     * two-level cell choice is an IVF nprobe=1 approximation of the flat
     * argmin — a different-but-deterministic blocking, replayed exactly
-    * by the oracle and re-measured by the recall audit
-    * (SEMDEDUP_RECALL.json); [[graft.GraftConf.semIndexedAssign]] keeps
-    * the flat path for A/B. The pair threshold reads
-    * [[graft.GraftConf.semCosThreshold]] (default = the oracle-pinned
-    * fixture threshold) so the recall audit can measure the tight-τ
-    * production regime without forking the operator. Output is
+    * by the oracle (its recall is recorded in SEMDEDUP_RECALL.json);
+    * [[graft.GraftConf.semIndexedAssign]] keeps the flat path for A/B.
+    * The pair threshold reads [[graft.GraftConf.semCosThreshold]]
+    * (default = the oracle-pinned fixture threshold), so the tight-τ
+    * production regime needs no fork of the operator. Output is
     * corpus-sized — every vector, its
     * group, and the keep/drop decision a training-set writer consumes. */
   def dedupSemantic(spark: SparkSession, sfDir: String): DataFrame = {
@@ -592,8 +589,8 @@ object SimOps {
     * single-cell probe's (the nearest cell ranks first in its own
     * top-nprobe list), so recall can only rise — EmbedAnnSpec pins the
     * rank-for-rank cosine dominance and the exact nprobe=1 degeneration
-    * to `ann_ivf_probe`; AnnTradeoff measures the recall/wall point
-    * next to the nprobe=1 tier. At 100 TB the cost is nprobe
+    * to `ann_ivf_probe`; `ann_recall_nprobe` gates its recall next to
+    * the nprobe=1 tier. At 100 TB the cost is nprobe
     * partition-pruned cell scans per query instead of one — the knob
     * that buys back the recall the coarse quantizer's nprobe=1 cut
     * gives up, without touching the index. Output carries the
@@ -841,7 +838,7 @@ object SimOps {
     val v = lrFeatures(spark, sfDir)
     // REGISTRY NOTE (r18 advice, documented): construction runs the GD
     // steps — three bounded collect() jobs — so a plan-only consumer
-    // (Explain, plan dumps) triggers corpus scans as a build side
+    // (a plan dump) triggers corpus scans as a build side
     // effect. Accepted for the same reason as eagerCheckpoint (see its
     // scaladoc): iterative training IS driver-paced, and every timed
     // harness times build+action together.

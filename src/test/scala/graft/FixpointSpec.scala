@@ -42,6 +42,14 @@ class FixpointSpec extends SparkSpec {
     assert(v === 42L, "unresolved observation must route to the fallback")
   }
 
+  test("observedLong falls back on a mis-keyed metric instead of throwing") {
+    val obs = Observation()
+    val df = spark.range(10).toDF("id").observe(obs, count(lit(1)).as("c"))
+    ops.DedupOps.eagerCheckpoint(df)
+    val v = ops.DedupOps.observedLong(obs, "not_c") { 7L }
+    assert(v === 7L, "a completed observation without the key must route to the fallback")
+  }
+
   test("observedLong counts zero-row rounds as zero, not as a fallback") {
     val obs = Observation()
     val df = spark.range(10).toDF("id").filter(col("id") < 0) // empty

@@ -6,23 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session — suites run
   * sequentially in the forked test JVM). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Driver-generated fixtures carry naive (isAdjustedToUTC=false) parquet
-      // timestamps; read them as TIMESTAMP (session tz = UTC), not NTZ, so
-      // unix_micros/window arithmetic keeps the semantics every oracle pins.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4] with 4 shuffle partitions, fixed: plan-shape and partition
+  // count assertions must not follow the host's core count
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
