@@ -25,6 +25,11 @@ package graft
   * A query that errors or times out on any run is listed in `"failed"` and
   * counts in neither `"queries"` nor the total: a crash that returns fast
   * must not make the total better.
+  *
+  * A contended window must show in the artifact itself: the host's load
+  * average and a fixed [[canary]] job are recorded at both ends of the
+  * sampling window (`"host_load_start"`, `"host_load_end"`,
+  * `"host_canary_s"`, `"host_canary_end_s"`).
   */
 object Bench {
 
@@ -69,6 +74,18 @@ object Bench {
     s(1) <= math.max(2.0 * s(0), s(0) + 0.5)
   }
 
+  /** A fixed plain-Spark job that uses no engine code, so its wall time
+    * tracks the host and not the engine: two warm-up runs, then the
+    * fastest of four, which a sustained load slows and a stray pause
+    * does not. */
+  def canary(spark: org.apache.spark.sql.SparkSession): Double =
+    (1 to 6).map { _ =>
+      val t0 = System.nanoTime()
+      spark.range(0L, 10000000L, 1L, spark.sparkContext.defaultParallelism)
+        .selectExpr("sum(hash(id))").collect()
+      (System.nanoTime() - t0) / 1e9
+    }.drop(2).min
+
   def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
   def jsonStrings(v: Seq[String]): String = v.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
 
@@ -110,6 +127,9 @@ object Bench {
     // that's genuinely bimodal from eating the budget alone.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "1500").toDouble
     val maxRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAXRUNS", "5").toInt
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    val loadStart = os.getSystemLoadAverage
+    val canaryStart = canary(spark)
     val (samples, failed) = sample(queries.keys.toSeq, maxRuns, budgetSec) { name =>
       // each query is an independent measurement: drop any cache blocks a
       // previous query persisted (several operators persist plan-shared
@@ -120,6 +140,8 @@ object Bench {
         queries(name)(spark, sfDir).count()
       }
     }
+    val loadEnd = os.getSystemLoadAverage
+    val canaryEnd = canary(spark)
 
     val ordered = samples.map { case (k, v) => (k, v.min) }.sortBy(_._1)
     val qs = ordered.map { case (k, v) => "\"" + k + "\":" + r3(v) }
@@ -129,7 +151,7 @@ object Bench {
     // headline fields LAST so tail-truncation of a long queries map never
     // eats them
     val line =
-      s"""{"queries":$qs,"unstable":${jsonStrings(unstable)},"sf":"$sfDir","n_queries":${ordered.size},"n_unstable":${unstable.size},"failed":${jsonStrings(failed)},"metric":"total","value":${r3(total)},"unit":"sec"}"""
+      s"""{"queries":$qs,"unstable":${jsonStrings(unstable)},"sf":"$sfDir","n_queries":${ordered.size},"n_unstable":${unstable.size},"failed":${jsonStrings(failed)},"host_load_start":${r3(loadStart)},"host_load_end":${r3(loadEnd)},"host_canary_s":${r3(canaryStart)},"host_canary_end_s":${r3(canaryEnd)},"metric":"total","value":${r3(total)},"unit":"sec"}"""
     try {
       val out = java.nio.file.Paths.get(sys.props("user.dir"), "BENCH_LOCAL.json")
       java.nio.file.Files.write(out, line.getBytes("UTF-8"))

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Parquet table loaders for the harness fixture corpus (FIXTURES.md).
@@ -52,6 +54,32 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame  = read(spark, p(sfDir, "documents"))
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = read(spark, p(sfDir, "embeddings"))
 
+  /** Round-robin spread of a COMPACT source ahead of a CPU-bulk stage
+    * (per-shingle md5s, masked-key explodes, signature kernels), GUARDED
+    * by the source's planned scan parallelism (r19 scale guard; closes
+    * r18 What's-wrong #1): at fixture scale the parquet source is one
+    * split and the repartition is what keeps the downstream CPU bulk off
+    * a single task (measured 5× on minhash_lsh, r14), but at cluster
+    * scale the same scan is thousands of splits and an UNCONDITIONAL
+    * repartition would round-robin the raw corpus bytes for nothing —
+    * and even REDUCE parallelism to defaultParallelism.
+    *
+    * The partition count comes from the planned RDD of the frame's own
+    * physical plan: for a plan with no shuffle that is split planning,
+    * not execution, so the guard runs no job. A plan that would need an
+    * exchange (an aggregate, a join, a sort) could run one while the
+    * query is still being built — with AQE its shuffle stages execute
+    * to answer the count — so such a frame is rejected. */
+  private[graft] def spreadCompactSource(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    require(!qe.sparkPlan.exists {
+        case _: Exchange => true
+        case p => p.requiredChildDistribution.exists(_ != UnspecifiedDistribution)
+      }, s"spreadCompactSource needs a shuffle-free source plan, got:\n${qe.sparkPlan}")
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (qe.toRdd.getNumPartitions < target) df.repartition(target) else df
+  }
+
   /** Historically the driver wrote `events.ts` as parquet TIMESTAMP(NANOS)
     * (current fixtures write microseconds — the LongType branch below is
     * the compatibility net); Spark has no nanosecond timestamp type. Read
@@ -67,22 +95,6 @@ object Tables {
     * builders (Verify/Bench/tests) also set it up front; this set is the
     * safety net for sessions handed in by the driver.
     */
-  /** Round-robin spread of a COMPACT source ahead of a CPU-bulk stage
-    * (per-shingle md5s, masked-key explodes, signature kernels), GUARDED
-    * by the source's planned scan parallelism (r19 scale guard; closes
-    * r18 What's-wrong #1): at fixture scale the parquet source is one
-    * split and the repartition is what keeps the downstream CPU bulk off
-    * a single task (measured 5× on minhash_lsh, r14), but at cluster
-    * scale the same scan is thousands of splits and an UNCONDITIONAL
-    * repartition would round-robin the raw corpus bytes for nothing —
-    * and even REDUCE parallelism to defaultParallelism. Probing
-    * `rdd.getNumPartitions` is plan-time only (no job: split planning,
-    * not execution) and answers exactly the question the guard asks. */
-  private[graft] def spreadCompactSource(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // schema cached AFTER the conf set, so the cached entry is always the

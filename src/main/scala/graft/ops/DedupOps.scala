@@ -460,26 +460,6 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  /** Reusable connected components: `nodes` (doc_id) + undirected `pairs`
-    * (doc_a, doc_b) → (doc_id, label) with label = min node id reachable.
-    * Each round is min-label propagation over edges PLUS pointer jumping
-    * (label ← label's label): propagation alone needs O(diameter) rounds
-    * — catastrophic for the adversarial long-chain components a 100 TB
-    * dedup graph can contain — while the jump step halves pointer-chain
-    * depth every round, so convergence is O(log diameter) (a 10M-node
-    * chain resolves in ~25 rounds, not 10M). Every label value is itself
-    * a node id, so the jump is a plain self-equi-join; checkpoint
-    * discipline as described on [[dedupClusters]]. The loop runs only
-    * over edge-involved nodes — per-round work scales with the duplicate
-    * subgraph, not the corpus — and isolated nodes rejoin afterwards
-    * with their own id as label. */
-  /** Eager lineage truncation with a cluster-safe default: when the
-    * session has a checkpoint dir configured (`spark.sparkContext
-    * .setCheckpointDir` / `spark.checkpoint.dir`), use RELIABLE
-    * `checkpoint` — blocks live on the shared FS, so an executor loss
-    * mid-fixpoint recovers instead of failing the job. Otherwise fall
-    * back to `localCheckpoint` (correct and fastest under `local[N]`,
-    * where executor loss means JVM loss anyway). */
   /** Band rows `(id, sig, band_idx, band_hash)` for an `(id, sig)` frame
     * — the LSH banding shared by the one-shot [[minhashLsh]] and the
     * incremental streaming maintenance
@@ -504,7 +484,15 @@ object DedupOps {
   /** Signature width (shared with the incremental streaming dedup). */
   private[graft] def SigK: Int = K
 
-  /** EAGER by design (r16 advice, documented): checkpoint/localCheckpoint
+  /** Eager lineage truncation with a cluster-safe default: when the
+    * session has a checkpoint dir configured (`spark.sparkContext
+    * .setCheckpointDir` / `spark.checkpoint.dir`), use RELIABLE
+    * `checkpoint` — blocks live on the shared FS, so an executor loss
+    * mid-fixpoint recovers instead of failing the job. Otherwise fall
+    * back to `localCheckpoint` (correct and fastest under `local[N]`,
+    * where executor loss means JVM loss anyway).
+    *
+    * EAGER by design (r16 advice, documented): checkpoint/localCheckpoint
     * execute the checkpointed subtree at CALL time, so a query builder
     * routed through this helper (dedup_clusters' pair set,
     * dedup_recall_eval's truth/found enumerations) runs its expensive
@@ -538,6 +526,19 @@ object DedupOps {
 
   private val MaxCcRounds = 50
 
+  /** Reusable connected components: `nodes` (doc_id) + undirected `pairs`
+    * (doc_a, doc_b) → (doc_id, label) with label = min node id reachable.
+    * Each round is min-label propagation over edges PLUS pointer jumping
+    * (label ← label's label): propagation alone needs O(diameter) rounds
+    * — catastrophic for the adversarial long-chain components a 100 TB
+    * dedup graph can contain — while the jump step halves pointer-chain
+    * depth every round, so convergence is O(log diameter) (a 10M-node
+    * chain resolves in ~25 rounds, not 10M). Every label value is itself
+    * a node id, so the jump is a plain self-equi-join; checkpoint
+    * discipline as described on [[dedupClusters]]. The loop runs only
+    * over edge-involved nodes — per-round work scales with the duplicate
+    * subgraph, not the corpus — and isolated nodes rejoin afterwards
+    * with their own id as label. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col(pairs.columns(0)).as("src"), col(pairs.columns(1)).as("dst"))
       .union(pairs.select(col(pairs.columns(1)).as("src"), col(pairs.columns(0)).as("dst")))

@@ -254,8 +254,9 @@ object GraphOps {
 
   /** Safety cap for the convergence-driven BFS: far above any plausible
     * diameter of the small-world basket graph (the fixture converges in
-    * single digits); the oracle's recursion guard uses the same bound so
-    * the two sides agree even on a pathological path graph. */
+    * single digits); the oracle's recursion guard uses the same bound.
+    * A graph whose frontier still grows past it throws rather than
+    * answering a truncated distance table. */
   private val MaxBfsRounds = 50
 
   /** Convergence-driven BFS — the unbounded twin of [[graphBfsLevels]]:
@@ -306,6 +307,16 @@ object GraphOps {
       }
       distParts = distParts :+ frontier
     }
+    // At the cap the last frontier may still be non-empty. The table is
+    // complete only if none of its neighbours is unvisited: an
+    // eccentricity of exactly MaxBfsRounds answers (the oracle's
+    // `hop < 50` guard reaches it too), one hop more is a truncated
+    // table and fails loudly, like connectedComponents at its cap.
+    if (frontierRows > 0 &&
+        !e.join(frontier, e("src") === frontier("node")).select(e("dst").as("node"))
+          .join(dist, Seq("node"), "left_anti").isEmpty)
+      throw new IllegalStateException(
+        s"graphBfsConverged: frontier still growing after $MaxBfsRounds rounds")
     dist.orderBy(col("hop").asc, col("node").asc)
   }
 

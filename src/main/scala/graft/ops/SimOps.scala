@@ -74,16 +74,58 @@ object SimOps {
     * group), no global sort. */
   def annTopkBrute(spark: SparkSession, sfDir: String): DataFrame = {
     val v = withNorm(Tables.embeddings(spark, sfDir)).select("vec_id", "embedding", "nrm")
-    val q = v.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val scored = broadcast(q).join(v, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-    val w = Window.partitionBy("query_id")
+    annProbe(v.filter(col("vec_id") < 10), v, Nil, depth = 5)
+  }
+
+  /** One candidate cut of an ANN probe: rank each query's candidates by
+    * the `score` expression, named `name` (ascending for distances,
+    * descending for similarities; ties to the smaller neighbor id), and
+    * keep the best `keep`. */
+  private case class Cut(name: String, score: Column, ascending: Boolean, keep: Int)
+
+  /** The serving tail every ANN probe tier shares — scatter, score, cut,
+    * gather. The query rows (`vec_id`/`embedding`/`nrm`, plus whatever
+    * query-side columns the cut scores read) are renamed
+    * `query_id`/`qe`/`qn` and broadcast against `corpus`: on `cell`
+    * when the query side carries one — `cell` then rides into the
+    * output — and otherwise against every other vector. Each of `cuts`
+    * in turn keeps its best candidates per query; the survivors rerank
+    * by exact cosine to the top `depth`, ranked as a long `rnk`.
+    *
+    * Scale shape: the query side is ≤ |queries|·nprobe rows at any
+    * corpus size, so the broadcast keeps the probe a broadcast join over
+    * the corpus scan even with AQE out of the loop; every cut is a
+    * per-query window top-k (a bounded heap under the extensions, never
+    * a global sort), and full-precision floats are only dotted for the
+    * last cut's survivors. */
+  private def annProbe(queries: DataFrame, corpus: DataFrame,
+      cuts: Seq[Cut], depth: Int): DataFrame = {
+    val q = queries.withColumnsRenamed(
+      Map("vec_id" -> "query_id", "embedding" -> "qe", "nrm" -> "qn"))
+    val cell = if (q.columns.contains("cell")) Seq(col("cell")) else Nil
+    val pairs =
+      if (cell.nonEmpty) broadcast(q).join(corpus, Seq("cell"))
+        .filter(col("vec_id") =!= col("query_id"))
+      else broadcast(q).join(corpus, col("vec_id") =!= col("query_id"))
+    val scored = pairs.select(
+      Seq(col("query_id"), col("vec_id").as("neighbor_id")) ++ cell ++
+        Seq(col("qe"), col("qn"), col("embedding"), col("nrm")) ++
+        cuts.map(c => c.score.as(c.name)): _*)
+    val survivors = cuts.zipWithIndex.foldLeft(scored) { case (df, (c, i)) =>
+      val w = Window.partitionBy("query_id").orderBy(
+        if (c.ascending) col(c.name).asc else col(c.name).desc, col("neighbor_id").asc)
+      // the uncast rank under `<=` is the shape TopKRewriteRule turns
+      // into a per-query heap
+      df.withColumn(s"crnk$i", row_number().over(w)).filter(col(s"crnk$i") <= c.keep)
+    }
+    val wTop = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
+    survivors
+      .select(Seq(col("query_id"), col("neighbor_id")) ++ cell :+
+        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"): _*)
+      .withColumn("rnk", row_number().over(wTop).cast("long"))
+      .filter(col("rnk") <= depth)
+      .select(Seq(col("query_id"), col("rnk"), col("neighbor_id")) ++ cell :+ col("cos"): _*)
       .orderBy("query_id", "rnk")
   }
 
@@ -180,10 +222,17 @@ object SimOps {
       .blockedSelfJoinPairs(bucketed, Seq("bucket"), "vec_id", Seq("embedding", "nrm"))
       .withColumn("cos",
         dot(col("a_embedding"), col("b_embedding")) / sqrt(col("a_nrm") * col("b_nrm")))
-    val pairs = und
+    lshNearest(bucketed, und
       .select(col("a_vec_id").as("vec_id"), col("b_vec_id").as("neighbor_id"), col("cos"))
       .union(und
-        .select(col("b_vec_id").as("vec_id"), col("a_vec_id").as("neighbor_id"), col("cos")))
+        .select(col("b_vec_id").as("vec_id"), col("a_vec_id").as("neighbor_id"), col("cos"))))
+  }
+
+  /** The LSH tiers' shared tail: each vector's best-cosine candidate in
+    * `pairs` (vec_id, neighbor_id, cos; ties to the smaller id), joined
+    * back onto every bucketed vector so one without a candidate reports
+    * neighbor -1 at cos -2. */
+  private def lshNearest(bucketed: DataFrame, pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     val best = pairs.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") === 1)
@@ -224,20 +273,10 @@ object SimOps {
         .as("pbucket"))
     val cand = bucketed.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ce"), col("nrm").as("cn"), col("bucket").as("pbucket"))
-    val scored = probes.join(cand,
+    lshNearest(bucketed, probes.join(cand,
         Seq("pbucket")).filter(col("neighbor_id") =!= col("vec_id"))
       .select(col("vec_id"), col("neighbor_id"),
-        (dot(col("embedding"), col("ce")) / sqrt(col("nrm") * col("cn"))).as("cos"))
-    val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    val best = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
-      .select(col("vec_id"), col("neighbor_id"), col("cos"))
-    bucketed.select(col("vec_id"), col("bucket").as("b0"))
-      .join(best, Seq("vec_id"), "left_outer")
-      .select(col("vec_id"), col("b0").as("bucket"),
-        coalesce(col("neighbor_id"), lit(-1L)).as("neighbor_id"),
-        coalesce(col("cos"), lit(-2.0)).as("cos"))
-      .orderBy("vec_id")
+        (dot(col("embedding"), col("ce")) / sqrt(col("nrm") * col("cn"))).as("cos")))
   }
 
   /** Embedding-space dedup DECISIONS — the embedding twin of
@@ -394,17 +433,33 @@ object SimOps {
   /** [[ivfAssign]] keeping the winning centroid similarity (`ccos`) —
     * the extra column [[dedupSemantic]]'s keep policy ranks on; the
     * index tiers drop it so the at-rest layout stays 4 columns. */
-  private[graft] def ivfAssignScored(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val wAssign = Window.partitionBy("vec_id")
+  private[graft] def ivfAssignScored(vecs: DataFrame, cents: DataFrame): DataFrame =
+    ivfCellRanks(vecs, cents)
+      .filter(col("crnk") === 1)
+      .select(col("vec_id"), col("embedding"), col("nrm"),
+        col("cent_id").as("cell"), col("ccos"))
+
+  /** Every vector of `vecs` against every centroid of the broadcast
+    * `cents`: cosine `ccos` and its per-vector rank `crnk` (ties to the
+    * smaller cent_id) — the one window the assign cuts at crnk = 1 and
+    * the nprobe query side at crnk ≤ nprobe ([[ivfTopCells]]). */
+  private def ivfCellRanks(vecs: DataFrame, cents: DataFrame): DataFrame = {
+    val w = Window.partitionBy("vec_id")
       .orderBy(col("ccos").desc, col("cent_id").asc)
     vecs.join(broadcast(cents))
       .withColumn("ccos",
         dot(col("embedding"), col("ce")) / sqrt(col("nrm") * col("cn")))
-      .withColumn("crnk", row_number().over(wAssign))
-      .filter(col("crnk") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cent_id").as("cell"), col("ccos"))
+      .withColumn("crnk", row_number().over(w))
   }
+
+  /** The nprobe tiers' query side: each query vector (vec_id < 10 of
+    * `v`) once per probed cell — its `nprobe` nearest centroids — with
+    * that centroid's vector `ce` (the origin of a per-cell residual). */
+  private def ivfTopCells(v: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    ivfCellRanks(v.filter(col("vec_id") < 10), cents)
+      .filter(col("crnk") <= nprobe)
+      .select(col("vec_id"), col("embedding"), col("nrm"),
+        col("cent_id").as("cell"), col("ce"))
 
   /** TWO-LEVEL (indexed) centroid assign — [[ivfAssignScored]] with the
     * flat argmin over all k centroids replaced by the IVF construction
@@ -561,24 +616,9 @@ object SimOps {
     * the indexed vectors with vec_id < 10, candidates their own cell,
     * exact rerank to top-3 — identical no matter whether the index was
     * just built, read back from parquet, or maintained by a stream. */
-  private[graft] def ivfProbeCells(assigned: DataFrame): DataFrame = {
-    val queries_ = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cell"))
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    // the query side is ≤ |queries| rows at any corpus size — broadcast
-    // it explicitly so the cell probe is a BroadcastHashJoin over the
-    // index scan even with AQE out of the loop (the annIvfNprobe idiom)
-    broadcast(queries_).join(assigned, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
-  }
+  private[graft] def ivfProbeCells(assigned: DataFrame): DataFrame =
+    annProbe(assigned.filter(col("vec_id") < 10)
+      .select("vec_id", "embedding", "nrm", "cell"), assigned, Nil, depth = 3)
 
   /** Multi-cell IVF probe — the `nprobe > 1` form every production IVF
     * deployment actually runs (the FAISS `nprobe` recall/latency knob):
@@ -599,32 +639,10 @@ object SimOps {
     * hash-oracled: the query-side top-nprobe cell cut is the same
     * windowed argmax the assign uses, at crnk ≤ nprobe. */
   def annIvfNprobe(spark: SparkSession, sfDir: String): DataFrame = {
-    val nprobe = graft.GraftConf.annNprobe(spark)
     val v = withNorm(Tables.embeddings(spark, sfDir))
     val cents = ivfCentroids(spark, v)
-    val assigned = ivfAssign(v, cents)
-    val wProbe = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val qcells = v.filter(col("vec_id") < 10).join(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("ce")) / sqrt(col("nrm") * col("cn")))
-      .withColumn("crnk", row_number().over(wProbe))
-      .filter(col("crnk") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cent_id").as("cell"))
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    // the query side is ≤ |queries|·nprobe rows — broadcast it so the
-    // cell probe is a BroadcastHashJoin over the corpus scan, never a
-    // sort-merge of the index table
-    broadcast(qcells).join(assigned, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
+    annProbe(ivfTopCells(v, cents, graft.GraftConf.annNprobe(spark)),
+      ivfAssign(v, cents), Nil, depth = 3)
   }
 
   /** ANN index-quality EVALUATION as a distributed operator — per-query
@@ -943,12 +961,7 @@ object SimOps {
       ivfAssign(v, ivfCentroids(spark, v))
         .write.mode("overwrite").partitionBy("cell").parquet(d)
     }
-    // partition-column type inference reads `cell` back as INT; restore
-    // the index schema so the persisted probe is bit-identical to
-    // ann_ivf_probe at the SCHEMA level too (review finding, repro'd on
-    // Spark 4.1.2)
-    ivfProbeCells(spark.read.parquet(dir)
-      .withColumn("cell", col("cell").cast("long")))
+    ivfProbeCells(readCellIndex(spark, dir))
   }
 
   // --- IVF with a fitted (k-means) quantizer -------------------------------
@@ -974,41 +987,56 @@ object SimOps {
         transform(col("embedding"), _.cast("double")).as("ce"))
     (1 to iters).foldLeft(init) { (cents, _) =>
       val cn = cents.withColumn("cn", dot(col("ce"), col("ce")))
-      val assigned = v.join(broadcast(cn))
-        .withColumn("dist2",
-          col("nrm") + col("cn") - lit(2.0) * dot(col("embedding"), col("ce")))
-        .groupBy("vec_id")
-        .agg(min(struct(col("dist2"), col("cent_id"))).as("m"),
-          // per-vec_id the embedding is constant; min() is just the
-          // deterministic (merge-order-free) way to carry it through
-          min(col("embedding")).as("e"))
-        .select(col("m.cent_id").as("cell"), col("e"))
-      val next = assigned
-        .select(col("cell"), posexplode(col("e")))
-        .groupBy(col("cell"), col("pos"))
-        // TIE-FREE exact mean: values quantize to the 2⁻²⁰ binary grid by
-        // floor (the idf-grid doctrine), sum as exact BIGINTs, then two
-        // IEEE divisions. The earlier DECIMAL(28,12) cast was latently
-        // engine-divergent: a dyadic double CAN land exactly on the
-        // 1e-12 half boundary, where Spark rounds HALF_UP and DuckDB
-        // HALF_EVEN — observed on pq_train (member 0.1983642578125),
-        // never here only by luck of the member sets. floor has no tie,
-        // and x·2²⁰ is an exact exponent shift on float-derived doubles.
-        .agg(((sum(floor(col("col").cast(DoubleType) * lit(1048576.0)))
-            .cast(DoubleType) / lit(1048576.0)) / count(lit(1)))
-          .as("mean"))
-        .groupBy(col("cell").as("cent_id"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mean")))).as("pm"))
-        .select(col("cent_id"), transform(col("pm"), _.getField("mean")).as("ce"))
-      // materialize each generation (a few-thousand-row table at any
-      // corpus size): without this the lazy lineage makes iteration i
-      // re-execute iterations 1..i-1 — exponential replays — and the
-      // serving probe would recompute the whole fit once per reference
-      next.persist()
-      next.count()
-      cents.unpersist() // previous generation no longer referenced (no-op on init)
-      next
+      lloydGeneration(v.join(broadcast(cn))
+          .withColumn("dist2",
+            col("nrm") + col("cn") - lit(2.0) * dot(col("embedding"), col("ce"))),
+        Seq("vec_id"), Seq("cent_id"), "embedding", cents)
     }
+  }
+
+  /** One Lloyd generation, shared by [[kmeansFit]] and [[pqFit]].
+    * `scored` pairs every point (keyed by `pointKeys`) with every
+    * candidate centroid (keyed by `centKeys`, the centroid id last) at
+    * squared distance `dist2`, and carries the point's vector `vec`.
+    * Each point goes to its argmin centroid — `min(struct(dist2, id))`,
+    * a map-side-combinable aggregate with ties to the smaller id — and
+    * each centroid becomes the per-dimension mean of its members,
+    * re-assembled into an array by position sort. The new generation is
+    * materialized and `prev` unpersisted. */
+  private def lloydGeneration(scored: DataFrame, pointKeys: Seq[String],
+      centKeys: Seq[String], vec: String, prev: DataFrame): DataFrame = {
+    val id = centKeys.last
+    val keys = centKeys.map(col)
+    val next = scored.groupBy(pointKeys.map(col): _*)
+      .agg(min(struct(col("dist2"), col(id))).as("best"),
+        // per point the vector is constant; min() is just the
+        // deterministic (merge-order-free) way to carry it through
+        min(col(vec)).as("pt"))
+      .select(centKeys.init.map(col) :+ col(s"best.$id").as(id) :+ col("pt"): _*)
+      .select(keys :+ posexplode(col("pt")): _*)
+      .groupBy(keys :+ col("pos"): _*)
+      // TIE-FREE exact mean: values quantize to the 2⁻²⁰ binary grid by
+      // floor (the idf-grid doctrine), sum as exact BIGINTs, then two
+      // IEEE divisions. The earlier DECIMAL(28,12) cast was latently
+      // engine-divergent: a dyadic double CAN land exactly on the
+      // 1e-12 half boundary, where Spark rounds HALF_UP and DuckDB
+      // HALF_EVEN — observed on pq_train (member 0.1983642578125).
+      // floor has no tie, and x·2²⁰ is an exact exponent shift on
+      // float-derived doubles.
+      .agg(((sum(floor(col("col").cast(DoubleType) * lit(1048576.0)))
+          .cast(DoubleType) / lit(1048576.0)) / count(lit(1)))
+        .as("mean"))
+      .groupBy(keys: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("mean")))).as("pm"))
+      .select(keys :+ transform(col("pm"), _.getField("mean")).as("ce"): _*)
+    // materialize each generation (centroid-count rows at any corpus
+    // size): without this the lazy lineage makes iteration i re-execute
+    // iterations 1..i-1 — exponential replays — and the serving probe
+    // would recompute the whole fit once per reference
+    next.persist()
+    next.count()
+    prev.unpersist() // previous generation no longer referenced (no-op on init)
+    next
   }
 
   /** IVF probe over the FITTED quantizer — identical serving dataflow to
@@ -1024,30 +1052,7 @@ object SimOps {
     val cents = kmeansFit(v, iters = 2)
       .select(col("cent_id"), col("ce"))
       .withColumn("cn", dot(col("ce"), col("ce")))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val assigned = v.join(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("ce")) / sqrt(col("nrm") * col("cn")))
-      .withColumn("crnk", row_number().over(wAssign))
-      .filter(col("crnk") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id").as("cell"))
-    val queries_ = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cell"))
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    // the query side is ≤ |queries| rows at any corpus size — broadcast
-    // it explicitly so the cell probe is a BroadcastHashJoin over the
-    // index scan even with AQE out of the loop (the annIvfNprobe idiom)
-    broadcast(queries_).join(assigned, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
+    ivfProbeCells(ivfAssign(v, cents))
   }
 
   /** kNN majority-vote classification: the held-out query vectors
@@ -1139,18 +1144,6 @@ object SimOps {
   private def pqKs(cb: Map[(Int, Int), Seq[Double]], m: Int): Seq[Int] =
     cb.keysIterator.filter(_._1 == m).map(_._2).toSeq.sorted
 
-  /** Product-quantization encoding: per subspace, the vector's nearest
-    * codebook centroid by squared L2 (argmin ties broken toward the
-    * smaller code — the coalesce-of-equality chain, identical in both
-    * engines); codes pack into one 12-bit integer. This is the memory
-    * side of IVF-PQ serving: a 64-float vector (256 bytes) becomes a
-    * 12-bit code plus one shared codebook, so the 100 TB corpus's
-    * re-rank index shuffles and stores ~170× less — the codebook is a
-    * literal constant here and a broadcast table in production, never a
-    * shuffle participant. Encoding is a pure narrow map (no shuffle at
-    * all until the final diagnostic sort); distances fold left-to-right
-    * per element, so every distance, argmin, and distortion is
-    * bit-identical to the DuckDB mirror. */
   /** Adds `code0..3` (per-subspace argmin code) and `dist0..3` (the
     * argmin's squared L2 — the distortion terms) to a frame carrying
     * `embedding`. Pure narrow map; shared by [[pqEncode]] and
@@ -1207,28 +1200,9 @@ object SimOps {
     val init = subs.filter(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").cast("int").as("k"), col("sub").as("ce"))
     (1 to iters).foldLeft(init) { (cb, _) =>
-      val assigned = subs.join(broadcast(cb), "m")
-        .withColumn("dist2", l2Fold(col("sub"), col("ce")))
-        .groupBy("vec_id", "m")
-        .agg(min(struct(col("dist2"), col("k"))).as("mk"),
-          // per (vec_id, m) the subvector is constant; min() carries it
-          // merge-order-free, the kmeansFit idiom
-          min(col("sub")).as("s"))
-        .select(col("m"), col("mk.k").as("k"), col("s"))
-      val next = assigned
-        .select(col("m"), col("k"), posexplode(col("s")))
-        .groupBy(col("m"), col("k"), col("pos"))
-        // the kmeansFit tie-free floor-grid mean (see its comment: the
-        // half-tie this replaced was FOUND on this very fit)
-        .agg(((sum(floor(col("col") * lit(1048576.0))).cast(DoubleType) /
-          lit(1048576.0)) / count(lit(1))).as("mean"))
-        .groupBy(col("m"), col("k"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mean")))).as("pm"))
-        .select(col("m"), col("k"), transform(col("pm"), _.getField("mean")).as("ce"))
-      next.persist()
-      next.count()
-      cb.unpersist()
-      next
+      lloydGeneration(subs.join(broadcast(cb), "m")
+          .withColumn("dist2", l2Fold(col("sub"), col("ce"))),
+        Seq("vec_id", "m"), Seq("m", "k"), "sub", cb)
     }
   }
 
@@ -1327,37 +1301,21 @@ object SimOps {
     * the oracle refits the codebook in CTEs and replays codes, ADC
     * table and rerank; codes are cluster IDs so a dropped empty cluster
     * changes nothing on either side. */
-  def annPqAdcFitted(spark: SparkSession, sfDir: String): DataFrame = {
-    val v = withNorm(Tables.embeddings(spark, sfDir))
-      .select("vec_id", "embedding", "nrm")
-    val cb = pqFitCodebookCached(spark, sfDir, "raw")
-    val corpus = pqCoded(v, col("embedding"), cb)
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("code0"), col("code1"), col("code2"), col("code3"))
-    val q = pqAdcTable(v.filter(col("vec_id") < 10), col("embedding"), cb)
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("embedding", "qe")
-      .withColumnRenamed("nrm", "qn")
-    val scored = broadcast(q).join(corpus, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"),
-        pqAdcPick(cb).as("adc"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 20)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
-  }
+  def annPqAdcFitted(spark: SparkSession, sfDir: String): DataFrame =
+    pqAdcProbe(spark, sfDir, pqFitCodebookCached(spark, sfDir, "raw"))
 
+  /** Product-quantization encoding: per subspace, the vector's nearest
+    * codebook centroid by squared L2 (argmin ties broken toward the
+    * smaller code — the coalesce-of-equality chain, identical in both
+    * engines); codes pack into one 12-bit integer. This is the memory
+    * side of IVF-PQ serving: a 64-float vector (256 bytes) becomes a
+    * 12-bit code plus one shared codebook, so the 100 TB corpus's
+    * re-rank index shuffles and stores ~170× less — the codebook is a
+    * literal constant here and a broadcast table in production, never a
+    * shuffle participant. Encoding is a pure narrow map (no shuffle at
+    * all until the final diagnostic sort); distances fold left-to-right
+    * per element, so every distance, argmin, and distortion is
+    * bit-identical to the DuckDB mirror. */
   def pqEncode(spark: SparkSession, sfDir: String): DataFrame = {
     val base = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val coded = pqCoded(base)
@@ -1369,23 +1327,6 @@ object SimOps {
       .orderBy("vec_id")
   }
 
-  /** PQ asymmetric-distance (ADC) search — the probe that makes
-    * [[pqEncode]]'s codes an index rather than a compression curiosity
-    * (Jégou, Douze & Schmid 2011, §IV: keep the query full-precision,
-    * score corpus vectors through their codes). Per query the M×K=32
-    * subspace distances ‖q_sub − c_{m,k}‖² are computed ONCE (the "ADC
-    * distance table", broadcast-sized: 32 doubles per query); a corpus
-    * vector's approximate distance is then M table LOOKUPS selected by
-    * its stored codes — no arithmetic against the original floats, so
-    * at 100 TB the scan touches 12-bit codes (~170× less bandwidth than
-    * float32) plus one tiny broadcast, and the only full-precision
-    * reads are the ≤20 rerank candidates per query. Probe shape = the
-    * [[annSq8]] / [[annBinarySign]] doctrine: ADC-score all candidates,
-    * top-20 cut (adc asc, ties by id), exact-cosine rerank to top-5 —
-    * the exact rerank keeps the output fully hash-oracled. The oracle
-    * replays codes and table entries from the ONE shared distance
-    * definition ([[sqlPqDist]]), so engine and oracle cannot diverge on
-    * the codebook. */
   /** Adds the query-side ADC distance table: all M×K subspace distances
     * as columns `t{m}_{k}`. Narrow map over the (tiny) query set. */
   private def pqAdcTable(df: DataFrame, vec: Column = col("embedding"),
@@ -1433,37 +1374,47 @@ object SimOps {
       zip_with(slice(vec, 1 + m * PqSub, PqSub), recon, (x, y) => x - y)
     }: _*)
 
-  def annPqAdc(spark: SparkSession, sfDir: String): DataFrame = {
+  /** PQ asymmetric-distance (ADC) search — the probe that makes
+    * [[pqEncode]]'s codes an index rather than a compression curiosity
+    * (Jégou, Douze & Schmid 2011, §IV: keep the query full-precision,
+    * score corpus vectors through their codes). Per query the M×K=32
+    * subspace distances ‖q_sub − c_{m,k}‖² are computed ONCE (the "ADC
+    * distance table", broadcast-sized: 32 doubles per query); a corpus
+    * vector's approximate distance is then M table LOOKUPS selected by
+    * its stored codes — no arithmetic against the original floats, so
+    * at 100 TB the scan touches 12-bit codes (~170× less bandwidth than
+    * float32) plus one tiny broadcast, and the only full-precision
+    * reads are the ≤20 rerank candidates per query. Probe shape = the
+    * [[annSq8]] / [[annBinarySign]] doctrine: ADC-score all candidates,
+    * top-20 cut (adc asc, ties by id), exact-cosine rerank to top-5 —
+    * the exact rerank keeps the output fully hash-oracled. The oracle
+    * replays codes and table entries from the ONE shared distance
+    * definition ([[sqlPqDist]]), so engine and oracle cannot diverge on
+    * the codebook. */
+  def annPqAdc(spark: SparkSession, sfDir: String): DataFrame =
+    pqAdcProbe(spark, sfDir, pqCbFixed)
+
+  /** The ADC probe over codebook `cb`, shared by the fixed and fitted
+    * tiers: the corpus side keeps only its 12-bit codes (the dist
+    * columns drop — the probe never reads corpus floats before the
+    * rerank), the query side is the ADC table, and the probe cuts the
+    * top 20 by ADC before the exact rerank to top 5. */
+  private def pqAdcProbe(spark: SparkSession, sfDir: String,
+      cb: Map[(Int, Int), Seq[Double]]): DataFrame = {
     val v = withNorm(Tables.embeddings(spark, sfDir))
       .select("vec_id", "embedding", "nrm")
-    // corpus side: 12-bit codes only (dist columns dropped — the probe
-    // never sees corpus floats until the rerank join)
-    val corpus = pqCoded(v)
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("code0"), col("code1"), col("code2"), col("code3"))
-    // query side: the ADC table — all M×K subspace distances as columns
-    val q = pqAdcTable(v.filter(col("vec_id") < 10))
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("embedding", "qe")
-      .withColumnRenamed("nrm", "qn")
-    val scored = broadcast(q).join(corpus, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"), pqAdcPick().as("adc"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 20)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
+    annProbe(pqAdcTable(v.filter(col("vec_id") < 10), col("embedding"), cb),
+      codeIndex(pqCoded(v, col("embedding"), cb)),
+      Seq(Cut("adc", pqAdcPick(cb), ascending = true, 20)), depth = 5)
   }
+
+  /** A coded frame cut to the codes index: ids, the exact payload the
+    * rerank reads, `cell` when the frame has one, and the `code0..3`
+    * columns of each of `prefixes`. */
+  private def codeIndex(coded: DataFrame, prefixes: Seq[String] = Seq("code")): DataFrame =
+    coded.select((Seq("vec_id", "embedding", "nrm") ++
+      Seq("cell").filter(coded.columns.contains) ++
+      prefixes.flatMap(p => (0 until PqM).map(m => s"$p$m"))).map(col): _*)
 
   /** IVF-PQ — the two tiers composed the way production serving stacks
     * compose them (Jégou-Douze-Schmid 2011 §V, the FAISS `IVFx,PQy`
@@ -1485,35 +1436,28 @@ object SimOps {
     * the output carries `cell` like its siblings. */
   def annIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
     val v = withNorm(Tables.embeddings(spark, sfDir))
-    val assigned = ivfAssign(v, ivfCentroids(spark, v))
     // at-rest side: cell + 12-bit codes (floats retained only for the
     // rerank join — production reads them from the exact-payload tier)
-    val corpus = pqCoded(assigned)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-        col("code0"), col("code1"), col("code2"), col("code3"))
-    val q = pqAdcTable(assigned.filter(col("vec_id") < 10))
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("embedding", "qe")
-      .withColumnRenamed("nrm", "qn")
-    val scored = broadcast(q).join(corpus, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"), pqAdcPick().as("adc"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 10)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
+    ivfPqProbeCodes(codeIndex(pqCoded(ivfAssign(v, ivfCentroids(spark, v)))))
   }
+
+  /** The IVF-residual view shared by the residual tiers: corpus assigned
+    * to cells with `res = embedding − cell centroid` as DOUBLES (each
+    * float widens exactly; a float-typed difference would round where
+    * the oracle's double-list difference does not). One definition so
+    * the fixed-book probe, the fitted-book probe and the residual
+    * `pq_train` input cannot diverge on what a residual is. */
+  private def ivfResiduals(spark: SparkSession, sfDir: String): DataFrame = {
+    val v = withNorm(Tables.embeddings(spark, sfDir))
+    val cents = ivfCentroids(spark, v)
+    ivfAssign(v, cents)
+      .join(broadcast(cents.select(col("cent_id").as("cell"), col("ce"))), "cell")
+      .withColumn("res", residual(col("embedding"), col("ce")))
+  }
+
+  /** `vec − origin` as DOUBLES, element by element. */
+  private def residual(vec: Column, origin: Column): Column =
+    zip_with(vec, origin, (x, y) => x.cast("double") - y.cast("double"))
 
   /** Residual IVF-PQ — [[annIvfPq]] with codes quantizing the RESIDUAL
     * `embedding − cell centroid` instead of the raw vector: the FAISS
@@ -1539,49 +1483,19 @@ object SimOps {
     * composition cannot drift from its parts. Same depths and at-rest
     * story as [[annIvfPq]]: cell-partitioned 12-bit codes, floats only
     * for the ≤10 rerank rows. */
-  /** The IVF-residual view shared by the residual tiers: corpus assigned
-    * to cells with `res = embedding − cell centroid` as DOUBLES (each
-    * float widens exactly; a float-typed difference would round where
-    * the oracle's double-list difference does not). One definition so
-    * the fixed-book probe, the fitted-book probe and the residual
-    * `pq_train` input cannot diverge on what a residual is. */
-  private def ivfResiduals(spark: SparkSession, sfDir: String): DataFrame = {
-    val v = withNorm(Tables.embeddings(spark, sfDir))
-    val cents = ivfCentroids(spark, v)
-    ivfAssign(v, cents)
-      .join(broadcast(cents.select(col("cent_id").as("cell"), col("ce"))), "cell")
-      .withColumn("res", zip_with(col("embedding"), col("ce"),
-        (x, y) => x.cast("double") - y.cast("double")))
-  }
+  def annIvfPqResidual(spark: SparkSession, sfDir: String): DataFrame =
+    ivfPqResidualProbe(spark, sfDir, pqCbFixed)
 
-  def annIvfPqResidual(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The single-cell residual probe over codebook `cb`, shared by the
+    * fixed and fitted residual tiers: corpus codes and the query's ADC
+    * table both come from residuals against the one cell they share,
+    * ADC top-10 inside the cell, exact rerank to top 3. */
+  private def ivfPqResidualProbe(spark: SparkSession, sfDir: String,
+      cb: Map[(Int, Int), Seq[Double]]): DataFrame = {
     val withRes = ivfResiduals(spark, sfDir)
-    val corpus = pqCoded(withRes, col("res"))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-        col("code0"), col("code1"), col("code2"), col("code3"))
-    val q = pqAdcTable(withRes.filter(col("vec_id") < 10), col("res"))
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("embedding", "qe")
-      .withColumnRenamed("nrm", "qn")
-      .drop("ce", "res")
-    val scored = broadcast(q).join(corpus, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"), pqAdcPick().as("adc"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 10)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
+    annProbe(pqAdcTable(withRes.filter(col("vec_id") < 10), col("res"), cb),
+      codeIndex(pqCoded(withRes, col("res"), cb)),
+      Seq(Cut("adc", pqAdcPick(cb), ascending = true, 10)), depth = 3)
   }
 
   /** FITTED-residual IVF-PQ — [[annIvfPqResidual]] with the codebook
@@ -1608,36 +1522,8 @@ object SimOps {
     * corpus and query tables from ONE `dist` relation (the
     * `ann_pq_adc_fitted` doctrine) with the cell constraint fused into
     * the pair join. */
-  def annIvfPqFitted(spark: SparkSession, sfDir: String): DataFrame = {
-    val withRes = ivfResiduals(spark, sfDir)
-    val cb = pqFitCodebookCached(spark, sfDir, "residual")
-    val corpus = pqCoded(withRes, col("res"), cb)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-        col("code0"), col("code1"), col("code2"), col("code3"))
-    val q = pqAdcTable(withRes.filter(col("vec_id") < 10), col("res"), cb)
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("embedding", "qe")
-      .withColumnRenamed("nrm", "qn")
-      .drop("ce", "res")
-    val scored = broadcast(q).join(corpus, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"), pqAdcPick(cb).as("adc"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 10)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
-  }
+  def annIvfPqFitted(spark: SparkSession, sfDir: String): DataFrame =
+    ivfPqResidualProbe(spark, sfDir, pqFitCodebookCached(spark, sfDir, "residual"))
 
   /** REFINED IVF-PQ — the re-ranking rung of the family (Jégou,
     * Tavenard, Douze, Amsaleg 2011, "Searching in one billion vectors:
@@ -1671,46 +1557,16 @@ object SimOps {
     val cb1 = pqFitCodebookCached(spark, sfDir, "residual")
     val cb2 = pqFitCodebookCached(spark, sfDir, "refine")
     val l1 = pqCoded(withRes, col("res"), cb1)
-    val corpus = pqCoded(l1.withColumn("err", pqReconErr(col("res"), cb1)),
-        col("err"), cb2, prefix = "rcode")
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-        col("code0"), col("code1"), col("code2"), col("code3"),
-        col("rcode0"), col("rcode1"), col("rcode2"), col("rcode3"))
+    val corpus = codeIndex(pqCoded(l1.withColumn("err", pqReconErr(col("res"), cb1)),
+      col("err"), cb2, prefix = "rcode"), Seq("code", "rcode"))
     val q = pqAdcTable(
-        pqAdcTable(withRes.filter(col("vec_id") < 10), col("res"), cb1),
-        col("res"), cb2, prefix = "u")
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("embedding", "qe")
-      .withColumnRenamed("nrm", "qn")
-      .drop("ce", "res")
-    val scored = broadcast(q).join(corpus, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"),
-        col("code0"), col("code1"), col("code2"), col("code3"),
-        col("rcode0"), col("rcode1"), col("rcode2"), col("rcode3"),
-        pqAdcPick(cb1).as("adc"),
-        (pqAdcPick(cb1) + pqAdcPick(cb2, "rcode", "u") + pqCrossPick(cb1, cb2))
-          .as("refined"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val stage1 = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 160)
-    val wf = Window.partitionBy("query_id")
-      .orderBy(col("refined").asc, col("neighbor_id").asc)
-    val stage2 = stage1
-      .withColumn("frnk", row_number().over(wf))
-      .filter(col("frnk") <= 10)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    stage2
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
+      pqAdcTable(withRes.filter(col("vec_id") < 10), col("res"), cb1),
+      col("res"), cb2, prefix = "u")
+    annProbe(q, corpus, Seq(
+      Cut("adc", pqAdcPick(cb1), ascending = true, 160),
+      Cut("refined",
+        pqAdcPick(cb1) + pqAdcPick(cb2, "rcode", "u") + pqCrossPick(cb1, cb2),
+        ascending = true, 10)), depth = 3)
   }
 
   /** The refined tier's own recall gate. */
@@ -1763,32 +1619,12 @@ object SimOps {
   def annIvfPqNprobe(spark: SparkSession, sfDir: String): DataFrame = {
     val nprobe = graft.GraftConf.annNprobe(spark)
     val v = withNorm(Tables.embeddings(spark, sfDir))
-    val cents = ivfCentroids(spark, v)
     val cb = pqFitCodebookCached(spark, sfDir, "residual")
-    val corpus = pqCoded(ivfResiduals(spark, sfDir), col("res"), cb)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-        col("code0"), col("code1"), col("code2"), col("code3"))
     // query side: top-nprobe cells, each with the query's residual wrt
     // THAT cell's centroid (the multi-origin table), then the ADC table
     // from the per-cell residual — ≤ |queries|·nprobe broadcast rows
-    val wProbe = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val qres = v.filter(col("vec_id") < 10).join(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("ce")) / sqrt(col("nrm") * col("cn")))
-      .withColumn("crnk", row_number().over(wProbe))
-      .filter(col("crnk") <= nprobe)
-      .withColumn("qres", zip_with(col("embedding"), col("ce"),
-        (x, y) => x.cast("double") - y.cast("double")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cent_id").as("cell"), col("qres"))
-    val q = pqAdcTable(qres, col("qres"), cb).drop("qres")
-    val scored = broadcast(q).join(corpus, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"), pqAdcPick(cb).as("adc"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
+    val q = pqAdcTable(ivfTopCells(v, ivfCentroids(spark, v), nprobe)
+      .withColumn("qres", residual(col("embedding"), col("ce"))), col("qres"), cb)
     // candidate budget scales WITH the probe width (10 ADC survivors per
     // probed cell — the FAISS convention of deepening the rerank as
     // nprobe grows): a fixed cut would make extra cells pure noise
@@ -1796,18 +1632,8 @@ object SimOps {
     // ADC ordering is weak enough (ANN_TRADEOFF in_cell_x10 0.067) that
     // the exact rerank, not the ADC order, must do the final selection.
     // nprobe=1 keeps cut 10 — the exact ann_ivfpq_fitted degeneration.
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 10 * nprobe)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
+    annProbe(q, codeIndex(pqCoded(ivfResiduals(spark, sfDir), col("res"), cb)),
+      Seq(Cut("adc", pqAdcPick(cb), ascending = true, 10 * nprobe)), depth = 3)
   }
 
   /** The nprobe-composed tier's own recall gate — the production
@@ -1879,6 +1705,19 @@ object SimOps {
     s"n${r.getLong(0)}x${r.getLong(1)}"
   }
 
+  /** The at-rest codes index directory, built once per (quantizer conf,
+    * corpus fingerprint) — shared by the single-cell and nprobe probes
+    * so both read the SAME physical index. */
+  private def ivfPqIndexDir(spark: SparkSession, sfDir: String): String = {
+    val mod = graft.GraftConf.annCentroidMod(spark)
+    val fp = embCorpusFp(spark, sfDir)
+    FileOps.materializeOnce(spark, s"ivfpq_index_m${mod}_$fp", sfDir) { d =>
+      val v = withNorm(Tables.embeddings(spark, sfDir))
+      codeIndex(pqCoded(ivfAssign(v, ivfCentroids(spark, v))))
+        .write.mode("overwrite").partitionBy("cell").parquet(d)
+    }
+  }
+
   /** IVF-PQ index PERSISTENCE — the at-rest form of THE 100 TB index
     * shape the IVF-PQ scaladocs name: cell-partitioned parquet whose
     * payload is the 12-bit codes (plus the exact floats/norms standing
@@ -1892,28 +1731,15 @@ object SimOps {
     * [[annIvfPq]] (floats/norms/codes round-trip parquet exactly; the
     * query-side ADC table rebuilds from the stored raw vector), so the
     * SAME DuckDB oracle gates both and the spec pins bit-equality. */
-  /** The at-rest codes index directory, built once per (quantizer conf,
-    * corpus fingerprint) — shared by the single-cell and nprobe probes
-    * so both read the SAME physical index. */
-  private def ivfPqIndexDir(spark: SparkSession, sfDir: String): String = {
-    val mod = graft.GraftConf.annCentroidMod(spark)
-    val fp = embCorpusFp(spark, sfDir)
-    FileOps.materializeOnce(spark, s"ivfpq_index_m${mod}_$fp", sfDir) { d =>
-      val v = withNorm(Tables.embeddings(spark, sfDir))
-      pqCoded(ivfAssign(v, ivfCentroids(spark, v)))
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-          col("code0"), col("code1"), col("code2"), col("code3"))
-        .write.mode("overwrite").partitionBy("cell").parquet(d)
-    }
-  }
+  def annIvfPqPersist(spark: SparkSession, sfDir: String): DataFrame =
+    ivfPqProbeCodes(readCellIndex(spark, ivfPqIndexDir(spark, sfDir)))
 
-  def annIvfPqPersist(spark: SparkSession, sfDir: String): DataFrame = {
-    // partition-column inference reads `cell` back as INT — restore the
-    // index schema (the annIvfPersist review finding, same root cause)
-    val corpus = spark.read.parquet(ivfPqIndexDir(spark, sfDir))
-      .withColumn("cell", col("cell").cast("long"))
-    ivfPqProbeCodes(corpus)
-  }
+  /** A cell-partitioned index read back from `dir`. Partition-column
+    * type inference reads `cell` back as INT; the cast restores the
+    * index schema, so a persisted probe is bit-identical to its inline
+    * twin at the SCHEMA level too (repro'd on Spark 4.1.2). */
+  private def readCellIndex(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(dir).withColumn("cell", col("cell").cast("long"))
 
   /** nprobe probe of the AT-REST codes index — the two flagship
     * directions composed end-to-end: [[annIvfPqPersist]]'s
@@ -1935,38 +1761,10 @@ object SimOps {
     * top-nprobe cell cut. */
   def annIvfPqPersistNprobe(spark: SparkSession, sfDir: String): DataFrame = {
     val nprobe = graft.GraftConf.annNprobe(spark)
-    val corpus = spark.read.parquet(ivfPqIndexDir(spark, sfDir))
-      .withColumn("cell", col("cell").cast("long"))
+    val corpus = readCellIndex(spark, ivfPqIndexDir(spark, sfDir))
     val v = withNorm(Tables.embeddings(spark, sfDir))
-    val cents = ivfCentroids(spark, v)
-    val wProbe = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val qcells = v.filter(col("vec_id") < 10).join(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("ce")) / sqrt(col("nrm") * col("cn")))
-      .withColumn("crnk", row_number().over(wProbe))
-      .filter(col("crnk") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cent_id").as("cell"))
-    val q = pqAdcTable(qcells, col("qe"))
-    val scored = broadcast(q).join(corpus, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"), pqAdcPick().as("adc"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 10 * nprobe)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
+    annProbe(pqAdcTable(ivfTopCells(v, ivfCentroids(spark, v), nprobe)), corpus,
+      Seq(Cut("adc", pqAdcPick(), ascending = true, 10 * nprobe)), depth = 3)
   }
 
   /** Probe an IVF-PQ codes table (vec_id, embedding, nrm, cell,
@@ -1975,31 +1773,10 @@ object SimOps {
     * stream (the [[ivfProbeCells]] convention lifted to the PQ tier):
     * queries are the indexed vectors with vec_id < 10, in-cell ADC
     * top-10 cut, exact rerank to top-3. */
-  private[graft] def ivfPqProbeCodes(corpus: DataFrame): DataFrame = {
-    val q = pqAdcTable(corpus.select("vec_id", "embedding", "nrm", "cell")
-        .filter(col("vec_id") < 10))
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("embedding", "qe")
-      .withColumnRenamed("nrm", "qn")
-    val scored = broadcast(q).join(corpus, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"), pqAdcPick().as("adc"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 10)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
-      .orderBy("query_id", "rnk")
-  }
+  private[graft] def ivfPqProbeCodes(corpus: DataFrame): DataFrame =
+    annProbe(pqAdcTable(corpus.select("vec_id", "embedding", "nrm", "cell")
+        .filter(col("vec_id") < 10)), corpus,
+      Seq(Cut("adc", pqAdcPick(), ascending = true, 10)), depth = 3)
 
   /** SQ8 index PERSISTENCE — the at-rest form of the tier the tradeoff
     * table (ANN_TRADEOFF*.json) shows holding recall 1.0 at ~1.2× brute
@@ -2024,29 +1801,9 @@ object SimOps {
   /** Probe half of the SQ8 tier: int8-score all candidates, top-20 cut,
     * full-precision rerank, top-5 — over an index table from
     * [[sq8Table]] or its parquet round-trip. */
-  private def sq8Probe(v: DataFrame): DataFrame = {
-    val q = v.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("q8").as("qq8"))
-    val scored = broadcast(q).join(v, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"),
-        dot(col("qq8"), col("q8")).as("q8score"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("q8score").desc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 20)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
-  }
+  private def sq8Probe(v: DataFrame): DataFrame =
+    annProbe(v.filter(col("vec_id") < 10).withColumnRenamed("q8", "qq8"), v,
+      Seq(Cut("q8score", dot(col("qq8"), col("q8")), ascending = false, 20)), depth = 5)
 
   /** BINARY (sign) quantization ANN — the 1-bit-per-dimension rung below
     * [[annSq8]] on the precision/bandwidth ladder (the "binary embedding"
@@ -2077,27 +1834,9 @@ object SimOps {
     val v = withNorm(Tables.embeddings(spark, sfDir))
       .withColumn("bcode", signCode)
       .select("vec_id", "embedding", "nrm", "bcode")
-    val q = v.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("bcode").as("qb"))
-    val scored = broadcast(q).join(v, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("qe"), col("qn"), col("embedding"), col("nrm"),
-        bit_count(col("qb").bitwiseXOR(col("bcode"))).as("hd"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("hd").asc, col("neighbor_id").asc)
-    val candidates = scored
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= 20)
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
+    annProbe(v.filter(col("vec_id") < 10).withColumnRenamed("bcode", "qb"), v,
+      Seq(Cut("hd", bit_count(col("qb").bitwiseXOR(col("bcode"))), ascending = true, 20)),
+      depth = 5)
   }
 
   val queries: Map[String, Q] = Map(
@@ -2197,10 +1936,6 @@ object SimOps {
       m: Int, k: Int): String =
     s"list_sum(list_transform(list_zip(d[${1 + m * PqSub}:${(m + 1) * PqSub}], " +
       s"${sqlPqCentListOf(cb, m, k)}), z -> (z[1] - z[2]) * (z[1] - z[2])))"
-
-  // (a generalized sqlPqCodesCtesGen helper lived here through r17 —
-  // dead code, nothing referenced it: the refine oracle hand-writes its
-  // two code chains. Deleted per r17 advice.)
 
   /** Squared-L2 distance of subspace m against codebook entry k — the
     * same left-to-right element fold the Spark `aggregate` performs. */
@@ -2387,9 +2122,6 @@ object SimOps {
        |FROM ranked WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
   }
 
-  /** Shared by ann_ivf_probe AND ann_ivf_persist — the persisted-index
-    * probe is bit-identical to the direct probe by construction, so one
-    * oracle gates both. */
   /** Shared CTE prefix `v` → `n` → `cents` (every 32nd vector — the
     * registry-default quantizer) → `assigned` (cos-argmax cell, ties by
     * cent_id) — the SQL mirror of [[ivfCentroids]] + [[ivfAssign]],
@@ -2407,6 +2139,9 @@ object SimOps {
          |    FROM n CROSS JOIN cents c) t
          |  WHERE crnk = 1)""".stripMargin
 
+  /** Shared by ann_ivf_probe AND ann_ivf_persist — the persisted-index
+    * probe is bit-identical to the direct probe by construction, so one
+    * oracle gates both. */
   private lazy val sqlIvfProbe =
     s"""WITH $sqlIvfCtes,
          |q AS (SELECT vec_id AS query_id, d AS qd, nrm AS qn, cell

@@ -764,4 +764,78 @@ class EmbedAnnSpec extends SparkSpec {
     // the fixture must form real groups or the policy is untested
     assert(got.exists(_._4 >= 2), "no non-singleton semantic group in fixture")
   }
+
+  test("probe contract: every tier on the shared ANN tail ranks exact cosines within its probed cells") {
+    val vecs: Map[Long, Array[Double]] = Tables.embeddings(spark, sf)
+      .select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
+    def dotLR(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }; s
+    }
+    def cosOf(a: Array[Double], b: Array[Double]): Double =
+      dotLR(a, b) / math.sqrt(dotLR(a, a) * dotLR(b, b))
+    // cells by cosine to each centroid, ties to the smaller id
+    def ranked(cents: Map[Long, Array[Double]], v: Long): Seq[Long] =
+      cents.toSeq.sortBy { case (id, c) => (-cosOf(vecs(v), c), id) }.map(_._1)
+    val fixed = vecs.filter(_._1 % GraftConf.annCentroidMod(spark) == 0)
+    // the fitted quantizer replayed: two Lloyd rounds of squared-distance
+    // argmin and the 2^-20 floor-grid mean
+    val fitted = (1 to 2).foldLeft(fixed) { (cents, _) =>
+      vecs.toSeq.groupBy { case (_, e) =>
+        cents.toSeq.minBy { case (id, c) =>
+          ((dotLR(e, e) + dotLR(c, c)) - 2.0 * dotLR(e, c), id)
+        }._1
+      }.map { case (id, members) =>
+        id -> Array.tabulate(members.head._2.length) { d =>
+          members.map(m => math.floor(m._2(d) * 1048576.0).toLong).sum.toDouble /
+            1048576.0 / members.size
+        }
+      }
+    }
+    val nprobe = GraftConf.annNprobe(spark)
+    val fixedCell = vecs.keys.map(v => v -> ranked(fixed, v).head).toMap
+    val fittedCell = vecs.keys.map(v => v -> ranked(fitted, v).head).toMap
+    val single = (fixedCell, (q: Long) => Set(fixedCell(q)))
+    val multi = (fixedCell, (q: Long) => ranked(fixed, q).take(nprobe).toSet)
+    // (tier, depth, Some((vector -> cell, query -> probed cells)) for the
+    // cell-probing tiers)
+    val tiers: Seq[(String, Int, Option[(Map[Long, Long], Long => Set[Long])])] = Seq(
+      ("ann_topk_brute", 5, None), ("ann_sq8", 5, None), ("ann_sq8_persist", 5, None),
+      ("ann_binary_sign", 5, None), ("ann_pq_adc", 5, None), ("ann_pq_adc_fitted", 5, None),
+      ("ann_ivf_probe", 3, Some(single)), ("ann_ivf_persist", 3, Some(single)),
+      ("ann_ivf_nprobe", 3, Some(multi)),
+      ("ann_ivf_kmeans", 3, Some((fittedCell, (q: Long) => Set(fittedCell(q))))),
+      ("ann_ivfpq", 3, Some(single)), ("ann_ivfpq_persist", 3, Some(single)),
+      ("ann_ivfpq_residual", 3, Some(single)), ("ann_ivfpq_fitted", 3, Some(single)),
+      ("ann_ivfpq_refine", 3, Some(single)), ("ann_ivfpq_nprobe", 3, Some(multi)),
+      ("ann_ivfpq_persist_nprobe", 3, Some(multi)))
+    for ((name, depth, cells) <- tiers) {
+      val df = q(name)
+      assert(df.columns.contains("cell") === cells.isDefined, s"$name: cell column")
+      val rows = df.collect()
+      assert(rows.nonEmpty, s"$name returned nothing")
+      for ((qid, qrows) <- rows.groupBy(_.getAs[Long]("query_id"))) {
+        val ranks = qrows.map(_.getAs[Long]("rnk")).sorted.toSeq
+        assert(ranks === (1L to qrows.length.toLong) && ranks.size <= depth,
+          s"$name query $qid: ranks $ranks at depth $depth")
+        val ordered = qrows.sortBy(_.getAs[Long]("rnk"))
+          .map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos")))
+        ordered.sliding(2).filter(_.length == 2).foreach { case Array((n1, c1), (n2, c2)) =>
+          assert(c1 > c2 || (c1 == c2 && n1 < n2), s"$name query $qid: $n1 before $n2")
+        }
+        ordered.foreach { case (nb, c) =>
+          assert(nb !== qid, s"$name query $qid is its own neighbor")
+          assert(c === cosOf(vecs(qid), vecs(nb)), s"$name ($qid, $nb): cos $c not exact")
+        }
+        cells.foreach { case (cellOf, probed) =>
+          qrows.foreach { r =>
+            val (nb, cell) = (r.getAs[Long]("neighbor_id"), r.getAs[Long]("cell"))
+            assert(probed(qid)(cell) && cellOf(nb) === cell,
+              s"$name ($qid, $nb): cell $cell, probed ${probed(qid)}, neighbor in ${cellOf(nb)}")
+          }
+        }
+      }
+    }
+  }
 }

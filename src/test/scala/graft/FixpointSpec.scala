@@ -60,4 +60,33 @@ class FixpointSpec extends SparkSpec {
     assert(v === 0L && !fellBack,
       "empty round must observe 0 (the CC/BFS loops terminate on it)")
   }
+
+  /** A path graph as a two-column `lineitem.parquet` in a fresh sf dir:
+    * part i links to suppliers i-1 and i (those below `suppliers`), so
+    * BFS from part 0 reaches part i at hop 2i and supplier i at 2i+1. */
+  private def withPathGraph[T](parts: Int, suppliers: Int)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bfs_path").toFile
+    try {
+      val rows = for (i <- 0 until parts; s <- Seq(i - 1, i) if s >= 0 && s < suppliers)
+        yield (i.toLong, s.toLong)
+      spark.createDataFrame(rows).toDF("l_partkey", "l_suppkey")
+        .coalesce(1).write.parquet(s"${dir.getPath}/lineitem.parquet")
+      body(dir.getPath)
+    } finally new scala.reflect.io.Directory(dir).deleteRecursively()
+  }
+
+  test("graph_bfs_converged answers at eccentricity 50 and throws one hop past its cap") {
+    // 26 parts, 25 suppliers: part 25 is the farthest node, at hop 50
+    val at50 = withPathGraph(26, 25) { dir =>
+      ops.GraphOps.graphBfsConverged(spark, dir).collect().map(_.getInt(1)).toSeq
+    }
+    assert(at50.size === 51 && at50.max === 50 && at50.sorted === (0 to 50),
+      "every node of a 50-hop path must get its distance")
+    // one more supplier puts a node at hop 51: the capped table would be
+    // truncated, so the builder must throw instead of answering
+    val e = intercept[IllegalStateException] {
+      withPathGraph(26, 26)(dir => ops.GraphOps.graphBfsConverged(spark, dir))
+    }
+    assert(e.getMessage.contains("50 rounds"))
+  }
 }

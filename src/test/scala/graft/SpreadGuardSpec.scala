@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
+
 /** Pins the r19 guard on the compact-source spread
   * ([[Tables.spreadCompactSource]]): at fixture scale (single-split
   * parquet) the round-robin repartition must still fire — it is what
@@ -40,5 +46,33 @@ class SpreadGuardSpec extends SparkSpec {
       assert(plan.contains("RoundRobinPartitioning"),
         s"compact documents fixture lost its spread:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveWas)
+  }
+
+  test("the guard runs no job, and a frame that needs a shuffle is rejected") {
+    val sc = spark.sparkContext
+    val single = spark.range(0, 1000, 1, 1).toDF("id")
+    val wide = spark.range(0, 1000, 1, sc.defaultParallelism + 3).toDF("id")
+    val docs = Tables.documents(spark, sf) // schema inference may run a job: outside the count
+    val grouped = single.groupBy((col("id") % 7).as("k")).count()
+    val jobs = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null))
+          markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      intercept[IllegalArgumentException](Tables.spreadCompactSource(grouped))
+      Seq(single, wide, docs).foreach(Tables.spreadCompactSource)
+      // the bus delivers in order: once the marker job's start arrives,
+      // every job the guard could have run has been counted
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(markerSeen.await(10, TimeUnit.SECONDS), "marker job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 0, s"the guard ran ${jobs.get} job(s)")
   }
 }
