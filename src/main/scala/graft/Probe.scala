@@ -24,6 +24,9 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *    timed action) and `execute` — the phases never sum past the wall;
   *  - `jobs`, `stages`, `tasks` and, per completed stage, executor run,
   *    CPU and GC time, shuffle read and write, and memory/disk spill;
+  *  - `fixpoint_round_jobs` and `fixpoint_fallback_jobs`: the jobs among
+  *    `jobs` that [[ops.Fixpoint]] ran as round checkpoints and as
+  *    fallback counts after a missed observation;
   *  - `plan_shape`: Exchange, ReusedExchange, Sort and WholeStageCodegen
   *    counts of the final plan (adaptive stages and subqueries included);
   *  - `plan`: that final executed plan.
@@ -65,13 +68,15 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
   private val barrierSeen = new AtomicLong(0L)
   private val barrierStages = mutable.Set[Int]()
   private var jobs = 0
+  private val fixpointJobs = mutable.Map[String, Int]().withDefaultValue(0) // by role
   private val stages = mutable.ArrayBuffer[(Int, JObject)]() // (tasks, metrics)
 
   sc.addSparkListener(new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = Probe.this.synchronized {
-      Option(e.properties).flatMap(p => Option(p.getProperty(BarrierKey))) match {
+      def prop(key: String) = Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+      prop(BarrierKey) match {
         case Some(id) => barrierStages ++= e.stageIds; barrierSeen.set(id.toLong)
-        case None     => jobs += 1
+        case None     => jobs += 1; prop(ops.Fixpoint.JobKey).foreach(fixpointJobs(_) += 1)
       }
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = Probe.this.synchronized {
@@ -108,7 +113,7 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
   def record(name: String)(build: SparkSession => DataFrame): JObject = {
     spark.catalog.clearCache()
     drain()
-    val (jobs0, stages0) = synchronized((jobs, stages.size))
+    val (jobs0, stages0, fixpoint0) = synchronized((jobs, stages.size, fixpointJobs.toMap))
     var built, counted: QueryExecution = null
     var (buildS, actionS) = (0.0, 0.0)
     val run = ops.GuardOps.timedRun(spark, s"probe-$name", Probe.TimeoutMs) {
@@ -127,7 +132,9 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
       s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300)))
     else {
       drain()
-      val (nJobs, ran) = synchronized((jobs - jobs0, stages.drop(stages0).toList))
+      val (nJobs, ran, fixpoint1) =
+        synchronized((jobs - jobs0, stages.drop(stages0).toList, fixpointJobs.toMap))
+      def fixpoint(role: String) = fixpoint1.getOrElse(role, 0) - fixpoint0.getOrElse(role, 0)
       def tracked(qe: QueryExecution, phase: String): Double =
         qe.tracker.phases.get(phase).fold(0.0)(s => (s.endTimeMs - s.startTimeMs) / 1e3)
       // the tracker's millisecond spans are clamped into the nanosecond
@@ -147,7 +154,9 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
         ("phases" -> ("build_s" -> ms(buildS - analyzeBuild)) ~
           ("analyze_s" -> ms(analyzeBuild + analyze)) ~ ("optimize_s" -> ms(optimize)) ~
           ("physical_s" -> ms(physical)) ~ ("execute_s" -> ms(left))) ~
-        ("jobs" -> nJobs) ~ ("stages" -> ran.size) ~ ("tasks" -> ran.map(_._1).sum) ~
+        ("jobs" -> nJobs) ~ ("fixpoint_round_jobs" -> fixpoint("round")) ~
+        ("fixpoint_fallback_jobs" -> fixpoint("fallback")) ~
+        ("stages" -> ran.size) ~ ("tasks" -> ran.map(_._1).sum) ~
         ("stage_metrics" -> ran.map(_._2)) ~
         ("plan_shape" -> Seq("exchanges", "reused_exchanges", "sorts", "codegen_stages")
           .map(k => k -> shape.count(_ == k)).toMap) ~

@@ -79,7 +79,7 @@ object ScaleStress {
     Heavy("graph_triangles", "m^1.5 wedge volume; disjoint union => ~linear", 1.5),
     Heavy("graph_local_cc", "m^1.5 wedge volume; disjoint union => ~linear", 1.5),
     Heavy("graph_pagerank", "3 x (m join + agg); linear", 1.2),
-    Heavy("graph_bfs_levels", "3 rounds x (frontier join + min agg); linear", 1.2),
+    Heavy("graph_bfs_levels", "<= 3 rounds x (frontier join + anti join + min agg); linear", 1.2),
     Heavy("graph_bfs_converged",
       "rounds-to-drain x (frontier join); depth set per component => linear", 1.3),
     // text dedup family over documents

@@ -108,7 +108,7 @@ object CurateOps {
     // Catalyst reuses exchanges, not un-exchanged subplan computations —
     // without the checkpoint the md5-of-sorted-distinct-tokens pass (the
     // dominant scan+map cost at 100 TB) runs twice (GraphOps.scala lesson)
-    val corpus = DedupOps.eagerCheckpoint(bucketed(fp(
+    val corpus = Fixpoint.eagerCheckpoint(bucketed(fp(
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("text")))))
     val evalFp = fp(Tables.documents(spark, sfDir).filter(col("doc_id") % 97 === 0)
@@ -233,7 +233,7 @@ object CurateOps {
     * equi-join. The quality-score derivation is checkpointed once; all
     * three consumers (budget, buckets, doc join) reuse it. */
   def tokenBudgetSelect(spark: SparkSession, sfDir: String): DataFrame = {
-    val q = DedupOps.eagerCheckpoint(TextOps.qualityScore(spark, sfDir))
+    val q = Fixpoint.eagerCheckpoint(TextOps.qualityScore(spark, sfDir))
     val budget = q.agg(expr("CAST(sum(n_tokens) div 10 AS BIGINT)").as("budget"))
     val buckets = q.groupBy("quality").agg(sum(col("n_tokens")).as("bt"))
       .withColumn("cum_before", coalesce(sum(col("bt")).over(
@@ -270,7 +270,7 @@ object CurateOps {
       .select(col("doc_id"),
         graft.functions.BpeFunctions.bpeTokenCount(col("text")).as("n_bpe_tokens"))
       .join(scored, "doc_id")
-    val q = DedupOps.eagerCheckpoint(withBpe)
+    val q = Fixpoint.eagerCheckpoint(withBpe)
     val budget = q.agg(expr("CAST(sum(n_bpe_tokens) div 10 AS BIGINT)").as("budget"))
     val buckets = q.groupBy("quality").agg(sum(col("n_bpe_tokens")).as("bt"))
       .withColumn("cum_before", coalesce(sum(col("bt")).over(

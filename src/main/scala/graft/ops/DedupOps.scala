@@ -420,35 +420,18 @@ object DedupOps {
     * turns pairwise similarity into dedup DECISIONS (one keeper per
     * cluster, the rest dropped).
     *
-    * Algorithm: iterative min-label propagation as pure DataFrame ops —
-    * label(v) ← min(label(v), min over neighbors' labels) until fixpoint.
-    * Each iteration is one equi-join + one map-side-combinable min
-    * aggregate; the loop's only driver-side value is Σlabels, which
-    * strictly decreases until convergence — one long per iteration, no
-    * collect.
+    * Algorithm: [[connectedComponents]] over the pair graph — min-label
+    * propagation plus pointer jumping as pure DataFrame ops, one
+    * [[Fixpoint]] round each; a round's only driver-side value is the
+    * count of labels it changed, no collect.
     *
-    * Each generation is truncated with an EAGER `localCheckpoint`. This
-    * is load-bearing, not hygiene: `labels` feeds the next generation
-    * twice (directly and inside the neighbor aggregate), so without
-    * truncation the logical plan DOUBLES per round — by round 6 Catalyst
-    * re-analyzes 2⁶ inlined copies of the whole edge-pipeline subtree and
-    * the driver, not the executors, becomes the bottleneck (measured 60 s
-    * of driver CPU at sf0.1 vs ~4 s checkpointed). The edge list is
-    * checkpointed once for the same reason (its two union branches would
-    * otherwise each re-execute the similarity join). [[eagerCheckpoint]]
-    * picks the cluster-safe flavor automatically: reliable `checkpoint`
-    * when a checkpoint dir is configured, `localCheckpoint` under
-    * `local[N]`.
-    *
-    * Scale: iterations = component diameter. Near-dup clusters at J ≥ 0.9
-    * are near-cliques (diameter ≤ ~3), so the loop converges in a handful
-    * of rounds even at 100 TB; for adversarial long-chain graphs switch
-    * the iteration body to large-star/small-star (Kiveris et al.), which
-    * converges in O(log n) rounds over the same join-aggregate primitives.
+    * Scale: near-dup clusters at J ≥ 0.9 are near-cliques (diameter ≤ ~3),
+    * so the loop converges in a handful of rounds even at 100 TB, and
+    * pointer jumping bounds adversarial long chains at O(log diameter)
+    * rounds.
     */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = eagerCheckpoint(ngramJaccardPairs(spark, sfDir)
-      .select(col("doc_a"), col("doc_b")))
+    val pairs = ngramJaccardPairs(spark, sfDir).select(col("doc_a"), col("doc_b"))
     val nodes = Tables.documents(spark, sfDir).select(col("doc_id"))
     val labels = connectedComponents(nodes, pairs)
     val sizes = labels.groupBy(col("label").as("cluster_id"))
@@ -484,48 +467,6 @@ object DedupOps {
   /** Signature width (shared with the incremental streaming dedup). */
   private[graft] def SigK: Int = K
 
-  /** Eager lineage truncation with a cluster-safe default: when the
-    * session has a checkpoint dir configured (`spark.sparkContext
-    * .setCheckpointDir` / `spark.checkpoint.dir`), use RELIABLE
-    * `checkpoint` — blocks live on the shared FS, so an executor loss
-    * mid-fixpoint recovers instead of failing the job. Otherwise fall
-    * back to `localCheckpoint` (correct and fastest under `local[N]`,
-    * where executor loss means JVM loss anyway).
-    *
-    * EAGER by design (r16 advice, documented): checkpoint/localCheckpoint
-    * execute the checkpointed subtree at CALL time, so a query builder
-    * routed through this helper (dedup_clusters' pair set,
-    * dedup_recall_eval's truth/found enumerations) runs its expensive
-    * joins during DataFrame CONSTRUCTION — merely building or explaining
-    * the query does work. That is the accepted trade here: the
-    * checkpointed sets feed multiple consumers and a lazy plan would
-    * re-execute the candidate joins per consumer; all timed harnesses
-    * (Bench, ScaleStress, the audits) time build+collect together, so
-    * the cost lands inside the timed region either way. localCheckpoint
-    * blocks are executor-resident and lost on executor failure —
-    * acceptable under local[N]; a cluster deployment sets a
-    * checkpoint dir and gets the durable form automatically. */
-  private[graft] def eagerCheckpoint(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  /** Read one long metric from an [[org.apache.spark.sql.Observation]]
-    * whose query just ran (the fixpoint loops fuse their per-round
-    * convergence probe into the checkpoint action this way — one action
-    * per round instead of two). The observation completes on the async
-    * listener bus a few ms after the action returns, so this waits up to
-    * 2 s for it; if the bus ever drops the event (pathological load) or
-    * the metric is missing under `key`, the caller's fallback job
-    * recomputes the probe — the fusion can delay a round by at most the
-    * bound, never hang or change the answer. */
-  private[graft] def observedLong(obs: org.apache.spark.sql.Observation,
-      key: String)(fallback: => Long): Long =
-    scala.util.Try(scala.concurrent.Await.result(
-        obs.future, scala.concurrent.duration.Duration(2, "s")).getAs[Long](key))
-      .getOrElse(fallback)
-
-  private val MaxCcRounds = 50
-
   /** Reusable connected components: `nodes` (doc_id) + undirected `pairs`
     * (doc_a, doc_b) → (doc_id, label) with label = min node id reachable.
     * Each round is min-label propagation over edges PLUS pointer jumping
@@ -534,63 +475,43 @@ object DedupOps {
     * dedup graph can contain — while the jump step halves pointer-chain
     * depth every round, so convergence is O(log diameter) (a 10M-node
     * chain resolves in ~25 rounds, not 10M). Every label value is itself
-    * a node id, so the jump is a plain self-equi-join; checkpoint
-    * discipline as described on [[dedupClusters]]. The loop runs only
-    * over edge-involved nodes — per-round work scales with the duplicate
-    * subgraph, not the corpus — and isolated nodes rejoin afterwards
-    * with their own id as label. */
+    * a node id, so the jump is a plain self-equi-join. Rounds run on
+    * [[Fixpoint.run]]; `pairs` is checkpointed once on entry (its two
+    * edge directions would otherwise each re-execute the pair
+    * enumeration). The loop runs only over edge-involved nodes — per-round
+    * work scales with the duplicate subgraph, not the corpus — and
+    * isolated nodes rejoin afterwards with their own id as label. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col(pairs.columns(0)).as("src"), col(pairs.columns(1)).as("dst"))
-      .union(pairs.select(col(pairs.columns(1)).as("src"), col(pairs.columns(0)).as("dst")))
+    val p = Fixpoint.eagerCheckpoint(pairs)
+    val edges = p.select(col(p.columns(0)).as("src"), col(p.columns(1)).as("dst"))
+      .union(p.select(col(p.columns(1)).as("src"), col(p.columns(0)).as("dst")))
       .persist()
     // The fixpoint only runs over EDGE-INVOLVED nodes: a node with no
     // near-dup edge is its own component by definition and re-deriving
     // that through O(log d) join rounds would make the loop scale with
     // the corpus instead of with the (far smaller) duplicate subgraph.
     // Isolated nodes rejoin with label = own id after convergence.
-    var labels = eagerCheckpoint(edges.select(col("src").as("doc_id")).distinct()
+    val init = Fixpoint.eagerCheckpoint(edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < MaxCcRounds) {
+    val labels = try Fixpoint.run("connectedComponents", init) { (labels, _) =>
       val nbrMin = edges.join(labels, col("src") === col("doc_id"))
         .groupBy(col("dst"))
         .agg(min("label").as("nbr_min"))
-      // prev rides along through propagation + jump, so the convergence
-      // probe below needs no extra join against the previous generation
+      // prev rides along through propagation + jump, so the progress
+      // predicate needs no extra join against the previous generation
       val prop = labels.join(nbrMin, col("doc_id") === col("dst"), "left_outer")
         .select(col("doc_id"), col("label").as("prev"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-      // Convergence = zero labels changed this round. Labels only ever
-      // decrease, so changed == 0 IS the fixpoint; the count can't give a
-      // false positive, unlike a Σlabel equality probe, which can wrap
-      // around Long on billion-node/large-id graphs. Still one driver-side
-      // long per round, no collect — and since r19 the count rides the
-      // checkpoint action as an observed metric (one action per round,
-      // not two; the read waits at most 2 s for the listener bus, and a
-      // missing metric falls back to the r18 count job over the
-      // checkpointed table).
-      val obs = org.apache.spark.sql.Observation()
-      val next = eagerCheckpoint(prop
-        .join(prop.select(col("doc_id").as("p_id"), col("label").as("p_label")),
-          col("label") === col("p_id"))
-        .select(col("doc_id"), col("prev"), col("p_label").as("label"))
-        .observe(obs,
-          count(when(col("label") =!= col("prev"), lit(1))).as("changed")))
-      val changed = observedLong(obs, "changed") {
-        next.filter(col("label") =!= col("prev")).count()
-      }
-      labels = next.select("doc_id", "label")
-      converged = changed == 0L
-      iter += 1
-    }
-    edges.unpersist()
-    // With pointer jumping, rounds ≈ log₂(diameter): 50 covers any graph
-    // that fits in Long ids. Hitting the cap means a logic regression —
-    // returning silently-unconverged labels would be WRONG answers, so
-    // fail loudly instead.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents: no fixpoint after $MaxCcRounds rounds (labels still changing)")
+      // Progress = labels changed this round. Labels only ever decrease,
+      // so zero changed IS the fixpoint; the count can't give a false
+      // positive, unlike a Σlabel equality probe, which can wrap around
+      // Long on billion-node/large-id graphs.
+      Fixpoint.Round(prop
+          .join(prop.select(col("doc_id").as("p_id"), col("label").as("p_label")),
+            col("label") === col("p_id"))
+          .select(col("doc_id"), col("prev"), col("p_label").as("label")),
+        col("label") =!= col("prev"), _.select("doc_id", "label"))
+    } finally edges.unpersist()
     nodes.select(col(nodes.columns(0)).as("doc_id"))
       .join(labels, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
@@ -711,12 +632,11 @@ object DedupOps {
     // LSH chain two (n_found, n_lsh) — pin both pair sets so the
     // expensive candidate joins run ONCE instead of relying on AQE
     // exchange reuse (r15 advice; the oracle pins the same reuse with
-    // MATERIALIZED CTEs). eagerCheckpoint (the dedupSemantic idiom)
-    // also truncates the lineage, so neither aggregate can re-derive
-    // the PPJoin/band joins.
-    val truth = eagerCheckpoint(
+    // MATERIALIZED CTEs). The eager checkpoint also truncates the
+    // lineage, so neither aggregate can re-derive the PPJoin/band joins.
+    val truth = Fixpoint.eagerCheckpoint(
       ngramJaccardPairs(spark, sfDir).select("doc_a", "doc_b"))
-    val found = eagerCheckpoint(
+    val found = Fixpoint.eagerCheckpoint(
       minhashLsh(spark, sfDir).select("doc_a", "doc_b"))
     val nTruth = truth.agg(count(lit(1)).as("n_truth"))
     val nFound = truth.join(found, Seq("doc_a", "doc_b"), "left_semi")

@@ -38,12 +38,12 @@ object GraphOps {
   private def basketGraph(spark: SparkSession, sfDir: String) = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-    val e = DedupOps.eagerCheckpoint(li.as("a").join(li.as("b"),
+    val e = Fixpoint.eagerCheckpoint(li.as("a").join(li.as("b"),
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
       .select(col("a.pk").as("x"), col("b.pk").as("y")).distinct())
     val deg = e.select(col("x").as("node")).unionAll(e.select(col("y").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-    val oriented = DedupOps.eagerCheckpoint(e
+    val oriented = Fixpoint.eagerCheckpoint(e
       .join(deg.withColumnRenamed("node", "x").withColumnRenamed("deg", "dx"), "x")
       .join(deg.withColumnRenamed("node", "y").withColumnRenamed("deg", "dy"), "y")
       .select(
@@ -76,7 +76,7 @@ object GraphOps {
     * adjacency side of that SortMergeJoin needs neither an exchange nor
     * a sort. */
   private def sortedAdjacency(oriented: DataFrame): DataFrame =
-    DedupOps.eagerCheckpoint(
+    Fixpoint.eagerCheckpoint(
       oriented.groupBy("u").agg(array_sort(collect_list(col("v"))).as("nbrs"))
         .sortWithinPartitions("u"))
 
@@ -139,15 +139,13 @@ object GraphOps {
     // checkpoint the 600k-row scan + distinct re-ran once per consumer
     // job (measured: three 590k-record exchange writes per build at
     // sf0.1 — one for outdeg, two for eo's union branches)
-    val li = DedupOps.eagerCheckpoint(Tables.lineitem(spark, sfDir)
-      .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk")).distinct())
-    val edges = li.select((col("pk") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-      .unionAll(li.select((col("sk") * 2 + 1).as("src"), (col("pk") * 2).as("dst")))
+    val li = Fixpoint.eagerCheckpoint(partSupplier(spark, sfDir))
+    val edges = partSupplierEdges(li)
     // materialize the static (src, dst, deg) table once: every iteration
     // (and the final deg join) reuses it instead of re-deriving the
     // distinct + union + degree-agg lineage per reference — the standard
     // "cache the edge list" step of any iterative graph job
-    val outdeg = DedupOps.eagerCheckpoint(
+    val outdeg = Fixpoint.eagerCheckpoint(
       edges.groupBy("src").agg(count(lit(1)).as("deg")))
     // ... and hash-partitioned + sorted by the ITERATION JOIN KEY at
     // checkpoint time: Dataset.checkpoint preserves outputPartitioning/
@@ -157,7 +155,7 @@ object GraphOps {
     // loop-invariant shuffle out of the loop; the r18 plan showed
     // `Exchange hashpartitioning(src)` + two Sorts inside the unrolled
     // iterations, r19 deletes them)
-    val eo = DedupOps.eagerCheckpoint(edges.join(outdeg, "src")
+    val eo = Fixpoint.eagerCheckpoint(edges.join(outdeg, "src")
       .repartition(col("src")).sortWithinPartitions("src")) // (src, dst, deg)
     val pr0 = outdeg.select(col("src").as("node"), lit(1.0).as("pr"))
     val pr3 = (1 to 3).foldLeft(pr0) { (pr, _) =>
@@ -221,109 +219,59 @@ object GraphOps {
       .limit(100)
   }
 
-  /** Bounded-depth BFS: minimum hop count from a source node over the
-    * part↔supplier bipartite graph of [[graphPagerank]] (source = the
-    * smallest part node, derived by a 1-row aggregate so no id is
-    * hardcoded; depth 3). Each round is one equi-join of the CHECKPOINTED
-    * static edge table against the current frontier (only nodes first
-    * discovered last round expand) plus a min-combine on the node key —
-    * the textbook distributed-BFS shape: shuffle-partitioned on node
-    * ids, map-side min combine, per-round checkpoint to keep lineage
-    * linear, no driver state and no broadcast of the visited set. The
-    * oracle states the same fixpoint as a depth-bounded recursive CTE.
-    * Depth is a constant here; an unbounded variant loops until the
-    * frontier count hits zero, exactly like
-    * [[DedupOps.connectedComponents]]'s convergence signal. */
-  def graphBfsLevels(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = Tables.lineitem(spark, sfDir)
+  /** The part↔supplier bipartite graph of [[graphPagerank]] and [[bfs]]:
+    * distinct (pk, sk) pairs, and both directions of every pair with parts
+    * at even node ids (pk·2) and suppliers at odd ones (sk·2+1). */
+  private def partSupplier(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.lineitem(spark, sfDir)
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk")).distinct()
-    val edges = li.select((col("pk") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
+
+  private def partSupplierEdges(li: DataFrame): DataFrame =
+    li.select((col("pk") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
       .unionAll(li.select((col("sk") * 2 + 1).as("src"), (col("pk") * 2).as("dst")))
-    val e = DedupOps.eagerCheckpoint(edges)
-    val dist0 = li.agg((min(col("pk")) * 2).as("node"))
-      .select(col("node"), lit(0).as("hop"))
-    val dist3 = (1 to 3).foldLeft(dist0) { (dist, h) =>
-      val next = e.join(dist.filter(col("hop") === h - 1),
-          e("src") === dist("node"))
-        .select(e("dst").as("node"), lit(h).as("hop"))
-      DedupOps.eagerCheckpoint(
-        dist.unionAll(next).groupBy("node").agg(min(col("hop")).as("hop")))
+
+  /** BFS to at most `maxHops` hops: minimum hop count from the smallest
+    * part node over the part↔supplier graph. Each [[Fixpoint]] round
+    * joins the checkpointed edge list against only the FRONTIER (nodes
+    * first seen last round), anti-joins the settled nodes and min-combines
+    * on the node key; its progress is the frontier size. The distance
+    * table is the union of the disjoint per-round frontiers, so no round
+    * re-materializes the O(V) table.
+    *
+    * Below [[Fixpoint.MaxRounds]], `maxHops` is the query's own depth
+    * bound. At the cap the query is the converged BFS, and the table is
+    * complete only if the last frontier has no unvisited neighbour: an
+    * eccentricity of exactly the cap answers, as the oracle's `hop < 50`
+    * guard does, and one hop more fails loudly. */
+  private[graft] def bfs(spark: SparkSession, sfDir: String, maxHops: Int): DataFrame = {
+    val li = partSupplier(spark, sfDir)
+    val e = Fixpoint.eagerCheckpoint(partSupplierEdges(li))
+    def dist(parts: List[DataFrame]): DataFrame = parts.reduce(_ unionAll _)
+    def drained(parts: List[DataFrame]): Boolean =
+      e.join(parts.last, e("src") === parts.last("node")).select(e("dst").as("node"))
+        .join(dist(parts), Seq("node"), "left_anti").isEmpty
+    val seed = Fixpoint.eagerCheckpoint(
+      li.agg((min(col("pk")) * 2).as("node")).select(col("node"), lit(0).as("hop")))
+    val parts = Fixpoint.run("bfs", List(seed), maxHops,
+        complete = (ps: List[DataFrame]) => maxHops < Fixpoint.MaxRounds || drained(ps)) {
+      (parts, h) =>
+        val frontier = parts.last
+        Fixpoint.Round(e.join(frontier, e("src") === frontier("node"))
+            .select(e("dst").as("node"), lit(h).as("hop"))
+            .join(dist(parts), Seq("node"), "left_anti")
+            .groupBy("node").agg(min(col("hop")).as("hop")),
+          lit(true), parts :+ _)
     }
-    dist3.orderBy(col("hop").asc, col("node").asc)
+    dist(parts).orderBy(col("hop").asc, col("node").asc)
   }
 
-  /** Safety cap for the convergence-driven BFS: far above any plausible
-    * diameter of the small-world basket graph (the fixture converges in
-    * single digits); the oracle's recursion guard uses the same bound.
-    * A graph whose frontier still grows past it throws rather than
-    * answering a truncated distance table. */
-  private val MaxBfsRounds = 50
-
-  /** Convergence-driven BFS — the unbounded twin of [[graphBfsLevels]]:
-    * expand until the FRONTIER (nodes first seen this round) is empty,
-    * the same drive-to-fixpoint signal as
-    * [[DedupOps.connectedComponents]]. Scale shape: each round joins the
-    * static checkpointed edge list against only the NEW frontier (not
-    * the whole distance table — the anti-join keeps re-expansion of
-    * settled nodes out of the shuffle), checkpoints the result to
-    * truncate lineage, and the driver holds nothing but the loop
-    * counter; rounds = graph diameter, each a keyed shuffle. */
-  def graphBfsConverged(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = Tables.lineitem(spark, sfDir)
-      .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk")).distinct()
-    val edges = li.select((col("pk") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-      .unionAll(li.select((col("sk") * 2 + 1).as("src"), (col("pk") * 2).as("dst")))
-    val e = DedupOps.eagerCheckpoint(edges)
-    // the distance table is kept as a UNION of the per-round checkpointed
-    // frontiers (disjoint by construction — each round anti-joins the
-    // previous union) instead of being re-checkpointed whole every round:
-    // that re-materialized O(V) rows per round for a table whose only
-    // per-round use is the anti-join's build side, and it was one of the
-    // two actions each round paid (r18; same fixpoint, rounds ≤ 50 keep
-    // the union plan bounded).
-    var distParts = List(DedupOps.eagerCheckpoint(
-      li.agg((min(col("pk")) * 2).as("node")).select(col("node"), lit(0).as("hop"))))
-    def dist: DataFrame = distParts.reduce(_ unionAll _)
-    var frontier = distParts.head
-    // the frontier-empty probe rides the checkpoint action as an
-    // observed count(1) instead of a separate limit(1).count() job —
-    // one action per round, not two (r19; the r18-rejected Observation
-    // idea, now bounded: the read waits at most 2 s for the listener bus,
-    // and a missing metric falls back to the old probe). The seed frontier is one row
-    // by construction, so the first round needs no probe.
-    var frontierRows = 1L
-    var h = 0
-    while (frontierRows > 0 && h < MaxBfsRounds) {
-      h += 1
-      val next = e.join(frontier, e("src") === frontier("node"))
-        .select(e("dst").as("node"), lit(h).as("hop"))
-      val obs = org.apache.spark.sql.Observation()
-      frontier = DedupOps.eagerCheckpoint(
-        next.join(dist, Seq("node"), "left_anti")
-          .groupBy("node").agg(min(col("hop")).as("hop"))
-          .observe(obs, count(lit(1)).as("rows")))
-      frontierRows = DedupOps.observedLong(obs, "rows") {
-        frontier.limit(1).count()
-      }
-      distParts = distParts :+ frontier
-    }
-    // At the cap the last frontier may still be non-empty. The table is
-    // complete only if none of its neighbours is unvisited: an
-    // eccentricity of exactly MaxBfsRounds answers (the oracle's
-    // `hop < 50` guard reaches it too), one hop more is a truncated
-    // table and fails loudly, like connectedComponents at its cap.
-    if (frontierRows > 0 &&
-        !e.join(frontier, e("src") === frontier("node")).select(e("dst").as("node"))
-          .join(dist, Seq("node"), "left_anti").isEmpty)
-      throw new IllegalStateException(
-        s"graphBfsConverged: frontier still growing after $MaxBfsRounds rounds")
-    dist.orderBy(col("hop").asc, col("node").asc)
-  }
+  def graphBfsConverged(spark: SparkSession, sfDir: String): DataFrame =
+    bfs(spark, sfDir, Fixpoint.MaxRounds)
 
   val queries: Map[String, Q] = Map(
     "graph_triangles"     -> (graphTriangles _),
     "graph_local_cc"      -> (graphLocalCc _),
-    "graph_bfs_levels"    -> (graphBfsLevels _),
+    "graph_bfs_levels"    -> ((spark, sfDir) => bfs(spark, sfDir, 3)),
     "graph_bfs_converged" -> (graphBfsConverged _),
     "graph_pagerank"      -> (graphPagerank _))
 
@@ -338,31 +286,23 @@ object GraphOps {
        |    AS DOUBLE) / 1073741824.0) AS pr
        |  FROM eo JOIN $prev ON eo.src = $prev.node GROUP BY dst)""".stripMargin
 
+  /** The BFS oracle: a recursive CTE walking at most `depth` hops. */
+  private def bfsOracleSql(depth: Int): String =
+    s"""WITH RECURSIVE li AS (
+       |  SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
+       |e AS (SELECT pk * 2 AS src, sk * 2 + 1 AS dst FROM li
+       |      UNION ALL SELECT sk * 2 + 1 AS src, pk * 2 AS dst FROM li),
+       |walk(node, hop) AS (
+       |  SELECT (SELECT min(pk) * 2 FROM li) AS node, 0 AS hop
+       |  UNION
+       |  SELECT e.dst, w.hop + 1
+       |  FROM walk w JOIN e ON e.src = w.node WHERE w.hop < $depth)
+       |SELECT node, min(hop) AS hop FROM walk
+       |GROUP BY node ORDER BY hop ASC, node ASC""".stripMargin
+
   val oracle: Map[String, String] = Map(
-    "graph_bfs_levels" ->
-      """WITH RECURSIVE li AS (
-        |  SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
-        |e AS (SELECT pk * 2 AS src, sk * 2 + 1 AS dst FROM li
-        |      UNION ALL SELECT sk * 2 + 1 AS src, pk * 2 AS dst FROM li),
-        |walk(node, hop) AS (
-        |  SELECT (SELECT min(pk) * 2 FROM li) AS node, 0 AS hop
-        |  UNION
-        |  SELECT e.dst, w.hop + 1
-        |  FROM walk w JOIN e ON e.src = w.node WHERE w.hop < 3)
-        |SELECT node, min(hop) AS hop FROM walk
-        |GROUP BY node ORDER BY hop ASC, node ASC""".stripMargin,
-    "graph_bfs_converged" ->
-      """WITH RECURSIVE li AS (
-        |  SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
-        |e AS (SELECT pk * 2 AS src, sk * 2 + 1 AS dst FROM li
-        |      UNION ALL SELECT sk * 2 + 1 AS src, pk * 2 AS dst FROM li),
-        |walk(node, hop) AS (
-        |  SELECT (SELECT min(pk) * 2 FROM li) AS node, 0 AS hop
-        |  UNION
-        |  SELECT e.dst, w.hop + 1
-        |  FROM walk w JOIN e ON e.src = w.node WHERE w.hop < 50)
-        |SELECT node, min(hop) AS hop FROM walk
-        |GROUP BY node ORDER BY hop ASC, node ASC""".stripMargin,
+    "graph_bfs_levels"    -> bfsOracleSql(3),
+    "graph_bfs_converged" -> bfsOracleSql(Fixpoint.MaxRounds),
     "graph_pagerank" ->
       s"""WITH li AS (SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
          |e AS (SELECT pk * 2 AS src, sk * 2 + 1 AS dst FROM li

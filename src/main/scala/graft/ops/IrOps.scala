@@ -155,7 +155,7 @@ object IrOps {
       .groupBy("d", "t").agg(count(lit(1)).as("tf"))
     val dfr = tf.groupBy("t").agg(count(lit(1)).as("df"))
     val nd = Tables.documents(spark, sfDir).agg(count(lit(1)).as("n_docs"))
-    val w = DedupOps.eagerCheckpoint(
+    val w = Fixpoint.eagerCheckpoint(
       tf.join(dfr, "t").crossJoin(broadcast(nd))
         .select(col("d"), col("t"), col("df"), col("n_docs"),
           expr(wSql).as("w")))

@@ -300,13 +300,12 @@ object SimOps {
 
   def embedDedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val bucketed = bucketVecs(spark, sfDir, graft.GraftConf.annPlanes(spark))
-    val pairs = DedupOps.eagerCheckpoint(
-      PairEnum.blockedSelfJoinPairs(bucketed, Seq("bucket"), "vec_id",
-          Seq("embedding", "nrm"))
-        .withColumn("cos",
-          dot(col("a_embedding"), col("b_embedding")) / sqrt(col("a_nrm") * col("b_nrm")))
-        .filter(col("cos") >= ClusterCosThreshold)
-        .select(col("a_vec_id").as("vec_a"), col("b_vec_id").as("vec_b")))
+    val pairs = PairEnum.blockedSelfJoinPairs(bucketed, Seq("bucket"), "vec_id",
+        Seq("embedding", "nrm"))
+      .withColumn("cos",
+        dot(col("a_embedding"), col("b_embedding")) / sqrt(col("a_nrm") * col("b_nrm")))
+      .filter(col("cos") >= ClusterCosThreshold)
+      .select(col("a_vec_id").as("vec_a"), col("b_vec_id").as("vec_b"))
     val nodes = Tables.embeddings(spark, sfDir).select(col("vec_id"))
     val labels = DedupOps.connectedComponents(nodes, pairs)
     val sizes = labels.groupBy(col("label").as("cluster_id"))
@@ -589,14 +588,13 @@ object SimOps {
   def dedupSemantic(spark: SparkSession, sfDir: String): DataFrame = {
     val v = withNorm(Tables.embeddings(spark, sfDir))
     val assigned = PinCache.pinned(semAssignScored(spark, v))
-    val pairs = DedupOps.eagerCheckpoint(
-      PairEnum.blockedSelfJoinPairs(assigned, Seq("cell"), "vec_id",
-          Seq("embedding", "nrm"))
-        .withColumn("cos",
-          dot(col("a_embedding"), col("b_embedding")) /
-            sqrt(col("a_nrm") * col("b_nrm")))
-        .filter(col("cos") >= graft.GraftConf.semCosThreshold(spark))
-        .select(col("a_vec_id").as("vec_a"), col("b_vec_id").as("vec_b")))
+    val pairs = PairEnum.blockedSelfJoinPairs(assigned, Seq("cell"), "vec_id",
+        Seq("embedding", "nrm"))
+      .withColumn("cos",
+        dot(col("a_embedding"), col("b_embedding")) /
+          sqrt(col("a_nrm") * col("b_nrm")))
+      .filter(col("cos") >= graft.GraftConf.semCosThreshold(spark))
+      .select(col("a_vec_id").as("vec_a"), col("b_vec_id").as("vec_b"))
     val labels = DedupOps.connectedComponents(assigned.select(col("vec_id")), pairs)
       .select(col("doc_id").as("vec_id"), col("label").as("group_id"))
     val sizes = labels.groupBy("group_id")
@@ -857,7 +855,7 @@ object SimOps {
     // REGISTRY NOTE (r18 advice, documented): construction runs the GD
     // steps — three bounded collect() jobs — so a plan-only consumer
     // (a plan dump) triggers corpus scans as a build side
-    // effect. Accepted for the same reason as eagerCheckpoint (see its
+    // effect. Accepted for the same reason as Fixpoint.eagerCheckpoint (see its
     // scaladoc): iterative training IS driver-paced, and every timed
     // harness times build+action together.
     // unroll depth = the family's one step constant, shared with the

@@ -51,7 +51,7 @@ object SketchOps {
     // inlines the aggregate into each branch — the events scan + sketch
     // build would run twice per action, the exact rebuild the sketch
     // architecture exists to avoid (round-8 verdict finding #3).
-    val perType = DedupOps.eagerCheckpoint(
+    val perType = Fixpoint.eagerCheckpoint(
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(hll_sketch_agg(col("user_id"), lit(LgK)).as("sk")))
@@ -98,7 +98,7 @@ object SketchOps {
     // "today": fresh sketches union-merged with the RE-READ store; the
     // merged 5-row table is checkpointed so the per-type and global
     // levels don't each re-run the today-slice aggregate.
-    val merged = DedupOps.eagerCheckpoint(
+    val merged = Fixpoint.eagerCheckpoint(
       spark.read.parquet(store)
         .unionByName(sliceSketch(col("event_id") % 2 =!= 0))
         .groupBy(col("event_type"))
@@ -128,7 +128,7 @@ object SketchOps {
     * every draw at ≥99% confidence.
     */
   def kllQuantileMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val perFlag = DedupOps.eagerCheckpoint(
+    val perFlag = Fixpoint.eagerCheckpoint(
       Tables.lineitem(spark, sfDir)
         .groupBy(col("l_returnflag"))
         .agg(kll_sketch_agg_double(col("l_extendedprice").cast("double"), KllK)

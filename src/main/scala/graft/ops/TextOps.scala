@@ -500,7 +500,7 @@ object TextOps {
     // deduplicate them (the plan showed FOUR documents scans). After the
     // checkpoint the corpus is read exactly once and every rollup rides
     // the tiny table, which is the 100 TB shape.
-    val c2 = DedupOps.eagerCheckpoint(
+    val c2 = Fixpoint.eagerCheckpoint(
       bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
     val cf = c2.groupBy("w1").agg(sum("c2").cast("long").as("cf"))
     val cl = c2.groupBy("w2").agg(sum("c2").cast("long").as("cl"))

@@ -157,7 +157,7 @@ object TimeOps {
     // consume the session derivation (events scan + per-user lag window);
     // without it each consumer re-runs the derivation (exchange reuse
     // doesn't survive the differing downstream pruning)
-    val sess = DedupOps.eagerCheckpoint(sessionIntervals(spark, sfDir))
+    val sess = Fixpoint.eagerCheckpoint(sessionIntervals(spark, sfDir))
     val binw = broadcast(overlapBinWidth(sess))
     val bounds = Tables.events(spark, sfDir)
       .agg(unix_micros(date_trunc("day", min(col("ts")))).as("d0"),
