@@ -17,23 +17,14 @@ package graft
   * is re-run until its two smallest samples agree within 2× (the shared
   * [[Bench.sample]] loop, at most 3 samples), and the min is reported; a
   * query that fails or times out is listed under `"failed"` instead.
-  * Geometry-capped operators run at their documented ×10 conf
-  * (ann.planes +log2(f), ann.centroidMod ×f), identical at both core
-  * counts.
+  * Every query runs at its documented ×10 scale-path conf
+  * ([[ScaleStress.scalePathConf]] — the exponent audit's own table),
+  * identical at both core counts.
   *
   * Usage: SPARK_GRAFT_CPUS=8|32 runMain graft.CoreScale <outJson> [q,...]
   */
 object CoreScale {
   private val Factor = 10
-
-  /** Documented scale-path conf per query at ×10 (the ScaleStress
-    * bigConf rule), applied identically at every core count. */
-  private def bigConf(q: String): Map[String, String] = q match {
-    case "embed_dedup_clusters" => Map("spark.graft.ann.planes" -> "12")
-    case "ann_ivf_kmeans" | "dedup_semantic" =>
-      Map("spark.graft.ann.centroidMod" -> (32L * Factor).toString)
-    case _ => Map.empty
-  }
 
   private val DefaultQueries = Seq(
     "graph_pagerank", "graph_triangles", "graph_local_cc",
@@ -55,11 +46,18 @@ object CoreScale {
 
     val (samples, failed) = Bench.sample(queries, maxRuns = 3, Double.PositiveInfinity) { name =>
       spark.catalog.clearCache()
-      val overrides = bigConf(name)
+      val overrides = ScaleStress.scalePathConf(name, Factor)
+      // restore, not unset: the scale-path conf also names the shuffle
+      // partition count this session pins, and unset would drop it to
+      // Spark's default for every later query
+      val prior = overrides.keys.map(k => k -> spark.conf.getOption(k))
       overrides.foreach { case (k, v) => spark.conf.set(k, v) }
       try ops.GuardOps.timedRun(spark, s"corescale-$name", 600000L) {
         SparkEntry.queries(name)(spark, big).count()
-      } finally overrides.keys.foreach(spark.conf.unset)
+      } finally prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
     }
 
     import Bench.{jsonStrings, r3}

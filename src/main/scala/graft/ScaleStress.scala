@@ -360,6 +360,12 @@ object ScaleStress {
       "BPE accounting + 2-phase bucket prefix selection; linear", 1.25,
       bigConf = dataSizedPartitions))
 
+  /** The documented scale-path conf of query `name` at `factor` (empty
+    * for a query with no audit row) — the one table the exponent audit
+    * and [[CoreScale]] both run from. */
+  private[graft] def scalePathConf(name: String, factor: Int): Map[String, String] =
+    Heavies.find(_.name == name).fold(Map.empty[String, String])(_.bigConf(factor))
+
   def main(args: Array[String]): Unit = {
     val small = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)

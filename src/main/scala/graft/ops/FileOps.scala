@@ -1,10 +1,11 @@
 package graft.ops
 
+import java.io.OutputStream
 import java.nio.charset.StandardCharsets
 
 import graft.Tables
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,12 +15,14 @@ import org.apache.spark.sql.functions._
   * file, results named after the file. This module reproduces that
   * provenance model with Spark's file-native surface:
   *
-  *  - egress: executors write one UTF-8 file per document (the sink side
-  *    of a per-file pipeline; idempotent behind a `_SUCCESS` marker);
+  *  - staging: every fixture directory is built once behind
+  *    [[materializeOnce]]'s [[DoneMarker]]; the per-row media/text files
+  *    are streamed by executors through ONE writer, [[writeFiles]];
   *  - ingest: `spark.read.format("binaryFile")` scans the directory as
   *    opaque bytes — the real multimodal byte path, no `cast("binary")`
-  *    stand-in — and `input_file_name()` recovers the provenance key,
-  *    exactly the reference's filename-keyed gather.
+  *    stand-in — and [[DocFiles.scan]] parses the provenance key from the
+  *    listing's `path` column, exactly the reference's filename-keyed
+  *    gather.
   *
   * The round-trip is fully oracle-checked: every per-file fact (byte
   * length, md5 digest, shard totals) is recomputed by DuckDB from the
@@ -31,7 +34,7 @@ import org.apache.spark.sql.functions._
   * (`spark.graft.files.root`), so on a real cluster the corpus lives on
   * storage every node sees (HDFS / object store — the analog of the
   * reference's shared blob container, `Program.cs:271`) and the
-  * driver-side `_SUCCESS` probe and the executor-side writes hit the
+  * driver-side marker probe and the executor-side writes hit the
   * SAME filesystem. The default root is the local tmpdir, which is
   * correct exactly where it is used — `local[N]`, where driver and
   * executors share one FS.
@@ -61,16 +64,18 @@ object FileOps {
   private[graft] def cacheDir(spark: SparkSession, kind: String, sfDir: String): String =
     s"${filesRoot(spark)}/graft_${kind}_${sanitize(sfDir)}"
 
+  /** The completion marker [[materializeOnce]] creates in a fixture
+    * directory once its writer has returned. */
+  private[graft] val DoneMarker = "_GRAFT_DONE"
+
   /** THE idempotent-materialization pattern, in one place: resolve the
     * cache dir for (kind, source), run `write(dir)` exactly once behind
-    * a `_SUCCESS` marker created AFTER the write completes, return the
-    * dir. Before this helper the dir-naming + marker dance was
-    * copy-pasted per site and had already drifted (one site with no
-    * guard, one keyed by `hashCode` — the collision bug this object's
-    * own scaladoc records retiring); every derived fixture goes through
-    * here now. `kind` must encode EVERY input that changes the bytes
-    * (conf geometry, column lists) — the source path is appended
-    * sanitized. */
+    * a [[DoneMarker]] created AFTER the write completes, return the dir.
+    * Every fixture directory under [[filesRoot]] is built through here.
+    * `kind` must encode EVERY input that changes the bytes (conf
+    * geometry, column lists) — the source path is appended sanitized.
+    * The directory exists when `write` runs, so a Spark committer egress
+    * inside it writes with `mode("overwrite")`. */
   private[graft] def materializeOnce(
       spark: SparkSession, kind: String, sfDir: String)(
       write: String => Unit): String = {
@@ -85,7 +90,7 @@ object FileOps {
     dir.intern.synchronized {
       val root = new Path(dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new Path(root, "_GRAFT_DONE")
+      val marker = new Path(root, DoneMarker)
       // legacy acceptance: dirs materialized before the dedicated marker
       // existed are complete iff their ROOT carries _SUCCESS (single
       // writes: the committer's own marker; multi-write dirs: the old
@@ -103,91 +108,110 @@ object FileOps {
     dir
   }
 
-  /** One `doc_<id>.txt` per document row, executor-written through the
-    * Hadoop FS resolved from the (possibly remote) root URI, created once
-    * per (root, sfDir) behind a marker file the driver checks through the
-    * same FS. */
-  def materializeDocFiles(spark: SparkSession, sfDir: String): String = {
-    val dir = cacheDir(spark, "docfiles", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, "_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.mkdirs(root)
-      // the parquet scan is one compact partition — repartition so the
-      // per-file writes spread across all executor threads instead of
-      // running serially on one task (the round-1 compact-source lesson)
-      // executors rebuild the FS from the path URI's scheme plus the
-      // DRIVER's Hadoop conf (broadcast — a bare `new Configuration()`
-      // would drop driver-side fs settings such as object-store
-      // credentials on a real cluster)
-      val hconf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration))
-      Tables.documents(spark, sfDir).select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .foreachPartition { rows: Iterator[Row] =>
-          val p = new Path(dir)
-          val efs = p.getFileSystem(hconf.value.value)
-          rows.foreach { r =>
-            val out = efs.create(new Path(p, f"doc_${r.getLong(0)}%08d.txt"), true)
-            try out.write(r.getString(1).getBytes(StandardCharsets.UTF_8))
-            finally out.close()
-          }
-        }
-      fs.create(marker, true).close()
+  /** Per-task file handle handed out by [[writeFiles]]. */
+  private final class FileSink(fs: FileSystem, dir: Path) {
+    /** Create `dir/name`, stream `body` into it, close it (also when
+      * `body` throws). */
+    def create(name: String)(body: OutputStream => Unit): Unit = {
+      val out = fs.create(new Path(dir, name), true)
+      try body(out) finally out.close()
     }
-    dir
   }
+
+  /** THE executor-side file writer. `rows` are spread over
+    * `defaultParallelism` tasks (hash-partitioned on `keys` when given,
+    * round-robin otherwise — a parquet scan is often one compact
+    * partition, and one task writing every file serially wastes the
+    * executor threads). Each task resolves `dir`'s FileSystem from the
+    * path URI's scheme plus the DRIVER's broadcast Hadoop conf — a bare
+    * `new Configuration()` would drop driver-side fs settings such as
+    * object-store credentials on a real cluster — and hands `body` its
+    * rows and a [[FileSink]]. Per-task state (codec writers, formats)
+    * lives in `body`; file bytes stream to the FS, never buffered whole
+    * (compaction shards are sized for 128–512 MiB in production). */
+  private def writeFiles(dir: String, rows: DataFrame, keys: Column*)(
+      body: (Iterator[Row], FileSink) => Unit): Unit = {
+    val sc = rows.sparkSession.sparkContext
+    val hconf = sc.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(sc.hadoopConfiguration))
+    rows.repartition(sc.defaultParallelism, keys: _*)
+      .foreachPartition { part: Iterator[Row] =>
+        val p = new Path(dir)
+        body(part, new FileSink(p.getFileSystem(hconf.value.value), p))
+      }
+  }
+
+  /** A per-document file corpus: one `<prefix>_%08d.<ext>` file per
+    * `doc_id`. The name format is declared here once, for the writer
+    * ([[name]]) and the reader ([[scan]]). */
+  private[graft] final case class DocFiles(prefix: String, ext: String) {
+    def name(docId: Long): String = f"${prefix}_$docId%08d.$ext"
+
+    /** `binaryFile` scan of the corpus under `dir`: the source's `path`,
+      * `modificationTime`, `length` and `content` columns plus `doc_id`
+      * parsed from `path`. `length` is listing metadata, so a projection
+      * that drops `content` never reads file bytes. */
+    def scan(spark: SparkSession, dir: String): DataFrame =
+      spark.read.format("binaryFile")
+        .option("pathGlobFilter", s"*.$ext")
+        .load(dir)
+        .withColumn("doc_id",
+          regexp_extract(col("path"), s"${prefix}_(\\d+)\\.$ext", 1).cast("long"))
+  }
+
+  private def docTexts(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.documents(spark, sfDir).select("doc_id", "text")
+
+  private[graft] val textFiles = DocFiles("doc", "txt")
+
+  /** One UTF-8 `doc_<id>.txt` per document row, executor-written through
+    * the Hadoop FS resolved from the (possibly remote) root URI. */
+  def materializeDocFiles(spark: SparkSession, sfDir: String): String =
+    materializeOnce(spark, "docfiles", sfDir) { dir =>
+      writeFiles(dir, docTexts(spark, sfDir)) { (rows, sink) =>
+        rows.foreach { r =>
+          sink.create(textFiles.name(r.getLong(0)))(
+            _.write(r.getString(1).getBytes(StandardCharsets.UTF_8)))
+        }
+      }
+    }
+
+  private[graft] val wavFiles = DocFiles("au", "wav")
 
   /** One GENUINE RIFF/WAVE file per document row — the AUDIO half of the
     * multimodal fixture (round-9 verdict residual #6: images alone
     * satisfied "multimodal" only in the singular). 8-bit unsigned mono
     * PCM at 8 kHz whose samples tile the doc's UTF-8 bytes 16× (sample i
     * = byte `i mod n`), written with JDK `javax.sound.sampled` — zero
-    * external deps, same executor-side writer shape as the PNG fixture.
+    * external deps, through [[writeFiles]] like the PNG fixture.
     * WAV PCM is lossless and 8-bit unsigned stores each sample as its
     * literal byte, so a correct decoder recovers EXACTLY
     * `repeat(text, 16)`: duration, sample count, content digest and
     * sample sum are all SQL-expressible from `documents.text`. */
-  def materializeAudioFiles(spark: SparkSession, sfDir: String): String = {
-    val dir = cacheDir(spark, "wavfiles", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, "_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.mkdirs(root)
-      val hconf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration))
-      Tables.documents(spark, sfDir).select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .foreachPartition { rows: Iterator[Row] =>
-          val p = new Path(dir)
-          val efs = p.getFileSystem(hconf.value.value)
-          // 8 kHz, 8-bit, mono, unsigned, little-endian: 1 byte/frame —
-          // the format is a constant, constructed once per partition
-          val fmt = new javax.sound.sampled.AudioFormat(8000f, 8, 1, false, false)
-          rows.foreach { r =>
-            val bytes = r.getString(1).getBytes(StandardCharsets.UTF_8)
-            val n = bytes.length
-            val nSamples = n * 16
-            val pcm = new Array[Byte](nSamples)
-            var i = 0
-            while (i < nSamples) { pcm(i) = bytes(i % n); i += 1 }
-            val ais = new javax.sound.sampled.AudioInputStream(
-              new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
-            val out = efs.create(new Path(p, f"au_${r.getLong(0)}%08d.wav"), true)
-            try {
-              javax.sound.sampled.AudioSystem.write(ais,
-                javax.sound.sampled.AudioFileFormat.Type.WAVE, out); ()
-            } finally out.close()
+  def materializeAudioFiles(spark: SparkSession, sfDir: String): String =
+    materializeOnce(spark, "wavfiles", sfDir) { dir =>
+      writeFiles(dir, docTexts(spark, sfDir)) { (rows, sink) =>
+        // 8 kHz, 8-bit, mono, unsigned, little-endian: 1 byte/frame —
+        // the format is a constant, constructed once per partition
+        val fmt = new javax.sound.sampled.AudioFormat(8000f, 8, 1, false, false)
+        rows.foreach { r =>
+          val bytes = r.getString(1).getBytes(StandardCharsets.UTF_8)
+          val n = bytes.length
+          val nSamples = n * 16
+          val pcm = new Array[Byte](nSamples)
+          var i = 0
+          while (i < nSamples) { pcm(i) = bytes(i % n); i += 1 }
+          val ais = new javax.sound.sampled.AudioInputStream(
+            new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
+          sink.create(wavFiles.name(r.getLong(0))) { out =>
+            javax.sound.sampled.AudioSystem.write(ais,
+              javax.sound.sampled.AudioFileFormat.Type.WAVE, out); ()
           }
         }
-      fs.create(marker, true).close()
+      }
     }
-    dir
-  }
+
+  private[graft] val pngFiles = DocFiles("img", "png")
 
   /** One GENUINE grayscale PNG per document row — the multimodal fixture.
     * The image geometry and pixels are a deterministic function of the
@@ -196,61 +220,31 @@ object FileOps {
     * returns the true raster is fully oracle-checkable: PNG is lossless
     * and the fixture is ASCII, hence the decoded raster IS `repeat(text)`
     * truncated to w·h bytes — SQL-expressible in DuckDB. Encoded with JDK
-    * `javax.imageio` (zero external deps), executor-written through the
-    * broadcast Hadoop conf like every fixture writer here. */
-  def materializeImageFiles(spark: SparkSession, sfDir: String): String = {
-    val dir = cacheDir(spark, "imgfiles", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, "_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.mkdirs(root)
-      val hconf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration))
-      Tables.documents(spark, sfDir).select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .foreachPartition { rows: Iterator[Row] =>
-          val p = new Path(dir)
-          val efs = p.getFileSystem(hconf.value.value)
-          rows.foreach { r =>
-            val bytes = r.getString(1).getBytes(StandardCharsets.UTF_8)
-            val n = bytes.length
-            val w = (n % 13) + 4
-            val h = (n / 13) % 11 + 4
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            val raster = img.getRaster
-            var i = 0
-            while (i < w * h) {
-              raster.setSample(i % w, i / w, 0, bytes(i % n) & 0xff)
-              i += 1
-            }
-            val out = efs.create(new Path(p, f"img_${r.getLong(0)}%08d.png"), true)
-            try { javax.imageio.ImageIO.write(img, "png", out); () }
-            finally out.close()
+    * `javax.imageio` (zero external deps), executor-written through
+    * [[writeFiles]] like every per-row fixture here. */
+  def materializeImageFiles(spark: SparkSession, sfDir: String): String =
+    materializeOnce(spark, "imgfiles", sfDir) { dir =>
+      writeFiles(dir, docTexts(spark, sfDir)) { (rows, sink) =>
+        rows.foreach { r =>
+          val bytes = r.getString(1).getBytes(StandardCharsets.UTF_8)
+          val n = bytes.length
+          val w = (n % 13) + 4
+          val h = (n / 13) % 11 + 4
+          val img = new java.awt.image.BufferedImage(
+            w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+          val raster = img.getRaster
+          var i = 0
+          while (i < w * h) {
+            raster.setSample(i % w, i / w, 0, bytes(i % n) & 0xff)
+            i += 1
+          }
+          sink.create(pngFiles.name(r.getLong(0))) { out =>
+            javax.imageio.ImageIO.write(img, "png", out); ()
           }
         }
-      fs.create(marker, true).close()
+      }
     }
-    dir
-  }
 
-  /** One GENUINE multi-frame animated GIF per document row — the
-    * FRAME-SERIES (video-like) modality completing the multimodal story
-    * (round-10 verdict #5: a multi-frame CONTAINER the JDK can really
-    * decode, not single-frame bytes sliced by convention). Geometry and
-    * pixels are a deterministic function of the doc's UTF-8 bytes:
-    * width `(n mod 11)+4`, height `((n div 11) mod 7)+4`, frame count
-    * `(n mod 5)+3`, and frame f's pixel i = byte `(f·w·h + i) mod n` — a
-    * rolling scan of the document, so consecutive frames differ the way
-    * video frames do. GIF stores ≤256 colors losslessly and the
-    * 256-entry gray palette holds every 8-bit value, so a correct
-    * demuxer+decoder recovers EXACTLY `repeat(text)` truncated to
-    * `nFrames·w·h` when frames are concatenated in index order —
-    * SQL-expressible in DuckDB frame by frame. Encoded with JDK
-    * `javax.imageio` GIF `writeToSequence` (zero external deps), the
-    * same executor-side writer shape as the PNG/WAV fixtures. */
   /** The video fixture's geometry, one place for writer + specs: width,
     * height and frame count are a deterministic function of the doc's
     * byte length `n`. */
@@ -315,80 +309,73 @@ object FileOps {
     meta
   }
 
+  private[graft] val gifFiles = DocFiles("vid", "gif")
+
+  /** One GENUINE multi-frame animated GIF per document row — the
+    * FRAME-SERIES (video-like) modality completing the multimodal story
+    * (round-10 verdict #5: a multi-frame CONTAINER the JDK can really
+    * decode, not single-frame bytes sliced by convention). Geometry and
+    * pixels are a deterministic function of the doc's UTF-8 bytes:
+    * width `(n mod 11)+4`, height `((n div 11) mod 7)+4`, frame count
+    * `(n mod 5)+3`, and frame f's pixel i = byte `(f·w·h + i) mod n` — a
+    * rolling scan of the document, so consecutive frames differ the way
+    * video frames do. GIF stores ≤256 colors losslessly and the
+    * 256-entry gray palette holds every 8-bit value, so a correct
+    * demuxer+decoder recovers EXACTLY `repeat(text)` truncated to
+    * `nFrames·w·h` when frames are concatenated in index order —
+    * SQL-expressible in DuckDB frame by frame. Encoded with JDK
+    * `javax.imageio` GIF `writeToSequence` (zero external deps), through
+    * [[writeFiles]] like the PNG/WAV fixtures. */
   def materializeVideoFiles(spark: SparkSession, sfDir: String): String =
     // kind bumped giffiles -> giffiles_ni when the writer switched to
     // explicit non-interlaced metadata: same geometry, different bytes,
     // so warm caches of the interlaced (corrupt at h=4) fixtures must
     // not be reused
     materializeOnce(spark, "giffiles_ni", sfDir) { dir =>
-      val hconf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration))
-      Tables.documents(spark, sfDir).select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .foreachPartition { rows: Iterator[Row] =>
-          val p = new Path(dir)
-          val efs = p.getFileSystem(hconf.value.value)
-          // one GIF writer per partition (ImageIO plugin dispatch is not
-          // free); output is re-pointed per file
-          val writer = javax.imageio.ImageIO
-            .getImageWritersByFormatName("gif").next()
-          try rows.foreach { r =>
-            val bytes = r.getString(1).getBytes(StandardCharsets.UTF_8)
-            val (w, h, nFrames) = videoGeometry(bytes.length)
-            val out = efs.create(new Path(p, f"vid_${r.getLong(0)}%08d.gif"), true)
-            try encodeGifFrames(writer, bytes, w, h, nFrames, out)
-            finally out.close()
-          } finally writer.dispose()
-        }
+      writeFiles(dir, docTexts(spark, sfDir)) { (rows, sink) =>
+        // one GIF writer per partition (ImageIO plugin dispatch is not
+        // free); output is re-pointed per file
+        val writer = javax.imageio.ImageIO
+          .getImageWritersByFormatName("gif").next()
+        try rows.foreach { r =>
+          val bytes = r.getString(1).getBytes(StandardCharsets.UTF_8)
+          val (w, h, nFrames) = videoGeometry(bytes.length)
+          sink.create(gifFiles.name(r.getLong(0)))(
+            encodeGifFrames(writer, bytes, w, h, nFrames, _))
+        } finally writer.dispose()
+      }
     }
 
-  /** O4 per-file ingest: binaryFile scan, provenance key parsed from
-    * `input_file_name()`, one output row per file with its size (from
-    * file metadata — content untouched) and content digest. */
-  def fileIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = materializeDocFiles(spark, sfDir)
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.txt")
-      .load(dir)
-      .select(
-        regexp_extract(input_file_name(), "doc_(\\d+)\\.txt", 1).cast("long").as("doc_id"),
-        col("length").as("n_bytes"),
-        md5(col("content")).as("digest"))
+  /** O4 per-file ingest: binaryFile scan, provenance key parsed from the
+    * file name, one output row per file with its size (from file
+    * metadata — content untouched) and content digest. */
+  def fileIngest(spark: SparkSession, sfDir: String): DataFrame =
+    textFiles.scan(spark, materializeDocFiles(spark, sfDir))
+      .select(col("doc_id"), col("length").as("n_bytes"), md5(col("content")).as("digest"))
       .orderBy("doc_id")
-  }
 
   /** O7 filename-keyed gather: files grouped by a key derived ONLY from
     * their names (shard = doc_id % 10) — the reference's
     * one-reducer-per-file-group topology. Sizes come from the listing's
     * metadata column, so the aggregate never reads file contents. */
-  def fileShardStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = materializeDocFiles(spark, sfDir)
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.txt")
-      .load(dir)
-      .select(
-        (regexp_extract(input_file_name(), "doc_(\\d+)\\.txt", 1).cast("long") % 10).as("shard"),
-        col("length").as("n_bytes"))
+  def fileShardStats(spark: SparkSession, sfDir: String): DataFrame =
+    textFiles.scan(spark, materializeDocFiles(spark, sfDir))
+      .select((col("doc_id") % 10).as("shard"), col("length").as("n_bytes"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_files"), sum("n_bytes").as("total_bytes"))
       .orderBy("shard")
-  }
 
   /** CSV sink + source round-trip (O4/O15 source-format breadth): orders
-    * egress to partitioned CSV (executor-parallel, idempotent behind the
-    * sink's own _SUCCESS marker), then re-ingest with an EXPLICIT schema —
+    * egress to partitioned CSV (executor-parallel, built once behind
+    * [[materializeOnce]]), then re-ingest with an EXPLICIT schema —
     * never inference, which would re-read the data — and aggregate. The
     * oracle recomputes from the parquet table, so the round-trip proves
     * both directions (write fidelity and typed parse). */
   def csvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = cacheDir(spark, "csv", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root, "_SUCCESS"))) {
+    val dir = materializeOnce(spark, "csv", sfDir) { d =>
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
-        .write.mode("overwrite").option("header", "true").csv(dir)
+        .write.mode("overwrite").option("header", "true").csv(d)
     }
     spark.read
       .schema("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE")
@@ -401,19 +388,16 @@ object FileOps {
 
   /** Fixed-width fixture: orders rendered as one fixed-width text line
     * per row (the writer half lives here so the layout string is shared
-    * with the reader spec below). Idempotent behind the sink's own
-    * _SUCCESS marker, like the CSV/JSON twins. */
+    * with the reader spec below). Built once behind [[materializeOnce]],
+    * like the CSV/JSON twins. */
   private[graft] val fixedWidthSpec =
     "o_orderkey:0:12:long,o_custkey:12:12:long,o_orderstatus:24:1:string," +
       "o_totalprice:25:14:double,o_orderpriority:39:15:string," +
       "o_orderdate:54:19:timestamp"
 
   private[graft] def materializeFixedWidthOrders(
-      spark: SparkSession, sfDir: String): String = {
-    val dir = cacheDir(spark, "fixedwidth", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root, "_SUCCESS"))) {
+      spark: SparkSession, sfDir: String): String =
+    materializeOnce(spark, "fixedwidth", sfDir) { dir =>
       Tables.orders(spark, sfDir)
         .select(format_string("%12d%12d%1s%14.2f%-15s%19s",
           col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -421,8 +405,6 @@ object FileOps {
           date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss")).as("value"))
         .write.mode("overwrite").text(dir)
     }
-    dir
-  }
 
   /** Custom DataSource V2 ingest (O4 source breadth; the connector tier
     * of the custom-operator ladder): orders round-tripped through the
@@ -454,18 +436,15 @@ object FileOps {
   /** Full DSv2 round-trip through the connector's OWN write path
     * (BATCH_WRITE + TRUNCATE, `graft.sources.FixedWidthWriteBuilder`):
     * orders egress via `df.write.format(...).mode("overwrite")` — each
-    * task streams one uniquely-named shard file, job commit drops the
-    * `_SUCCESS` marker the idempotence gate reuses — then re-ingest
+    * task streams one uniquely-named shard file, job commit drops its
+    * `_SUCCESS` marker, [[materializeOnce]] its own — then re-ingest
     * through the same connector's scan and aggregate by priority. The
     * oracle recomputes from the source parquet, so writer rendering AND
     * reader parsing sit under the hash gate together; the independent
     * `format_string`-rendered fixture of [[fixedwidthScan]] keeps the
     * reader honest against a non-connector writer (shared-bug guard). */
   def fixedwidthRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = cacheDir(spark, "fixedwidth_dsv2", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root, "_SUCCESS"))) {
+    val dir = materializeOnce(spark, "fixedwidth_dsv2", sfDir) { d =>
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderpriority"),
@@ -473,7 +452,7 @@ object FileOps {
         .write.format("graft.sources.FixedWidthDataSource")
         .option("fields", fixedWidthSpec)
         .mode("overwrite")
-        .save(dir)
+        .save(d)
     }
     spark.read.format("graft.sources.FixedWidthDataSource")
       .option("fields", fixedWidthSpec)
@@ -494,13 +473,10 @@ object FileOps {
     * by brand. Oracle recomputes from the parquet table — both directions
     * (serialization fidelity, typed parse) sit under the hash gate. */
   def jsonRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = cacheDir(spark, "json", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root, "_SUCCESS"))) {
+    val dir = materializeOnce(spark, "json", sfDir) { d =>
       Tables.part(spark, sfDir)
         .select(col("p_partkey"), col("p_brand"), col("p_size"), col("p_retailprice"))
-        .write.mode("overwrite").json(dir)
+        .write.mode("overwrite").json(d)
     }
     spark.read
       .schema("p_partkey BIGINT, p_brand STRING, p_size BIGINT, p_retailprice DOUBLE")
@@ -520,14 +496,11 @@ object FileOps {
     * IO decision, not a plan decision. Oracle recomputes from the source
     * parquet — write fidelity and typed re-parse both gated. */
   def orcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = cacheDir(spark, "orc", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root, "_SUCCESS"))) {
+    val dir = materializeOnce(spark, "orc", sfDir) { d =>
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
-        .write.mode("overwrite").orc(dir)
+        .write.mode("overwrite").orc(d)
     }
     spark.read
       .schema("l_orderkey BIGINT, l_returnflag STRING, l_quantity DOUBLE, l_extendedprice DOUBLE")
@@ -578,50 +551,40 @@ object FileOps {
       // marker is only created after this block succeeds)
       val root = new Path(d)
       val dfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (dfs.exists(root))
-        dfs.listStatus(root).filter(_.getPath.getName.endsWith(".avro"))
-          .foreach(s => dfs.delete(s.getPath, false))
-      val hconf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration))
+      dfs.listStatus(root).filter(_.getPath.getName.endsWith(".avro"))
+        .foreach(s => dfs.delete(s.getPath, false))
       val schemaJson = avroCustomerSchema
-      Tables.customer(spark, sfDir)
+      val customers = Tables.customer(spark, sfDir)
         .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
           col("c_acctbal"))
-        .repartition(spark.sparkContext.defaultParallelism, col("c_custkey"))
-        .foreachPartition { rows: Iterator[Row] =>
-          if (rows.hasNext) {
-            val schema = new org.apache.avro.Schema.Parser().parse(schemaJson)
-            val p = new Path(d)
-            val efs = p.getFileSystem(hconf.value.value)
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val out = efs.create(new Path(p, f"cust_$pid%05d.avro"), true)
-            try {
-              val w = new org.apache.avro.file.DataFileWriter(
-                new org.apache.avro.generic.GenericDatumWriter[
-                  org.apache.avro.generic.GenericRecord](schema))
-              // explicit sync marker: DataFileWriter otherwise generates
-              // a RANDOM 16-byte marker per file, which would make the
-              // container bytes differ run to run — with it pinned, the
-              // bytes really are a pure function of the rows
-              val sync = java.security.MessageDigest.getInstance("MD5")
-                .digest("graft-avro-sync".getBytes("UTF-8"))
-              w.create(schema, out, sync) // takes ownership of the stream
-              try rows.foreach { r =>
-                val rec = new org.apache.avro.generic.GenericData.Record(schema)
-                rec.put("c_custkey", r.getLong(0))
-                rec.put("c_nationkey", r.getInt(1))
-                rec.put("c_mktsegment", r.getString(2))
-                rec.put("c_acctbal", r.getDouble(3))
-                w.append(rec)
-              } finally w.close()
-            } catch {
-              case t: Throwable =>
-                try out.close() catch { case _: Throwable => () }
-                throw t
+      writeFiles(d, customers, col("c_custkey")) { (rows, sink) =>
+        if (rows.hasNext) {
+          val schema = new org.apache.avro.Schema.Parser().parse(schemaJson)
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          sink.create(f"cust_$pid%05d.avro") { out =>
+            val w = new org.apache.avro.file.DataFileWriter(
+              new org.apache.avro.generic.GenericDatumWriter[
+                org.apache.avro.generic.GenericRecord](schema))
+            // explicit sync marker: DataFileWriter otherwise generates
+            // a RANDOM 16-byte marker per file, which would make the
+            // container bytes differ run to run — with it pinned, the
+            // bytes really are a pure function of the rows
+            val sync = java.security.MessageDigest.getInstance("MD5")
+              .digest("graft-avro-sync".getBytes("UTF-8"))
+            w.create(schema, out, sync)
+            rows.foreach { r =>
+              val rec = new org.apache.avro.generic.GenericData.Record(schema)
+              rec.put("c_custkey", r.getLong(0))
+              rec.put("c_nationkey", r.getInt(1))
+              rec.put("c_mktsegment", r.getString(2))
+              rec.put("c_acctbal", r.getDouble(3))
+              w.append(rec)
             }
+            // flush, not close: the sink owns and closes the stream
+            w.flush()
           }
         }
+      }
     }
     val schemaJson = avroCustomerSchema
     spark.read.format("binaryFile")
@@ -663,13 +626,10 @@ object FileOps {
     * nation. Proves the full breadth of text source formats (CSV, JSON
     * lines, XML) under one oracle pattern. */
   def xmlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = cacheDir(spark, "xml", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root, "_SUCCESS"))) {
+    val dir = materializeOnce(spark, "xml", sfDir) { d =>
       Tables.supplier(spark, sfDir)
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
-        .write.mode("overwrite").option("rowTag", "supplier").xml(dir)
+        .write.mode("overwrite").option("rowTag", "supplier").xml(d)
     }
     spark.read
       .schema("s_suppkey BIGINT, s_nationkey BIGINT, s_acctbal DOUBLE")
@@ -680,17 +640,6 @@ object FileOps {
       .orderBy("s_nationkey")
   }
 
-  /** Partition-pruned scan — the single biggest scan lever at 100 TB,
-    * where data lives hive-partitioned by date/tenant/status and a query
-    * touching one partition must not list-or-read the rest. `orders` is
-    * egressed ONCE into a `o_orderstatus=X/` directory layout (idempotent
-    * behind the sink's own `_SUCCESS` marker, same warm-dir contract as
-    * the csv/json round-trips), then re-read with a partition predicate.
-    * The predicate resolves against directory names during file listing —
-    * it shows as `PartitionFilters` on the scan, pinned by SinkSpec — so
-    * files of non-matching partitions are never opened at all; the oracle
-    * recomputes the aggregate from the source parquet, proving the
-    * partitioned egress lost nothing. */
   /** The hive-partitioned orders copy shared by [[partitionedPrune]] and
     * [[dppJoin]]. */
   private def materializeOrdersPartitioned(spark: SparkSession, sfDir: String): String =
@@ -701,6 +650,17 @@ object FileOps {
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
     }
 
+  /** Partition-pruned scan — the single biggest scan lever at 100 TB,
+    * where data lives hive-partitioned by date/tenant/status and a query
+    * touching one partition must not list-or-read the rest. `orders` is
+    * egressed ONCE into a `o_orderstatus=X/` directory layout (built once
+    * behind [[materializeOnce]], same warm-dir contract as the csv/json
+    * round-trips), then re-read with a partition predicate.
+    * The predicate resolves against directory names during file listing —
+    * it shows as `PartitionFilters` on the scan, pinned by SinkSpec — so
+    * files of non-matching partitions are never opened at all; the oracle
+    * recomputes the aggregate from the source parquet, proving the
+    * partitioned egress lost nothing. */
   def partitionedPrune(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = materializeOrdersPartitioned(spark, sfDir)
     spark.read.parquet(dir)
@@ -740,30 +700,17 @@ object FileOps {
     * `floor(bytes_before / target)`; each shard is rewritten as ONE file
     * concatenating its docs in doc_id order. Content-preserving by
     * construction — no doc bytes are altered, only re-grouped.
-    * Idempotent behind a `_SUCCESS` marker like every fixture dir. */
+    * Built once behind [[materializeOnce]] like every fixture dir. */
   def materializeCompactFiles(spark: SparkSession, sfDir: String): String = {
     val src = materializeDocFiles(spark, sfDir)
     // cache keyed on the packing geometry too: a conf retune must land in
     // a fresh dir, not reuse shards packed under the old constants
-    val dir = cacheDir(spark,
-      s"compact_t${compactTarget(spark)}_g${compactGroupDocs(spark)}", sfDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, "_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.mkdirs(root)
+    materializeOnce(spark,
+        s"compact_t${compactTarget(spark)}_g${compactGroupDocs(spark)}", sfDir) { dir =>
       val w = Window.partitionBy("grp").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val hconf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration))
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.txt")
-        .load(src)
-        .select(
-          regexp_extract(input_file_name(), "doc_(\\d+)\\.txt", 1)
-            .cast("long").as("doc_id"),
-          col("content"), col("length").as("n_bytes"))
+      val bins = textFiles.scan(spark, src)
+        .select(col("doc_id"), col("content"), col("length").as("n_bytes"))
         .withColumn("grp", floor(col("doc_id") / compactGroupDocs(spark)))
         .withColumn("bin", format_string("g%03d_b%03d", col("grp"),
           (coalesce(sum(col("n_bytes")).over(w), lit(0L)) / compactTarget(spark))
@@ -771,19 +718,13 @@ object FileOps {
         .groupBy("bin")
         .agg(sort_array(collect_list(struct(col("doc_id"), col("content"))))
           .as("docs"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .foreachPartition { rows: Iterator[Row] =>
-          val p = new Path(dir)
-          val efs = p.getFileSystem(hconf.value.value)
-          rows.foreach { r =>
-            val out = efs.create(new Path(p, s"part_${r.getString(0)}.bin"), true)
-            try r.getSeq[Row](1).foreach(d => out.write(d.getAs[Array[Byte]](1)))
-            finally out.close()
-          }
+      writeFiles(dir, bins) { (rows, sink) =>
+        rows.foreach { r =>
+          sink.create(s"part_${r.getString(0)}.bin")(out =>
+            r.getSeq[Row](1).foreach(d => out.write(d.getAs[Array[Byte]](1))))
         }
-      fs.create(marker, true).close()
+      }
     }
-    dir
   }
 
   /** Registry face of the compaction: RE-READS the compacted shards

@@ -61,27 +61,20 @@ object MultiModalOps {
         md5(col("media")).as("digest"))
       .orderBy("doc_id")
 
+  /** (doc_id, media) over one per-document corpus: the shared
+    * [[FileOps.DocFiles.scan]] with the file bytes as `media`. */
+  private def fileMedia(spark: SparkSession, files: FileOps.DocFiles, dir: String): DataFrame =
+    files.scan(spark, dir).select(col("doc_id"), col("content").as("media"))
+
   /** Real file bytes → (doc_id, media) — the ingest half of the decode
     * path: a `binaryFile` scan of the per-doc files with the provenance
     * key parsed from the path. */
-  private def mediaBytes(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = FileOps.materializeDocFiles(spark, sfDir)
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.txt")
-      .load(dir)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.txt", 1).cast("long").as("doc_id"),
-        col("content").as("media"))
-  }
+  private def mediaBytes(spark: SparkSession, sfDir: String): DataFrame =
+    fileMedia(spark, FileOps.textFiles, FileOps.materializeDocFiles(spark, sfDir))
 
   /** Real PNG bytes → (doc_id, media): the image half of the fixture. */
-  private def imageBytes(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = FileOps.materializeImageFiles(spark, sfDir)
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png")
-      .load(dir)
-      .select(regexp_extract(col("path"), "img_(\\d+)\\.png", 1).cast("long").as("doc_id"),
-        col("content").as("media"))
-  }
+  private def imageBytes(spark: SparkSession, sfDir: String): DataFrame =
+    fileMedia(spark, FileOps.pngFiles, FileOps.materializeImageFiles(spark, sfDir))
 
   private def decoded(spark: SparkSession, sfDir: String): DataFrame =
     decodePngImages(spark, imageBytes(spark, sfDir))
@@ -459,14 +452,8 @@ object MultiModalOps {
       pcm_digest: String, pcm_sum: Long)
 
   /** Real WAV bytes → (doc_id, media): the audio half of the fixture. */
-  private def audioBytes(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = FileOps.materializeAudioFiles(spark, sfDir)
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.wav")
-      .load(dir)
-      .select(regexp_extract(col("path"), "au_(\\d+)\\.wav", 1).cast("long").as("doc_id"),
-        col("content").as("media"))
-  }
+  private def audioBytes(spark: SparkSession, sfDir: String): DataFrame =
+    fileMedia(spark, FileOps.wavFiles, FileOps.materializeAudioFiles(spark, sfDir))
 
   private def audioDecoded(spark: SparkSession, sfDir: String): DataFrame =
     decodeClips(spark, audioBytes(spark, sfDir))
@@ -706,14 +693,8 @@ object MultiModalOps {
 
   /** Real animated-GIF bytes → (doc_id, media): the frame-series half of
     * the fixture. */
-  private def videoBytes(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = FileOps.materializeVideoFiles(spark, sfDir)
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gif")
-      .load(dir)
-      .select(regexp_extract(col("path"), "vid_(\\d+)\\.gif", 1).cast("long").as("doc_id"),
-        col("content").as("media"))
-  }
+  private def videoBytes(spark: SparkSession, sfDir: String): DataFrame =
+    fileMedia(spark, FileOps.gifFiles, FileOps.materializeVideoFiles(spark, sfDir))
 
   /** VIDEO-shaped decode stage: genuine multi-frame GIF bytes → frame
     * count / geometry / whole-clip raster digest via `mapPartitions`,

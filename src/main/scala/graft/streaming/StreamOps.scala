@@ -350,8 +350,9 @@ object StreamOps {
     * precondition for OBSERVING `dropDuplicatesWithinWatermark` state
     * eviction rather than asserting it by construction (the single-batch
     * replay in [[dedupWithinWatermarkStream]]'s spec never moves the
-    * watermark off epoch). Idempotent behind a `_SUCCESS` marker; the
-    * staged dir lives under [[graft.ops.FileOps.filesRoot]]. */
+    * watermark off epoch). Built once behind
+    * [[graft.ops.FileOps.materializeOnce]]; the staged dir lives under
+    * [[graft.ops.FileOps.filesRoot]]. */
   def stageTimeOrderedEventFiles(spark: SparkSession, sfDir: String,
       nFiles: Int,
       cols: Seq[String] = Seq("event_id", "ts", "event_type")): String = {

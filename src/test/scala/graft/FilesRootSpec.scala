@@ -3,30 +3,42 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import graft.ops.FileOps
+
 /** The file-fixture root (`spark.graft.files.root`) must be honored end
   * to end — the cluster-deployment requirement: on a real cluster the
   * root points at storage all nodes share (HDFS / object store), so the
-  * driver-side `_SUCCESS` probe, the executor-side per-doc writes, and
+  * driver-side marker probe, the executor-side per-doc writes, and
   * the binaryFile re-scan all hit the same filesystem. Verified here by
   * pointing the root at a fresh non-default directory and checking the
   * queries produce identical results from it. */
 class FilesRootSpec extends SparkSpec {
 
+  private def rows(name: String) = q(name).collect().map(_.toSeq).toSeq
+
   test("file/mm fixture queries honor an overridden spark.graft.files.root") {
-    val defaultIngest = q("file_ingest").collect().map(_.toSeq).toSet
+    // every writer family: the per-doc text corpus, the png/wav/gif media
+    // corpora, and Spark-committer egress (csv, json, orc)
+    val queries = Seq("file_ingest", "mm_decode", "mm_audio_decode",
+      "mm_video_decode", "orc_roundtrip")
+    val atDefault = queries.map(n => n -> rows(n)).toMap
     val root = Files.createTempDirectory("graft_root_override").toFile
     spark.conf.set("spark.graft.files.root", "file:" + root.getAbsolutePath)
     try {
-      val overridden = q("file_ingest").collect().map(_.toSeq).toSet
-      assert(overridden === defaultIngest,
-        "file_ingest differs when materialized under an overridden root")
-      // the corpus actually landed under the override (not the default tmpdir)
-      val docDirs = root.listFiles().filter(_.getName.startsWith("graft_docfiles_"))
-      assert(docDirs.nonEmpty, s"no doc corpus under override root $root")
-      assert(docDirs.head.listFiles().exists(_.getName.endsWith(".txt")),
-        "override root contains no per-doc files")
-      assert(docDirs.head.listFiles().exists(_.getName == "_SUCCESS"),
-        "marker missing under override root")
+      queries.foreach { n =>
+        assert(rows(n) === atDefault(n), s"$n differs when materialized under an overridden root")
+      }
+      // each corpus actually landed under the override (not the default
+      // tmpdir), complete behind the materializeOnce marker
+      def dirOf(kind: String): File =
+        root.listFiles().find(_.getName.startsWith(s"graft_${kind}_"))
+          .getOrElse(fail(s"no $kind dir under override root $root"))
+      Seq("docfiles" -> ".txt", "imgfiles" -> ".png", "wavfiles" -> ".wav",
+        "giffiles_ni" -> ".gif", "orc" -> ".orc").foreach { case (kind, ext) =>
+        val files = dirOf(kind).listFiles()
+        assert(files.exists(_.getName.endsWith(ext)), s"override root holds no $ext files for $kind")
+        assert(files.exists(_.getName == FileOps.DoneMarker), s"$kind marker missing under override root")
+      }
       // the csv/json egress caches follow the root too
       assert(q("csv_roundtrip").count() > 0)
       assert(q("json_roundtrip").count() > 0)

@@ -973,4 +973,16 @@ class PlanAuditSpec extends SparkSpec {
     assert(!"Sort \\[src#".r.findFirstIn(plan).isDefined,
       s"edge table re-sorted inside the iteration loop:\n$plan")
   }
+
+  test("file_shard_stats scans file listing metadata only; file_ingest reads content") {
+    def readSchema(name: String): String = "ReadSchema: struct<([^>]*)>".r
+      .findFirstMatchIn(planOf(name)).map(_.group(1)).getOrElse(fail(s"no ReadSchema for $name"))
+    // sizes come from the listing's `length` column: no file bytes read
+    val stats = readSchema("file_shard_stats")
+    assert(!stats.contains("content"), s"file_shard_stats reads file bytes: $stats")
+    assert(stats.contains("length"), s"file_shard_stats lost the length column: $stats")
+    // the md5 digest needs the bytes
+    val ingest = readSchema("file_ingest")
+    assert(ingest.contains("content"), s"file_ingest no longer reads content: $ingest")
+  }
 }
