@@ -102,8 +102,12 @@ object GraftConf {
 
   /** Generation-subdir count above which a post-run band-store
     * compaction fires automatically (`StreamOps.maybeCompactBandStore`).
-    * Each incremental-dedup micro-batch appends one generation; the
-    * threshold bounds per-batch listing/open-file cost at O(maxGen). */
+    * It covers the three keep-first near-dup stores — the minhash band
+    * store (`incrementalDedupInto`), the semantic store and the phash
+    * store — whose micro-batches each append one generation; the
+    * threshold bounds per-batch listing/open-file cost at O(maxGen). The
+    * counter and index stores stay off it (compaction's `distinct` would
+    * merge equal counter rows of different batches). */
   def bandstoreMaxGenerations(spark: SparkSession): Int =
     spark.conf.get("spark.graft.bandstore.maxGenerations", "64").toInt
   /** Shard count a band-store compaction rewrites to. */

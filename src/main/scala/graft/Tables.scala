@@ -94,16 +94,23 @@ object Tables {
     * make the deferred action fail on the NANOS column. Harness session
     * builders (Verify/Bench/tests) also set it up front; this set is the
     * safety net for sessions handed in by the driver.
+    *
+    * The batch table and [[graft.streaming.StreamOps.eventsStream]] both
+    * come through here; `load` is by-name, so it reads (and peeks its
+    * schema) only after the conf is set.
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def withEventsTs(spark: SparkSession)(load: => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // schema cached AFTER the conf set, so the cached entry is always the
-    // nanosAsLong-shaped one every harness session reads with
-    val df = read(spark, p(sfDir, "events"))
+    val df = load
     if (df.schema("ts").dataType == LongType)
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else df
   }
+
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    // schema cached AFTER the conf set, so the cached entry is always the
+    // nanosAsLong-shaped one every harness session reads with
+    withEventsTs(spark)(read(spark, p(sfDir, "events")))
 }
 
 /** Determinism helpers for float aggregates (SURVEY.md §5.1, FIXTURES.md).

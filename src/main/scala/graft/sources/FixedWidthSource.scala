@@ -11,6 +11,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -19,6 +21,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** A batch DataSource V2 for FIXED-WIDTH text files — the mainframe /
   * COBOL-copybook layout Spark has no native reader for (O4 source
@@ -90,6 +93,18 @@ object FixedWidth {
       case "timestamp" => TimestampNTZType
       case other       => throw new IllegalArgumentException(s"type $other")
     }, nullable = true)))
+
+  /** The session's Hadoop conf, for the driver-side FileSystem lookups
+    * (listing, truncate, job commit/abort): a bare `new Configuration()`
+    * would drop settings made on the session, such as object-store
+    * credentials or a custom scheme's `fs.<scheme>.impl`. */
+  private[sources] def sessionConf: Configuration =
+    SparkSession.active.sparkContext.hadoopConfiguration
+
+  /** [[sessionConf]] broadcast for the executor-side reader and writer
+    * tasks (the `FileOps.writeFiles` idiom). */
+  private[sources] def broadcastConf(): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(sessionConf))
 
   /** Total line length: fields may leave gaps; gaps render as spaces. */
   def lineLen(fields: Seq[Field]): Int = fields.map(f => f.start + f.len).max
@@ -183,7 +198,7 @@ class FixedWidthScan(
     * metadata only; bytes are first touched by executors. */
   private lazy val dataFiles = {
     val root = new Path(path)
-    val fs = root.getFileSystem(new Configuration())
+    val fs = root.getFileSystem(FixedWidth.sessionConf)
     fs.listStatus(root)
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
       .sortBy(_.getPath.getName)
@@ -223,18 +238,19 @@ class FixedWidthScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FixedWidthReaderFactory(required)
+    new FixedWidthReaderFactory(required, FixedWidth.broadcastConf())
 }
 
 case class FixedWidthFilePartition(file: String) extends InputPartition
 
-class FixedWidthReaderFactory(required: Seq[FixedWidth.Field])
+class FixedWidthReaderFactory(
+    required: Seq[FixedWidth.Field], hconf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[FixedWidthFilePartition].file
     new PartitionReader[InternalRow] {
       private val p = new Path(file)
-      private val in = p.getFileSystem(new Configuration()).open(p)
+      private val in = p.getFileSystem(hconf.value.value).open(p)
       private val reader =
         new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
       private var line: String = _
@@ -283,7 +299,7 @@ class FixedWidthBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val root = new Path(path)
-    val fs = root.getFileSystem(new Configuration())
+    val fs = root.getFileSystem(FixedWidth.sessionConf)
     if (truncate && fs.exists(root)) {
       fs.listStatus(root).filter(_.isFile)
         .foreach(s => fs.delete(s.getPath, false))
@@ -291,17 +307,17 @@ class FixedWidthBatchWrite(
     fs.mkdirs(root)
     // splice df ordinals onto the layout fields once, driver-side
     val ordinals = fields.map(f => dfSchema.fieldIndex(f.name))
-    new FixedWidthWriterFactory(path, fields, ordinals)
+    new FixedWidthWriterFactory(path, fields, ordinals, FixedWidth.broadcastConf())
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
-    val fs = root.getFileSystem(new Configuration())
+    val fs = root.getFileSystem(FixedWidth.sessionConf)
     fs.create(new Path(root, "_SUCCESS"), true).close()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(new Configuration())
+    val fs = new Path(path).getFileSystem(FixedWidth.sessionConf)
     messages.collect { case FixedWidthCommit(file) =>
       fs.delete(new Path(file), false)
     }
@@ -311,12 +327,13 @@ class FixedWidthBatchWrite(
 case class FixedWidthCommit(file: String) extends WriterCommitMessage
 
 class FixedWidthWriterFactory(
-    path: String, fields: Seq[FixedWidth.Field], ordinals: Seq[Int])
+    path: String, fields: Seq[FixedWidth.Field], ordinals: Seq[Int],
+    hconf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val file = new Path(path, f"part-$partitionId%05d-$taskId.fw")
-    val fs = file.getFileSystem(new Configuration())
+    val fs = file.getFileSystem(hconf.value.value)
     val out = fs.create(file, true)
     val width = FixedWidth.lineLen(fields)
     val types = FixedWidth.schemaOf(fields).fields.map(_.dataType)

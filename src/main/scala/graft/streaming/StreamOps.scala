@@ -1,18 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface.
+/** Structured Streaming surface, in two shapes.
   *
   * The reference is a one-shot batch job (SURVEY.md §2c — no streaming
   * anywhere in `Program.cs:96-159`), so nothing here is required for
   * parity; it exists because a 100 TB ingestion pipeline runs these same
-  * operators continuously. Each op is the streaming twin of a batch query
-  * in [[graft.ops.TimeOps]], sharing semantics so the specs can replay
-  * the fixture parquet through `readStream` and assert equality with the
-  * batch answer.
+  * operators continuously.
+  *
+  *  - Stateful twins: windows, sessions, dedup and joins, each the
+  *    streaming twin of a batch query in [[graft.ops.TimeOps]], sharing
+  *    semantics so the specs can replay the fixture parquet through
+  *    `readStream` and assert equality with the batch answer.
+  *  - File-replay stores: staged files replayed one per micro-batch on
+  *    the one [[replay]] driver — the reference's one-map-task-per-file
+  *    pipeline (`Program.cs:332-349`) run continuously, reduced on read.
+  *    A store is a per-batch transform: an idempotent-by-batch-id delta
+  *    ([[maintain]]), the keep-first near-dup rule on top of it
+  *    ([[keepFirstInto]]), or a generation swap ([[replayFold]]).
   *
   * Scale notes: windowed aggregation state is bounded by the watermark
   * (late data beyond 1 hour is dropped, state for closed windows is
@@ -23,17 +31,15 @@ object StreamOps {
 
   /** Streaming source over the fixture events table: schema inferred from
     * a batch peek (streaming reads need an explicit schema), nanosecond
-    * timestamps handled identically to [[graft.Tables.events]]. */
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // streaming file sources take a directory; filter it to the events table
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-    if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else raw
-  }
+    * timestamps handled by the same [[graft.Tables.withEventsTs]] as the
+    * batch table. */
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Tables.withEventsTs(spark) {
+      val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+      // streaming file sources take a directory; filter it to the events table
+      spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet").parquet(sfDir)
+    }
 
   /** Streaming twin of `time_tumbling`: 1-hour tumbling windows with a
     * 1-hour watermark. Complete-mode result equals the batch query once
@@ -253,10 +259,7 @@ object StreamOps {
     * finished one. At 100 TB this join is the attribution workhorse:
     * state is O(window), keyed by user, sharded by the state store. */
   def clickPurchaseOuterReplay(spark: SparkSession, stagedDir: String): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val base = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
+    val base = replaySource(spark, stagedDir)
     val clicks = base.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
@@ -275,60 +278,37 @@ object StreamOps {
 
   /** Streaming twin of [[graft.ops.WarehouseOps.mergeUpsert]]: incremental
     * MERGE via `foreachBatch` — the canonical streaming-warehouse-
-    * maintenance pattern. The order fixture is split into 4 files and
-    * streamed one file per microbatch; each batch's per-customer open
-    * position is MERGEd (full-outer + coalesce-add) into a parquet state
-    * table with an atomic swap (write new generation, repoint). The
-    * accumulated state equals the one-shot batch aggregate because the
-    * partial sums are DECIMAL — associative across batch boundaries
-    * exactly as they are across executors. The stream itself stays
-    * STATELESS (the aggregation lives in the sink), so no watermark or
-    * state-store sizing is involved; at scale the same foreachBatch body
-    * targets a transactional table format instead of a swap dir.
-    * Returns the final state table after the source drains. */
+    * maintenance pattern. The order fixture is staged as 4 o_orderkey-range
+    * files ([[stageSliceFiles]]) and streamed one file per microbatch;
+    * each batch's per-customer open position is MERGEd (full-outer +
+    * coalesce-add) into a parquet state table with an atomic swap
+    * ([[replayFold]]). The accumulated state equals the one-shot batch
+    * aggregate because the partial sums are DECIMAL — associative across
+    * batch boundaries exactly as they are across executors. The stream
+    * itself stays STATELESS (the aggregation lives in the sink), so no
+    * watermark or state-store sizing is involved; at scale the same
+    * foreachBatch body targets a transactional table format instead of a
+    * swap dir. Returns the final state table after the source drains. */
   def upsertMergeRun(spark: SparkSession, sfDir: String): DataFrame = {
-    val sch = spark.read.parquet(s"$sfDir/orders.parquet").schema
-    val tag = sfDir.replaceAll("[^A-Za-z0-9_]", "_")
-    val splitDir = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_orders_split_$tag")
-    val marker = new java.io.File(splitDir, "_GRAFT_READY")
-    if (!marker.exists()) {
-      spark.read.parquet(s"$sfDir/orders.parquet")
-        .repartition(4).write.mode("overwrite").parquet(splitDir.toString)
-      marker.createNewFile()
-    }
-    val stateRoot = java.nio.file.Files.createTempDirectory("graft_upsert_state")
-    @volatile var current: Option[String] = None
+    val staged = stageSliceFiles(spark, sfDir, 4, "orderslice_4",
+      graft.Tables.orders(spark, sfDir), "o_orderkey")
     val dec = "decimal(28,2)"
-    val stream = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "part-*.parquet")
-      .parquet(splitDir.toString)
-      .filter(col("o_orderstatus") === "O")
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val delta = batch.groupBy(col("o_custkey").as("u_custkey"))
+    replayFold(spark, staged, "b*.parquet") { (batch, prev) =>
+      val delta = batch.filter(col("o_orderstatus") === "O")
+        .groupBy(col("o_custkey").as("u_custkey"))
         .agg(count(lit(1)).as("n_open"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast(dec).as("open_spend"))
-      val merged = current match {
-        case None => delta
-        case Some(dir) =>
-          val st = spark.read.parquet(dir)
-          st.as("s").join(delta.as("d"),
-              col("s.u_custkey") === col("d.u_custkey"), "full_outer")
-            .select(
-              coalesce(col("s.u_custkey"), col("d.u_custkey")).as("u_custkey"),
-              (coalesce(col("s.n_open"), lit(0L)) +
-                coalesce(col("d.n_open"), lit(0L))).as("n_open"),
-              (coalesce(col("s.open_spend"), lit(0).cast(dec)) +
-                coalesce(col("d.open_spend"), lit(0).cast(dec))).cast(dec).as("open_spend"))
+      prev.fold(delta) { st =>
+        st.as("s").join(delta.as("d"),
+            col("s.u_custkey") === col("d.u_custkey"), "full_outer")
+          .select(
+            coalesce(col("s.u_custkey"), col("d.u_custkey")).as("u_custkey"),
+            (coalesce(col("s.n_open"), lit(0L)) +
+              coalesce(col("d.n_open"), lit(0L))).as("n_open"),
+            (coalesce(col("s.open_spend"), lit(0).cast(dec)) +
+              coalesce(col("d.open_spend"), lit(0).cast(dec))).cast(dec).as("open_spend"))
       }
-      val out = stateRoot.resolve(s"state_$id").toString
-      merged.write.mode("overwrite").parquet(out)
-      current = Some(out)
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    current.map(spark.read.parquet(_)).getOrElse(
-      spark.emptyDataFrame)
+    }
   }
 
   /** Drain a streaming DataFrame through a memory sink and return the
@@ -340,6 +320,81 @@ object StreamOps {
     try q.processAllAvailable() finally q.stop()
     spark.table(name)
   }
+
+  /** Schema-peeked stream over pre-staged parquet files, one file per
+    * trigger (streaming reads need an explicit schema; the peek reads the
+    * staged dir as a batch). `glob`, when given, narrows the replay to
+    * the staged files it matches. */
+  private def replaySource(spark: SparkSession, staged: String,
+      glob: Option[String] = None): DataFrame = {
+    val src = spark.readStream.schema(spark.read.parquet(staged).schema)
+      .option("maxFilesPerTrigger", "1")
+    glob.fold(src)(src.option("pathGlobFilter", _)).parquet(staged)
+  }
+
+  /** THE file-replay driver of every maintained store: drains the staged
+    * files matching `glob` through `step(batch, batchId)`, one file per
+    * micro-batch, and fails loudly when no micro-batch ran — a glob that
+    * matched nothing would otherwise return an empty or stale store as if
+    * it were current. The drain runs without a `checkpointLocation` (a
+    * finite replay into stores that are idempotent by batch id); a
+    * continuous deployment sets it here, on the shared FS. */
+  private def replay(spark: SparkSession, staged: String, glob: String)(
+      step: (DataFrame, Long) => Unit): Unit = {
+    @volatile var ranBatches = 0
+    val q = replaySource(spark, staged, Some(glob)).writeStream.foreachBatch {
+      (batch: DataFrame, id: Long) =>
+        step(batch, id)
+        ranBatches += 1
+    }.start()
+    try q.processAllAvailable() finally q.stop()
+    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
+  }
+
+  /** One stream run of a maintained store: each micro-batch's
+    * `delta(batch, gen)` is written with overwrite to the generation
+    * subdir `<storeDir>/<gen>`, `gen = <prefix>_<runTag>_<id>`.
+    * Idempotent BY BATCH ID: a re-executed batch replaces its own output
+    * instead of appending a duplicate, so at-least-once delivery cannot
+    * double an additive counter or a band row. `runTag` namespaces one
+    * run's subdirs, so two successive runs over the same store (today's
+    * drop after yesterday's) never collide on micro-batch ids, which
+    * restart at 0 per query. `rows`, when given, is the batch transform a
+    * step reads more than once (the keep-first joins): built once per
+    * batch and held until its delta is written. */
+  private def maintain(spark: SparkSession, staged: String, storeDir: String,
+      glob: String, runTag: String, prefix: String = "delta",
+      rows: Option[DataFrame => DataFrame] = None)(
+      delta: (DataFrame, String) => DataFrame): Unit =
+    replay(spark, staged, glob) { (batch, id) =>
+      val gen = s"${prefix}_${runTag}_$id"
+      val in = rows.fold(batch)(_(batch).persist())
+      delta(in, gen).write.mode("overwrite").parquet(s"$storeDir/$gen")
+      if (rows.nonEmpty) in.unpersist()
+    }
+
+  /** The generation-swap shape on the replay driver: each micro-batch
+    * folds into the previous generation (`merge(batch, prev)`, `prev` =
+    * None on the first batch), written as a fresh `gen_<id>` dir under a
+    * temp state root and then repointed to — an atomic swap. Returns the
+    * last generation. */
+  private[graft] def replayFold(spark: SparkSession, staged: String, glob: String)(
+      merge: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
+    val stateRoot = java.nio.file.Files.createTempDirectory("graft_fold_state")
+    @volatile var current: Option[String] = None
+    replay(spark, staged, glob) { (batch, id) =>
+      val out = stateRoot.resolve(s"gen_$id").toString
+      merge(batch, current.map(spark.read.parquet(_)))
+        .write.mode("overwrite").parquet(out)
+      current = Some(out)
+    }
+    spark.read.parquet(current.get)
+  }
+
+  /** A fresh store dir `<name>` under a new temp dir — the `*MaintainRun`
+    * harness runs build their store from scratch. */
+  private def tempStore(prefix: String, name: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).resolve(name).toString
 
   /** Stages the events table as `nFiles` TIME-CONTIGUOUS parquet files,
     * each holding its time-slice TWICE (at-least-once delivery), written
@@ -401,16 +456,12 @@ object StreamOps {
     * EVICTED between batches — StreamingSpec asserts the state-store row
     * count stays far below the all-time distinct count while the final
     * counts still equal batch. */
-  def dedupWithinWatermarkReplay(spark: SparkSession, stagedDir: String): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
+  def dedupWithinWatermarkReplay(spark: SparkSession, stagedDir: String): DataFrame =
+    replaySource(spark, stagedDir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"))
-  }
 
   /** Streaming sketch maintenance — the day-over-day distinct-user
     * pipeline the batch sketch tier ([[graft.ops.SketchOps.hllSketchPersist]])
@@ -418,15 +469,16 @@ object StreamOps {
     * into. Events replay one time-slice file per micro-batch;
     * `foreachBatch` builds the batch's per-type HLL sketches and
     * union-merges them into a persisted parquet sketch store via the
-    * same atomic generation swap as [[upsertMergeRun]]. The stream is
-    * STATELESS — no watermark, no state store; the only carried state is
-    * the ~4 KB-per-type sketch table on disk — and no batch's raw rows
-    * are ever rescanned after its trigger completes. The staged files
-    * hold each slice TWICE (at-least-once delivery), which the pipeline
-    * absorbs for free: HLL insertion is idempotent, so replayed rows
-    * cannot move any estimate — the robustness property that makes
-    * sketch stores safer warehouse state than additive counters (compare
-    * [[upsertMergeRun]], whose sums would double). Returns the final
+    * same atomic generation swap as [[upsertMergeRun]] ([[replayFold]]).
+    * The stream is STATELESS — no watermark, no state store; the only
+    * carried state is the ~4 KB-per-type sketch table on disk — and no
+    * batch's raw rows are ever rescanned after its trigger completes.
+    * The staged files hold each slice TWICE (at-least-once delivery),
+    * which the pipeline absorbs for free: HLL insertion is idempotent,
+    * so replayed rows cannot move any estimate — the robustness property
+    * that makes sketch stores safer warehouse state than additive
+    * counters (compare [[upsertMergeRun]], whose sums would double).
+    * Returns the final
     * per-type + `__ALL__` estimates, EXACTLY equal to the one-shot
     * [[graft.ops.SketchOps.hllUserSketches]] because register-wise max
     * is associative and commutative across any batch slicing
@@ -434,29 +486,13 @@ object StreamOps {
   def hllSketchMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageTimeOrderedEventFiles(spark, sfDir, 4,
       Seq("event_id", "ts", "event_type", "user_id"))
-    val schema = spark.read.parquet(staged).schema
-    val stateRoot = java.nio.file.Files.createTempDirectory("graft_hll_maint")
-    @volatile var current: Option[String] = None
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "b*.parquet")
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+    val sk = replayFold(spark, staged, "b*.parquet") { (batch, prev) =>
       val delta = batch.groupBy(col("event_type"))
         .agg(hll_sketch_agg(col("user_id"), lit(graft.ops.SketchOps.LgK)).as("sk"))
-      val merged = current match {
-        case None => delta
-        case Some(dir) => spark.read.parquet(dir).unionByName(delta)
-          .groupBy(col("event_type"))
-          .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-      }
-      val out = stateRoot.resolve(s"gen_$id").toString
-      merged.write.mode("overwrite").parquet(out)
-      current = Some(out)
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    val sk = spark.read.parquet(current.getOrElse(
-      sys.error(s"no micro-batch ran over $staged")))
+      prev.fold(delta)(_.unionByName(delta)
+        .groupBy(col("event_type"))
+        .agg(hll_union_agg(col("sk"), lit(false)).as("sk")))
+    }
     val per = sk.select(col("event_type"),
       hll_sketch_estimate(col("sk")).as("approx_users"))
     val all = sk.agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
@@ -555,14 +591,13 @@ object StreamOps {
     * `kept` rows — NOT a bare id set (each doc carries BANDS rows). */
   def incrementalDedupRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageDocSliceFiles(spark, sfDir, 4)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_inc_dedup")
-      .resolve("band_store").toString
+    val storeDir = tempStore("graft_inc_dedup", "band_store")
     incrementalDedupInto(spark, staged, storeDir, "b*.parquet", "all")
     readBandStore(spark, storeDir)
   }
 
-  /** Minus-self generation listing shared by every maintained store
-    * (band, semantic, …): the store's generation subdirs EXCLUDING the
+  /** Minus-self generation listing of the keep-first stores
+    * ([[keepFirstInto]]): the store's generation subdirs EXCLUDING the
     * running batch's own output — on an at-least-once replay the
     * overwrite deletes that subdir before the join runs, so a listing
     * that still referenced the prior attempt's files would fail mid-task
@@ -585,82 +620,76 @@ object StreamOps {
   private[graft] def readBandStore(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.option("recursiveFileLookup", "true").parquet(storeDir)
 
+  /** The keep-first near-dup rule shared by the band, semantic and phash
+    * stores, on [[maintain]]: each batch's `rows` (persisted for the
+    * batch) are matched against every earlier generation plus the batch's
+    * own lower `key`s — joined on the `bucket` columns, confirmed by
+    * `near` over the aliases `x` (earlier) and `y` (new) — and a row with
+    * any match is flagged `kept = false`. Earlier rows match kept or
+    * dropped alike (the chain-free rule: decisions never depend on a
+    * chain the stream would have to re-walk). Earlier generations come
+    * from [[listPrevGenerations]], so a replayed batch never reads the
+    * output its overwrite is deleting.
+    *
+    * AUTO-COMPACTION POLICY (round-10 verdict #4): the maintenance job is
+    * scheduled, not remembered. [[maybeCompactBandStore]] runs after the
+    * stream drains, i.e. the between-runs slot [[compactBandStore]]'s
+    * contract requires (a rewrite concurrent with an appending batch
+    * could delete a subdir the batch's minus-self listing already
+    * snapshotted). */
+  private def keepFirstInto(
+      spark: SparkSession, staged: String, storeDir: String,
+      glob: String, runTag: String, prefix: String,
+      key: String, bucket: Seq[String], near: Column)(
+      rows: DataFrame => DataFrame): Unit = {
+    maintain(spark, staged, storeDir, glob, runTag, prefix, Some(rows)) { (fresh, gen) =>
+      def matches(earlier: DataFrame): DataFrame =
+        earlier.as("x").join(fresh.as("y"),
+            bucket.map(c => col(s"x.$c") === col(s"y.$c")).reduce(_ && _) &&
+              col(s"x.$key") < col(s"y.$key"))
+          .filter(near)
+          .select(col(s"y.$key").as(key))
+      val inBatch = matches(fresh)
+      val prevDirs = listPrevGenerations(spark, storeDir, gen)
+      val dropped = (if (prevDirs.nonEmpty)
+          matches(spark.read.parquet(prevDirs.toSeq: _*).drop("kept"))
+            .unionByName(inBatch)
+        else inBatch).distinct()
+      fresh.join(dropped.withColumn("is_dropped", lit(true)), Seq(key), "left")
+        .withColumn("kept", col("is_dropped").isNull)
+        .select((fresh.columns.toSeq :+ "kept").map(col): _*)
+    }
+    maybeCompactBandStore(spark, storeDir)
+  }
+
   /** One stream run of the incremental rule over the staged files that
-    * match `glob`, appending into `storeDir`. `runTag` namespaces this
-    * run's `batch_<tag>_<id>` subdirs so two successive runs over the
-    * same store (today's drop after yesterday's) can never collide on
-    * micro-batch ids, which restart at 0 per query. */
+    * match `glob`, appending `batch_<runTag>_<id>` generations into
+    * `storeDir` ([[maintain]]). */
   private[graft] def incrementalDedupInto(
       spark: SparkSession, staged: String, storeDir: String,
       glob: String, runTag: String): Unit = {
     import graft.ops.DedupOps
-    val schema = spark.read.parquet(staged).schema
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val sigs = batch.select(col("doc_id"),
+    val est = graft.functions.VectorFunctions
+      .arrayEqCount(col("x.sig"), col("y.sig")).cast("double") / DedupOps.SigK
+    keepFirstInto(spark, staged, storeDir, glob, runTag, "batch",
+        "doc_id", Seq("band_idx", "band_hash"), est >= 0.8) { batch =>
+      DedupOps.bandExplode(batch.select(col("doc_id"),
         // array_distinct first — bit-identical signature, duplicate
         // occurrences skip their md5 + K transforms (the batch
         // operator's r18 note; the two sides must stay value-identical
         // for the band store to interoperate, and they do)
         graft.functions.VectorFunctions
           .minhashSig(array_distinct(split(col("text"), " ")), DedupOps.SigK)
-          .as("sig"))
-      val newBands = DedupOps.bandExplode(sigs, "doc_id")
-        .persist()
-      // list the store's generation subdirs explicitly, EXCLUDING this
-      // batch's own batch_<tag>_<id>: on an at-least-once replay the
-      // overwrite below deletes that subdir before the join runs, so a
-      // recursive-root snapshot that still referenced the prior
-      // attempt's files would fail mid-task with FileNotFound (round-9
-      // review finding). The explicit minus-self listing makes the
-      // documented "a re-executed batch replaces its own output"
-      // invariant actually hold. `_`-prefixed dirs are in-flight
-      // compaction staging, never read.
-      val prevDirs = listPrevGenerations(spark, storeDir, s"batch_${runTag}_$id")
-      val prevBands =
-        if (prevDirs.nonEmpty) Some(spark.read.parquet(prevDirs.toSeq: _*))
-        else None
-      val est = graft.functions.VectorFunctions
-        .arrayEqCount(col("x.sig"), col("y.sig")).cast("double") / DedupOps.SigK
-      def matches(earlier: DataFrame): DataFrame =
-        earlier.as("x").join(newBands.as("y"),
-            col("x.band_idx") === col("y.band_idx") &&
-              col("x.band_hash") === col("y.band_hash") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .filter(est >= 0.8)
-          .select(col("y.doc_id").as("doc_id"))
-      val inBatch = matches(newBands)
-      val dropped = prevBands
-        .map(p => matches(p.drop("kept")).unionByName(inBatch))
-        .getOrElse(inBatch)
-        .distinct()
-      val flagged = newBands.join(dropped.withColumn("is_dropped", lit(true)),
-          Seq("doc_id"), "left")
-        .withColumn("kept", col("is_dropped").isNull)
-        .select("doc_id", "sig", "band_idx", "band_hash", "kept")
-      // idempotent-by-batch-id: overwrite THIS batch's subdir, never
-      // append to the shared root — a replayed batch replaces itself
-      flagged.write.mode("overwrite").parquet(s"$storeDir/batch_${runTag}_$id")
-      newBands.unpersist()
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
-    // AUTO-COMPACTION POLICY (round-10 verdict #4): the maintenance job
-    // is now scheduled, not remembered. It runs HERE — after the stream
-    // drains, i.e. the between-runs slot compactBandStore's contract
-    // requires (a rewrite concurrent with an appending batch could
-    // delete a subdir the batch's minus-self listing already snapshotted)
-    maybeCompactBandStore(spark, storeDir)
+          .as("sig")), "doc_id")
+    }
   }
 
-  /** Compacts the band store iff its generation-subdir count exceeds
+  /** Compacts a keep-first store (band, semantic, phash) iff its
+    * generation-subdir count exceeds
     * `spark.graft.bandstore.maxGenerations` — the policy that keeps a
     * long-running store's file count bounded without manual operation.
+    * The counter and index stores stay off it: [[compactBandStore]]'s
+    * `distinct` would merge equal counter rows of different batches.
     * In production this is the post-run maintenance step of the daily
     * incremental job; the threshold trades listing cost (O(generations)
     * per batch join) against rewrite I/O (O(store) per compaction). */
@@ -694,8 +723,7 @@ object StreamOps {
     * the equality and the replay idempotence). */
   def bpeTokenMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageDocSliceFiles(spark, sfDir, 4, Seq("doc_id", "source", "text"))
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_bpe_maint")
-      .resolve("token_store").toString
+    val storeDir = tempStore("graft_bpe_maint", "token_store")
     bpeTokenMaintainInto(spark, staged, storeDir, "b*.parquet", "all")
     readTokenStore(spark, storeDir)
   }
@@ -713,26 +741,15 @@ object StreamOps {
     * `storeDir` (same runTag namespacing as [[incrementalDedupInto]]). */
   private[graft] def bpeTokenMaintainInto(
       spark: SparkSession, staged: String, storeDir: String,
-      glob: String, runTag: String): Unit = {
-    val schema = spark.read.parquet(staged).schema
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val delta = batch
+      glob: String, runTag: String): Unit =
+    maintain(spark, staged, storeDir, glob, runTag) { (batch, _) =>
+      batch
         .select(col("source"),
           graft.functions.BpeFunctions.bpeTokenCount(col("text")).as("n"))
         .groupBy("source")
         .agg(sum(col("n")).cast("long").as("bpe_tokens"),
           count(lit(1)).as("n_docs"))
-      delta.write.mode("overwrite").parquet(s"$storeDir/delta_${runTag}_$id")
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
-  }
+    }
 
   /** Streaming BM25 CORPUS-STATS maintenance — the ingestion half of the
     * [[graft.ops.IrOps.bm25Rank]] story run CONTINUOUSLY: a serving BM25
@@ -751,8 +768,7 @@ object StreamOps {
     * 6-column row per micro-batch, independent of corpus size. */
   def bm25StatsMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageDocSliceFiles(spark, sfDir, 4)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_bm25_maint")
-      .resolve("stats_store").toString
+    val storeDir = tempStore("graft_bm25_maint", "stats_store")
     bm25StatsMaintainInto(spark, staged, storeDir, "b*.parquet", "all")
     readBm25StatsStore(spark, storeDir)
   }
@@ -768,21 +784,10 @@ object StreamOps {
 
   private[graft] def bm25StatsMaintainInto(
       spark: SparkSession, staged: String, storeDir: String,
-      glob: String, runTag: String): Unit = {
-    val schema = spark.read.parquet(staged).schema
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      glob: String, runTag: String): Unit =
+    maintain(spark, staged, storeDir, glob, runTag) { (batch, _) =>
       graft.ops.IrOps.corpusStats(graft.ops.IrOps.docTermBase(batch))
-        .write.mode("overwrite").parquet(s"$storeDir/delta_${runTag}_$id")
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
-  }
+    }
 
   /** Streaming IVF INDEX maintenance — the ingestion half of the
     * [[graft.ops.SimOps.annIvfPersist]] story run CONTINUOUSLY: the
@@ -798,8 +803,7 @@ object StreamOps {
     * equality and replay idempotence). */
   def ivfIndexMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageVecSliceFiles(spark, sfDir, 4)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_ivf_maint")
-      .resolve("index_store").toString
+    val storeDir = tempStore("graft_ivf_maint", "index_store")
     ivfIndexMaintainInto(spark, staged, storeDir, "b*.parquet", "all")
     graft.ops.SimOps.ivfProbeCells(readIvfIndexStore(spark, storeDir))
   }
@@ -813,25 +817,23 @@ object StreamOps {
     * files matching `glob`, appending per-batch delta subdirs. */
   private[graft] def ivfIndexMaintainInto(
       spark: SparkSession, staged: String, storeDir: String,
-      glob: String, runTag: String): Unit = {
-    val schema = spark.read.parquet(staged).schema
-    val cents = graft.ops.SimOps.ivfCentroids(spark,
-      graft.ops.SimOps.withNorm(spark.read.parquet(staged)))
-      // the pinned quantizer: centroid-count rows, reused by every batch
-      .persist()
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      graft.ops.SimOps.ivfAssign(graft.ops.SimOps.withNorm(batch), cents)
-        .write.mode("overwrite").parquet(s"$storeDir/delta_${runTag}_$id")
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable()
-    finally { q.stop(); cents.unpersist() }
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
+      glob: String, runTag: String): Unit =
+    withCentroids(spark, staged) { cents =>
+      maintain(spark, staged, storeDir, glob, runTag) { (batch, _) =>
+        graft.ops.SimOps.ivfAssign(graft.ops.SimOps.withNorm(batch), cents)
+      }
+    }
+
+  /** Runs `body` with the coarse quantizer pinned for one stream run:
+    * the centroid-count rows every batch reuses, persisted for the run.
+    * `supplied` is the externally built table; `None` trains over the
+    * full staged corpus (see [[semanticDedupMaintainInto]]). */
+  private def withCentroids(spark: SparkSession, staged: String,
+      supplied: Option[DataFrame] = None)(body: DataFrame => Unit): Unit = {
+    import graft.ops.SimOps
+    val cents = supplied.getOrElse(SimOps.ivfCentroids(spark,
+      SimOps.withNorm(spark.read.parquet(staged)))).persist()
+    try body(cents) finally cents.unpersist()
   }
 
   /** Streaming IVF-PQ CODES maintenance — the ingestion half of the
@@ -850,8 +852,7 @@ object StreamOps {
     * the equality and replay idempotence). */
   def ivfPqIndexMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageVecSliceFiles(spark, sfDir, 4)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_maint")
-      .resolve("codes_store").toString
+    val storeDir = tempStore("graft_ivfpq_maint", "codes_store")
     ivfPqIndexMaintainInto(spark, staged, storeDir, "b*.parquet", "all")
     graft.ops.SimOps.ivfPqProbeCodes(readIvfIndexStore(spark, storeDir))
   }
@@ -861,29 +862,15 @@ object StreamOps {
     * (vec_id, embedding, nrm, cell, code0..3). */
   private[graft] def ivfPqIndexMaintainInto(
       spark: SparkSession, staged: String, storeDir: String,
-      glob: String, runTag: String): Unit = {
-    val schema = spark.read.parquet(staged).schema
-    val cents = graft.ops.SimOps.ivfCentroids(spark,
-      graft.ops.SimOps.withNorm(spark.read.parquet(staged)))
-      // the pinned quantizer: centroid-count rows, reused by every batch
-      .persist()
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      graft.ops.SimOps.pqCoded(
-          graft.ops.SimOps.ivfAssign(graft.ops.SimOps.withNorm(batch), cents))
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-          col("code0"), col("code1"), col("code2"), col("code3"))
-        .write.mode("overwrite").parquet(s"$storeDir/delta_${runTag}_$id")
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable()
-    finally { q.stop(); cents.unpersist() }
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
-  }
+      glob: String, runTag: String): Unit =
+    withCentroids(spark, staged) { cents =>
+      maintain(spark, staged, storeDir, glob, runTag) { (batch, _) =>
+        graft.ops.SimOps.pqCoded(
+            graft.ops.SimOps.ivfAssign(graft.ops.SimOps.withNorm(batch), cents))
+          .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
+            col("code0"), col("code1"), col("code2"), col("code3"))
+      }
+    }
 
   /** Streaming SEMANTIC dedup — the ONLINE form of
     * [[graft.ops.SimOps.dedupSemantic]]: micro-batches of vectors are
@@ -914,11 +901,11 @@ object StreamOps {
     * streaming twin of the batch op's blocked per-cell enumeration);
     * deltas are generation subdirs with the minus-self listing, so an
     * at-least-once replay overwrites its own output and cannot
-    * double-count. */
+    * double-count, compacted by the same [[maybeCompactBandStore]]
+    * policy as the band and phash stores ([[keepFirstInto]]). */
   def semanticDedupMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageVecSliceFiles(spark, sfDir, 4)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_sem_dedup")
-      .resolve("sem_store").toString
+    val storeDir = tempStore("graft_sem_dedup", "sem_store")
     semanticDedupMaintainInto(spark, staged, storeDir, "b*.parquet", "all")
     readSemStore(spark, storeDir)
   }
@@ -941,44 +928,15 @@ object StreamOps {
       glob: String, runTag: String,
       centroids: Option[DataFrame] = None): Unit = {
     import graft.ops.SimOps
-    val schema = spark.read.parquet(staged).schema
-    val cents = centroids.getOrElse(SimOps.ivfCentroids(spark,
-      SimOps.withNorm(spark.read.parquet(staged)))).persist()
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val asg = SimOps.ivfAssign(SimOps.withNorm(batch), cents).persist()
-      // minus-self generation listing (the incrementalDedupInto replay
-      // doctrine): an at-least-once re-execution must not see the prior
-      // attempt's own delta mid-delete
-      val prevDirs = listPrevGenerations(spark, storeDir, s"delta_${runTag}_$id")
-      val cos = graft.functions.VectorFunctions
-        .vecDot(col("x.embedding"), col("y.embedding")) /
-        sqrt(col("x.nrm") * col("y.nrm"))
-      def near(earlier: DataFrame): DataFrame =
-        earlier.as("x").join(asg.as("y"),
-            col("x.cell") === col("y.cell") &&
-              col("x.vec_id") < col("y.vec_id"))
-          .filter(cos >= SimOps.ClusterCosThreshold)
-          .select(col("y.vec_id").as("vec_id"))
-      val inBatch = near(asg)
-      val dropped = (if (prevDirs.nonEmpty)
-          near(spark.read.parquet(prevDirs.toSeq: _*).drop("kept"))
-            .unionByName(inBatch)
-        else inBatch).distinct()
-      asg.join(dropped.withColumn("is_dropped", lit(true)), Seq("vec_id"), "left")
-        .withColumn("kept", col("is_dropped").isNull)
-        .select("vec_id", "embedding", "nrm", "cell", "kept")
-        .write.mode("overwrite").parquet(s"$storeDir/delta_${runTag}_$id")
-      asg.unpersist()
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable()
-    finally { q.stop(); cents.unpersist() }
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
+    val cos = graft.functions.VectorFunctions
+      .vecDot(col("x.embedding"), col("y.embedding")) /
+      sqrt(col("x.nrm") * col("y.nrm"))
+    withCentroids(spark, staged, centroids) { cents =>
+      keepFirstInto(spark, staged, storeDir, glob, runTag, "delta",
+          "vec_id", Seq("cell"), cos >= SimOps.ClusterCosThreshold) { batch =>
+        SimOps.ivfAssign(SimOps.withNorm(batch), cents)
+      }
+    }
   }
 
   /** The image-hash twin of [[stageVecSliceFiles]]: the 256-bit
@@ -1013,8 +971,7 @@ object StreamOps {
     * join only, never re-hashed. */
   def phashDedupMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stagePhashSliceFiles(spark, sfDir, 4)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_phash_dedup")
-      .resolve("phash_store").toString
+    val storeDir = tempStore("graft_phash_dedup", "phash_store")
     phashDedupMaintainInto(spark, staged, storeDir, "b*.parquet", "all")
     readPhashStore(spark, storeDir)
   }
@@ -1027,51 +984,24 @@ object StreamOps {
   private[graft] def phashDedupMaintainInto(
       spark: SparkSession, staged: String, storeDir: String,
       glob: String, runTag: String): Unit = {
-    val schema = spark.read.parquet(staged).schema
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val newBands = batch.select(col("doc_id"), col("phash256"),
+    // same packed-long xor+bit_count verify as the batch op (the
+    // store keeps the portable bit string; packing is a per-row map
+    // on the join inputs, never a schema change)
+    def packed(side: String) = transform(sequence(lit(0), lit(3)),
+      i => shiftleft(conv(col(s"$side.phash256").substr(i * 64 + 1, lit(32)), 2, 10)
+          .cast("long"), 32)
+        .bitwiseOR(conv(col(s"$side.phash256").substr(i * 64 + 33, lit(32)), 2, 10)
+          .cast("long")))
+    val ham = (1 to 4).map { i =>
+      bit_count(element_at(packed("x"), i).bitwiseXOR(element_at(packed("y"), i)))
+    }.reduce(_ + _)
+    keepFirstInto(spark, staged, storeDir, glob, runTag, "batch",
+        "doc_id", Seq("band_idx", "band"), ham <= 15) { batch =>
+      batch.select(col("doc_id"), col("phash256"),
         posexplode(transform(sequence(lit(0), lit(15)),
           b => col("phash256").substr(b * 16 + 1, lit(16))))
-          .as(Seq("band_idx", "band"))).persist()
-      val prevDirs = listPrevGenerations(spark, storeDir, s"batch_${runTag}_$id")
-      // same packed-long xor+bit_count verify as the batch op (the
-      // store keeps the portable bit string; packing is a per-row map
-      // on the join inputs, never a schema change)
-      def packed(side: String) = transform(sequence(lit(0), lit(3)),
-        i => shiftleft(conv(col(s"$side.phash256").substr(i * 64 + 1, lit(32)), 2, 10)
-            .cast("long"), 32)
-          .bitwiseOR(conv(col(s"$side.phash256").substr(i * 64 + 33, lit(32)), 2, 10)
-            .cast("long")))
-      val ham = (1 to 4).map { i =>
-        bit_count(element_at(packed("x"), i).bitwiseXOR(element_at(packed("y"), i)))
-      }.reduce(_ + _)
-      def matches(earlier: DataFrame): DataFrame =
-        earlier.as("x").join(newBands.as("y"),
-            col("x.band_idx") === col("y.band_idx") &&
-              col("x.band") === col("y.band") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .filter(ham <= 15)
-          .select(col("y.doc_id").as("doc_id"))
-      val inBatch = matches(newBands)
-      val dropped = (if (prevDirs.nonEmpty)
-          matches(spark.read.parquet(prevDirs.toSeq: _*).drop("kept"))
-            .unionByName(inBatch)
-        else inBatch).distinct()
-      newBands.join(dropped.withColumn("is_dropped", lit(true)), Seq("doc_id"), "left")
-        .withColumn("kept", col("is_dropped").isNull)
-        .select("doc_id", "phash256", "band_idx", "band", "kept")
-        .write.mode("overwrite").parquet(s"$storeDir/batch_${runTag}_$id")
-      newBands.unpersist()
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
-    maybeCompactBandStore(spark, storeDir)
+          .as(Seq("band_idx", "band")))
+    }
   }
 
   /** Streaming PQ-CODEBOOK drift monitoring — the maintenance signal the
@@ -1096,8 +1026,7 @@ object StreamOps {
     * encode and replay idempotence. */
   def pqDriftMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageVecSliceFiles(spark, sfDir, 4)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_pqdrift_maint")
-      .resolve("pq_store").toString
+    val storeDir = tempStore("graft_pqdrift_maint", "pq_store")
     pqDriftMaintainInto(spark, staged, storeDir, "b*.parquet", "all")
     readPqDriftStore(spark, storeDir)
   }
@@ -1121,18 +1050,12 @@ object StreamOps {
       glob: String, runTag: String,
       codebook: Option[Map[(Int, Int), Seq[Double]]] = None): Unit = {
     import graft.ops.SimOps
-    val schema = spark.read.parquet(staged).schema
     val cb = codebook.getOrElse(
       SimOps.pqFitCodebook(spark.read.parquet(staged)))
     val cut = spark.read.parquet(staged)
       .agg(expr("max(vec_id) DIV 2")).collect()(0).getLong(0)
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val delta = SimOps.pqCoded(batch, col("embedding"), cb)
+    maintain(spark, staged, storeDir, glob, runTag) { (batch, _) =>
+      SimOps.pqCoded(batch, col("embedding"), cb)
         .select(
           when(col("vec_id") <= cut, lit("reference"))
             .otherwise(lit("current")).as("slice"),
@@ -1140,11 +1063,7 @@ object StreamOps {
             * lit(1048576.0)).as("qd"))
         .groupBy("slice")
         .agg(sum("qd").as("qd"), count(lit(1)).as("n"))
-      delta.write.mode("overwrite").parquet(s"$storeDir/delta_${runTag}_$id")
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
+    }
   }
 
   /** Streaming DRIFT monitoring — [[graft.ops.ProfileOps.qualityKsDrift]]'s
@@ -1163,8 +1082,7 @@ object StreamOps {
     * idempotence). */
   def ksDriftMaintainRun(spark: SparkSession, sfDir: String): DataFrame = {
     val staged = stageDocSliceFiles(spark, sfDir, 4, Seq("doc_id", "source", "text"))
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_ks_maint")
-      .resolve("ks_store").toString
+    val storeDir = tempStore("graft_ks_maint", "ks_store")
     ksDriftMaintainInto(spark, staged, storeDir, "b*.parquet", "all")
     readKsStore(spark, storeDir)
   }
@@ -1181,34 +1099,24 @@ object StreamOps {
   private[graft] def ksDriftMaintainInto(
       spark: SparkSession, staged: String, storeDir: String,
       glob: String, runTag: String): Unit = {
-    val schema = spark.read.parquet(staged).schema
     // the snapshot cut is a property of the corpus, derived once up
     // front (the batch op's max(doc_id) DIV 2) — in production this is
     // the snapshot boundary the ingest job already knows
     val cut = spark.read.parquet(staged)
       .agg(expr("max(doc_id) DIV 2")).collect()(0).getLong(0)
-    @volatile var ranBatches = 0
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(staged)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val delta = batch
+    maintain(spark, staged, storeDir, glob, runTag) { (batch, _) =>
+      batch
         .select(col("source"), col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("v"))
         .groupBy("source", "v")
         .agg(count(when(col("doc_id") <= cut, 1)).as("c1"),
           count(when(col("doc_id") > cut, 1)).as("c2"))
-      delta.write.mode("overwrite").parquet(s"$storeDir/delta_${runTag}_$id")
-      ranBatches += 1
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    require(ranBatches > 0, s"no micro-batch ran over $staged ($glob)")
+    }
   }
 
-  /** STORE COMPACTION for the incremental band store — the maintenance
-    * op a long-running stream needs: appends leave one `batch_*` subdir
-    * per micro-batch, so at a daily drop for years the store's listing
+  /** STORE COMPACTION for the keep-first stores (band, semantic, phash)
+    * — the maintenance op a long-running stream needs: appends leave one
+    * generation subdir per micro-batch, so at a daily drop for years the store's listing
     * and open-file cost grows O(batches) even though its DATA is O(docs)
     * (round-9 verdict residual #3). Rewrites every current generation
     * subdir into ONE `compact_<n>` generation of `targetFiles` shards
@@ -1218,13 +1126,13 @@ object StreamOps {
     * Content-preserving BY CONSTRUCTION: the rewrite is read-all →
     * distinct → write; `distinct` also heals any duplicate rows a
     * previous partially-failed compaction could have left (each row is
-    * unique per (doc, band) in a healthy store, so distinct is the
-    * identity there). Crash-safety ordering: stage to `_compact_tmp`
-    * (underscore-prefixed — invisible to store readers), rename into
-    * place, THEN delete consumed dirs. A crash between rename and
-    * deletes leaves duplicates, which match identically (dedup joins
-    * are distinct-ed) and are healed by the next compaction; data is
-    * never in only the deleted copy. Run between stream runs — the
+    * unique per (doc, band) or per vector in a healthy store, so
+    * distinct is the identity there). Crash-safety ordering: stage to
+    * `_compact_tmp` (underscore-prefixed — invisible to store readers),
+    * rename into place, THEN delete consumed dirs. A crash between
+    * rename and deletes leaves duplicates, which match identically
+    * (dedup joins are distinct-ed) and are healed by the next
+    * compaction; data is never in only the deleted copy. Run between stream runs — the
     * same slot a production maintenance job occupies.
     *
     * Returns the number of data files in the compacted store. */

@@ -70,6 +70,11 @@ class AllQueriesSpec extends SparkSpec {
     }
   }
 
+  test("entry smoke: SparkEntry.entry returns rows") {
+    // the driver's smoke check on the flagship query: rows > 0
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("every oracleSql key has a matching queries entry") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")

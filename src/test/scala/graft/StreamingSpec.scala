@@ -7,6 +7,27 @@ import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends SparkSpec {
 
+  // the fixture has no 256-bit pairs at hamming <= 15 (the tier's
+  // sparsity is its point), so the phash store tests plant them:
+  // identical texts -> identical rasters -> hamming-0 pairs; a perturbed
+  // twin and an unrelated doc keep the keep branch populated
+  private val PlantedPhashTexts = {
+    val twin = "stream me a raster that collides with its twin exactly !!"
+    Seq(twin, twin, twin, twin.replace('s', 't'),
+      "a wholly different text with its own geometry and content")
+  }
+
+  /** A documents-only fixture dir holding `texts` as doc_ids 0.. */
+  private def plantPhashCorpus(prefix: String, texts: Seq[String]): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    import spark.implicits._
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s") }
+      .toDF("doc_id", "text", "lang", "source")
+      .withColumn("n_chars", length(col("text")))
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   test("streaming tumbling window equals the batch time_tumbling result") {
     val streamed = StreamOps.runToTable(
       StreamOps.tumblingCounts(spark, sf), "stream_tumbling", OutputMode.Complete())
@@ -393,11 +414,32 @@ class StreamingSpec extends SparkSpec {
     // manually remembered maintenance call. With maxGenerations=2, a
     // 4-batch run must end with the store rewritten to one compact_*
     // generation — and the kept set must still equal the batch rule.
+    // The semantic and phash keep-first stores run the same policy: each
+    // ends with one compact_1 and the rows of an uncompacted run.
     def subdirs(storeDir: String): Seq[String] = {
       val root = new org.apache.hadoop.fs.Path(storeDir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
     }
+    def freshStore(prefix: String) =
+      java.nio.file.Files.createTempDirectory(prefix).resolve("store").toString
+    val vecStaged = StreamOps.stageVecSliceFiles(spark, sf, 4)
+    val phashStaged = StreamOps.stagePhashSliceFiles(spark,
+      plantPhashCorpus("graft_phash_auto", PlantedPhashTexts), 4)
+    // (store, run into a dir, read-back ordered by its row key)
+    val keepFirst = Seq[(String, String => Unit, String => Array[org.apache.spark.sql.Row])](
+      ("semantic",
+        dir => StreamOps.semanticDedupMaintainInto(spark, vecStaged, dir, "b*.parquet", "all"),
+        dir => StreamOps.readSemStore(spark, dir).orderBy("vec_id").collect()),
+      ("phash",
+        dir => StreamOps.phashDedupMaintainInto(spark, phashStaged, dir, "b*.parquet", "all"),
+        dir => StreamOps.readPhashStore(spark, dir).orderBy("doc_id", "band_idx").collect()))
+    val uncompacted = keepFirst.map { case (name, into, read) =>
+      val dir = freshStore(s"graft_${name}_plain")
+      into(dir)
+      assert(subdirs(dir).size === 4, s"$name: expected one generation per batch")
+      name -> read(dir)
+    }.toMap
     spark.conf.set("spark.graft.bandstore.maxGenerations", "2")
     try {
       val staged = StreamOps.stageDocSliceFiles(spark, sf, 4)
@@ -416,7 +458,32 @@ class StreamingSpec extends SparkSpec {
         assert(kept === (allDocs -- droppedBatch))
         assert(store.count() === 16L * allDocs.size)
       } finally store.unpersist()
+      keepFirst.foreach { case (name, into, read) =>
+        val dir = freshStore(s"graft_${name}_auto")
+        into(dir)
+        assert(subdirs(dir) === Seq("compact_1"), s"$name store not compacted")
+        val got = read(dir)
+        assert(got === uncompacted(name), s"$name rows changed by compaction")
+        assert(got.exists(_.getAs[Boolean]("kept")) && got.exists(!_.getAs[Boolean]("kept")),
+          s"$name: fixture exercises both keep and drop")
+      }
     } finally spark.conf.unset("spark.graft.bandstore.maxGenerations")
+  }
+
+  test("a replay glob that matches no staged file fails loudly, for a delta store and for the fold") {
+    val staged = StreamOps.stageDocSliceFiles(spark, sf, 4,
+      Seq("doc_id", "source", "text"))
+    val storeDir = java.nio.file.Files.createTempDirectory("graft_nomatch")
+      .resolve("token_store").toString
+    val delta = intercept[IllegalArgumentException] {
+      StreamOps.bpeTokenMaintainInto(spark, staged, storeDir, "z*.parquet", "none")
+    }
+    assert(delta.getMessage.contains("no micro-batch ran"))
+    assert(!new java.io.File(storeDir).exists, "a run with no batch wrote a store")
+    val fold = intercept[IllegalArgumentException] {
+      StreamOps.replayFold(spark, staged, "z*.parquet")((batch, _) => batch)
+    }
+    assert(fold.getMessage.contains("no micro-batch ran"))
   }
 
   test("foreachBatch incremental BPE token accounting equals the one-shot batch rollup") {
@@ -595,21 +662,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamed phash near-dup maintenance equals the batch pair rule on a planted corpus") {
-    // the fixture has no 256-bit pairs at hamming <= 15 (the tier's
-    // sparsity is its point), so plant one: identical texts -> identical
-    // rasters -> hamming-0 pairs; a perturbed twin and an unrelated doc
-    // keep the keep branch populated
-    val dir = java.nio.file.Files.createTempDirectory("graft_phash_stream").toString
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, length}
-    val base = "stream me a raster that collides with its twin exactly !!"
-    Seq(
-      (0L, base, "en", "s"), (1L, base, "en", "s"), (2L, base, "en", "s"),
-      (3L, base.replace('s', 't'), "en", "s"),
-      (4L, "a wholly different text with its own geometry and content", "en", "s"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")))
-      .write.parquet(s"$dir/documents.parquet")
+    val dir = plantPhashCorpus("graft_phash_stream", PlantedPhashTexts)
     val got = StreamOps.phashDedupMaintainRun(spark, dir)
       .select("doc_id", "kept").distinct().collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
@@ -629,15 +682,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("phash near-dup store is replay-idempotent: a re-run batch replaces its delta") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_phash_stream_r").toString
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, length}
-    val base = "replay me a raster that collides with its twin exactly !"
-    Seq((0L, base, "en", "s"), (1L, base, "en", "s"),
-      (2L, "something else entirely for the keeper branch to chew on", "en", "s"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")))
-      .write.parquet(s"$dir/documents.parquet")
+    val dir = plantPhashCorpus("graft_phash_stream_r", Seq(
+      "replay me a raster that collides with its twin exactly !",
+      "replay me a raster that collides with its twin exactly !",
+      "something else entirely for the keeper branch to chew on"))
     val staged = StreamOps.stagePhashSliceFiles(spark, dir, 3)
     val storeDir = java.nio.file.Files.createTempDirectory("graft_phash_store_r")
       .resolve("phash_store").toString
