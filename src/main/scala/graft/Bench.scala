@@ -33,14 +33,14 @@ package graft
   */
 object Bench {
 
-  /** The sampling loop Bench and [[CoreScale]] share. Every query runs
-    * once; then, slowest-first, each query whose two smallest samples do
-    * not yet agree within 2× (plus 0.5 s absolute slack so sub-second
-    * queries aren't re-run for scheduler jitter that can't matter in a
-    * total) runs again, up to `maxRuns` samples per query and while the
-    * loop has run less than `budgetSec`. The biggest single sample is
-    * both the likeliest stall victim and the largest contributor to a
-    * wrong total, hence slowest-first. A failed or timed-out run adds no
+  /** The sampling loop Bench and both [[ScaleStress]] modes share. Every
+    * query runs once; then, slowest-first, each query whose two smallest
+    * samples do not yet agree within 2× (plus 0.5 s absolute slack so
+    * sub-second queries aren't re-run for scheduler jitter that can't
+    * matter in a total) runs again, up to `maxRuns` samples per query
+    * and while the loop has run less than `budgetSec`. The biggest single
+    * sample is both the likeliest stall victim and the largest
+    * contributor to a wrong total, hence slowest-first. A failed or timed-out run adds no
     * sample: its query is reported failed and not run again.
     *
     * Returns the samples of the queries that never failed, in `names`
@@ -86,8 +86,8 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.drop(2).min
 
-  def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-  def jsonStrings(v: Seq[String]): String = v.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+  private def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+  private def jsonStrings(v: Seq[String]): String = v.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

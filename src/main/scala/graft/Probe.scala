@@ -41,6 +41,9 @@ import org.json4s.jackson.JsonMethods.{compact, render}
 object Probe {
   private val TimeoutMs = 600000L
 
+  /** A JSON number rounded to the millisecond (3 decimals). */
+  private[graft] def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: Probe <dir | synth:<dir>:<factor>> <q>[,<q>...] [k=v,...]")
@@ -62,6 +65,7 @@ object Probe {
 
 /** The listener and measurement behind [[Probe]]; one per session. */
 class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
+  import Probe.r3
   private val sc = spark.sparkContext
   private val BarrierKey = "graft.probe.barrier"
   private val barriers = new AtomicLong(0L)
@@ -95,7 +99,6 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
     }
   })
 
-  private def r3(v: Double): Double = math.round(v * 1000) / 1000.0
   // phases are truncated, not rounded, so their sum stays within the wall
   private def ms(v: Double): Double = math.floor(v * 1000) / 1000.0
 

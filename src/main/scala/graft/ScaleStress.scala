@@ -2,19 +2,40 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
-/** Scale-stress harness: times the heavyweight query family at sf0.1 and
-  * at a ~10× corpus SYNTHESIZED inside Spark (union of shifted-key
-  * replicas — disjoint key spaces, so every per-key/per-component cost
-  * model predicts LINEAR growth), and reports the observed scaling
-  * exponent `ln(t_big/t_small)/ln(factor)` against each query's
-  * documented cost model. The point: every 100-TB claim in the repo was
-  * extrapolated from 600k rows; this measures the extrapolation. An
-  * exponent well above 1 on a disjoint-union scale-up reveals a
-  * super-linear engine overhead (global funnel, driver state, re-scan)
-  * that the small fixture can't show. Round 7's first run did exactly
-  * that: it caught dedup_minhash_lsh at exponent 1.55 (the
-  * identical-signature-family band blow-up fixed in DedupOps).
+import Probe.r3
+
+/** Scale audits over a corpus SYNTHESIZED inside Spark (union of
+  * shifted-key replicas — disjoint key spaces, so every
+  * per-key/per-component cost model predicts LINEAR growth). Two modes:
+  *
+  *  - `exponent`: times the heavyweight query family at `smallDir` and
+  *    at the ×factor corpus, and reports the observed scaling exponent
+  *    `ln(t_big/t_small)/ln(factor)` against each query's documented
+  *    cost model. The point: every 100-TB claim in the repo was
+  *    extrapolated from 600k rows; this measures the extrapolation. An
+  *    exponent well above 1 on a disjoint-union scale-up reveals a
+  *    super-linear engine overhead (global funnel, driver state,
+  *    re-scan) that the small fixture can't show. Round 7's first run
+  *    did exactly that: it caught dedup_minhash_lsh at exponent 1.55 (the
+  *    identical-signature-family band blow-up fixed in DedupOps).
+  *  - `cores`: times only the ×factor corpus, at whatever core count
+  *    `SPARK_GRAFT_CPUS` names, with shuffle partitions DATA-sized on the
+  *    session (32 × factor, identical at every core count, so the
+  *    partition count never masquerades as core scaling). Run it at 8
+  *    and at 32 cores and divide: rows with real shuffle/CPU work should
+  *    show ratios well above 1; rows that stay ≈ 1 need a named limiter
+  *    (driver-paced loop, output-sized, I/O-bound). The sf0.1 board
+  *    cannot show this: it is fixed-cost-bound, every ratio ≈ 1.
+  *
+  * Both modes time every query the same way ([[sampleRuns]]): through
+  * [[Bench.sample]] (two samples per query and corpus in `exponent`,
+  * up to three until two agree in `cores`), each run under the
+  * [[ops.GuardOps]] bound, so a query that throws or times out is listed
+  * under `"failed"` and the audit goes on.
   *
   * Replica synthesis, per table:
   *  - `lineitem`: order/part/supp keys shifted by `i·(max+1)` — 10
@@ -37,22 +58,29 @@ import org.apache.spark.sql.functions._
   *    token-suffix trick.
   *
   * GEOMETRY-CAPPED operators (fixed bucket space / seed rate) are timed
-  * on the big corpus at their DOCUMENTED scale-path conf — e.g.
-  * `spark.graft.ann.planes` +log2(factor) so expected bucket occupancy
-  * is held constant, `spark.graft.ann.centroidMod` ×factor so the
-  * centroid count (and the n×k assign cost) is held constant. That is
-  * the "as deployed at 10×" measurement: the knob IS the design, and the
-  * audit proves turning it restores the linear model. The JSON records
-  * the conf used for each big-corpus run.
+  * on the big corpus at their DOCUMENTED scale-path conf
+  * ([[scalePathConf]], in both modes) — e.g. `spark.graft.ann.planes`
+  * +log2(factor) so expected bucket occupancy is held constant,
+  * `spark.graft.ann.centroidMod` ×factor so the centroid count (and the
+  * n×k assign cost) is held constant. That is the "as deployed at 10×"
+  * measurement: the knob IS the design, and the audit proves turning it
+  * restores the linear model. The exponent JSON records the conf used
+  * for each big-corpus run.
   *
-  * Usage: runMain graft.ScaleStress [smallDir] [factor] [outJson] [q1,q2,...]
-  * The optional 4th arg restricts the audit to a comma-separated subset —
-  * used for the ×100 two-decade spot check of the cheap linear family
-  * (running every heavyweight at ×100 would take hours on one box).
+  * Usage:
+  *   runMain graft.ScaleStress [exponent|cores] [smallDir] [factor] [outJson] [q1,q2,...] [tables]
+  * `q1,q2,...` restricts the audit to a subset — used for the ×100
+  * two-decade spot check of the cheap linear family (running every
+  * heavyweight at ×100 would take hours on one box); `tables`
+  * synthesizes only those tables — the ×1000 decade of the documents
+  * family must not pay a 600M-row lineitem write. The driver heap is the
+  * forked JVM's `-Xmx` (`$SPARK_DRIVER_MEM`, build.sbt): the JVM is
+  * already running when the session is built, so no session conf can
+  * change it.
   */
 object ScaleStress {
 
-  private case class Heavy(
+  private[graft] case class Heavy(
       name: String,
       model: String,
       // upper bound on the observed exponent under a disjoint-union
@@ -70,7 +98,7 @@ object ScaleStress {
   // over-shards the third decade (×1000 → 32k tasks whose ~ms scheduling
   // floor would masquerade as superlinearity on a 32-thread box); a real
   // deployment sizes by bytes-per-partition, which 4096 preserves here
-  private def dataSizedPartitions(factor: Int) =
+  private def dataSizedPartitions(factor: Int): Map[String, String] =
     Map("spark.sql.shuffle.partitions" ->
       math.min(4096, 32 * factor).toString)
 
@@ -361,22 +389,32 @@ object ScaleStress {
       bigConf = dataSizedPartitions))
 
   /** The documented scale-path conf of query `name` at `factor` (empty
-    * for a query with no audit row) — the one table the exponent audit
-    * and [[CoreScale]] both run from. */
+    * for a query with no audit row) — the one table both modes run
+    * from. */
   private[graft] def scalePathConf(name: String, factor: Int): Map[String, String] =
     Heavies.find(_.name == name).fold(Map.empty[String, String])(_.bigConf(factor))
 
-  def main(args: Array[String]): Unit = {
+  /** The `cores` mode's default query list: the graph, dedup and ANN
+    * families with real shuffle/CPU work at ×10. */
+  private val CoresQueries = Seq(
+    "graph_pagerank", "graph_triangles", "graph_local_cc",
+    "graph_bfs_levels", "graph_bfs_converged",
+    "dedup_clusters", "dedup_semantic", "embed_dedup_clusters",
+    "dedup_minhash_lsh", "dedup_recall_eval", "dedup_containment",
+    "sql_q2_mincost", "ann_ivf_kmeans", "tfidf_doc_sim")
+
+  def main(argv: Array[String]): Unit = {
+    val mode = argv.headOption.getOrElse("exponent")
+    require(mode == "exponent" || mode == "cores",
+      s"mode must be 'exponent' or 'cores', got '$mode'")
+    val args = argv.drop(1)
     val small = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val outJson = args.lift(2).getOrElse("SCALE_r7.json")
-    val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    // optional 5th arg: synthesize only these tables — the ×1000 decade
-    // of the documents family must not pay a 600M-row lineitem write
+    val outJson = args.lift(2)
+      .getOrElse(if (mode == "cores") "SCALE_r19_cores.json" else "SCALE_r7.json")
+    val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val tablesOnly = args.lift(4).map(_.split(",").map(_.trim).toSet)
-    val heavies = only.fold(Heavies)(f => Heavies.filter(h => f(h.name)))
-    val spark = GraftSession.local(GraftConf.cpuSpec(32)._2,
-      "spark.driver.memory" -> "8g",
+    val spark = GraftSession.local(GraftConf.cpuSpec(32)._2, Seq(
       // Shuffle codec override for the disk-bound decades: zstd squeezes
       // the pair-heavy band exchanges ~2× tighter than lz4 (minhash slot
       // values are biased small — min of m uniform draws — so their high
@@ -384,7 +422,8 @@ object ScaleStress {
       // exponent is codec-neutral; absolute times are not comparable
       // across artifacts recorded under different codecs (the JSON
       // records the codec).
-      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
+      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4")) ++
+      (if (mode == "cores") dataSizedPartitions(factor) else Nil): _*)
 
     val big = synthesize(spark, small, factor, tablesOnly)
 
@@ -394,79 +433,112 @@ object ScaleStress {
       .filter(t => tablesOnly.forall(_.contains(t)))
       .foreach { t => spark.read.parquet(s"$big/$t.parquet").count() }
 
-    def time(name: String, dir: String, conf: Map[String, String]): Double = {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        // min-of-2: the shared box stalls arbitrary runs; only the floor
-        // is meaningful (NOTES_r02 doctrine).
-        // Materialize via count(), not collect(): the audit measures
-        // ENGINE throughput, and a pair-heavy query's big-corpus output
-        // (dedup_minhash_lsh at ×100: 302M rows) would OOM the driver
-        // buffering rows — a harness artifact a real pipeline (which
-        // writes results out) never pays. Under count() EliminateSorts
-        // drops the output presentation sort — deliberately: a global
-        // orderBy's range-sampling pass re-executes the whole pipeline,
-        // so timing it would DOUBLE the measured work (and its shuffle
-        // files exceed this box's disk at ×100). Catalyst column pruning
-        // under count() can ALSO drop trailing projection expressions
-        // and unreferenced aggregate value expressions (only group keys
-        // feed the cardinality), so absolute times can understate full
-        // query work — and are NOT comparable to the collect()-measured
-        // SCALE_r7* artifacts. The exponent is unaffected either way:
-        // both scales are timed identically.
-        (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, dir).count()
-          val t = (System.nanoTime() - t0) / 1e9
-          // release THIS rep's shuffle files and checkpoint blocks
-          // before the next: ContextCleaner only deletes them after a
-          // JVM GC notices the dropped references, and at ×1000 two
-          // reps' worth of the flagship's exchanges exceeds the box's
-          // disk (the round-10 ENOSPC abort). Cleanup runs OUTSIDE the
-          // timed span — and BLOCKS until the deletions actually land:
-          // a fixed 2 s sleep let rep 2 start while ~50 GB of rep-1
-          // shuffle files were still queued for deletion, and the two
-          // reps' combined footprint ENOSPC'd the box (round-14 abort).
-          spark.catalog.clearCache()
-          System.gc()
-          awaitShuffleCleanup()
-          t
-        }.min
-      } finally conf.keys.foreach(spark.conf.unset)
-    }
-
-    val rows = heavies.map { h =>
-      val bigConf = h.bigConf(factor)
-      val tSmall = time(h.name, small, Map.empty)
-      val tBig = time(h.name, big, bigConf)
-      val ratio = tBig / tSmall
-      val exponent = math.log(ratio) / math.log(factor.toDouble)
-      println(f"[scale] ${h.name}%-24s small=$tSmall%7.2fs big=$tBig%7.2fs " +
-        f"ratio=$ratio%6.2f exp=$exponent%5.2f bound=${h.bound}%.1f" +
-        (if (bigConf.nonEmpty) s" bigConf=${bigConf.mkString(",")}" else ""))
-      (h, bigConf, tSmall, tBig, ratio, exponent)
-    }
-
-    val qJson = rows.map { case (h, bigConf, ts, tb, r, e) =>
-      val confJson =
-        if (bigConf.isEmpty) ""
-        else bigConf.map { case (k, v) => s""""$k":"$v"""" }
-          .mkString(""","big_conf":{""", ",", "}")
-      s""""${h.name}":{"t_small_sec":${f"$ts%.3f"},"t_big_sec":${f"$tb%.3f"},""" +
-        s""""ratio":${f"$r%.3f"},"exponent":${f"$e%.3f"},""" +
-        s""""model":"${h.model}","model_exponent_bound":${h.bound},""" +
-        s""""within_model":${e <= h.bound}$confJson}"""
-    }.mkString(",")
-    val nOver = rows.count { case (h, _, _, _, _, e) => e > h.bound }
-    val codec = spark.conf.get("spark.io.compression.codec", "lz4")
-    val json = s"""{"sf_small":"$small","factor":$factor,""" +
-      s""""shuffle_codec":"$codec",""" +
-      s""""queries":{$qJson},"n_over_model":$nOver}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes("UTF-8"))
-    println(json)
+    val json =
+      if (mode == "cores") cores(spark, big, factor, only.getOrElse(CoresQueries))
+      else exponent(spark, small, big, factor,
+        only.fold(Heavies)(f => Heavies.filter(h => f.contains(h.name))))
+    val line = compact(render(json))
+    java.nio.file.Files.write(java.nio.file.Paths.get(outJson), line.getBytes("UTF-8"))
+    println(line)
     spark.stop()
   }
+
+  /** The `exponent` mode over the synthesized `big` corpus: each heavy
+    * sampled twice at `small`, then twice at `big` under its scale-path
+    * conf; a heavy that failed at `small` is not run at `big`. */
+  private[graft] def exponent(spark: SparkSession, small: String, big: String,
+      factor: Int, heavies: Seq[Heavy],
+      queries: String => (SparkSession, String) => DataFrame = SparkEntry.queries): JObject = {
+    val bigConf = heavies.map(h => h.name -> h.bigConf(factor)).toMap
+    val (smallRuns, smallFailed) =
+      sampleRuns(spark, heavies.map(_.name), small, factor, 2, _ => Map.empty, queries)
+    val (bigRuns, bigFailed) =
+      sampleRuns(spark, smallRuns.map(_._1), big, factor, 2, bigConf, queries)
+    val (tSmall, tBig) = (smallRuns.toMap, bigRuns.toMap)
+    val rows = heavies.filter(h => tBig.contains(h.name)).map { h =>
+      val (ts, tb) = (tSmall(h.name).min, tBig(h.name).min)
+      val exp = math.log(tb / ts) / math.log(factor.toDouble)
+      (h, exp, h.name -> (("t_small_sec" -> r3(ts)) ~ ("t_big_sec" -> r3(tb)) ~
+        ("ratio" -> r3(tb / ts)) ~ ("exponent" -> r3(exp)) ~ ("model" -> h.model) ~
+        ("model_exponent_bound" -> h.bound) ~ ("within_model" -> (exp <= h.bound)) ~
+        ("big_conf" -> Some(bigConf(h.name)).filter(_.nonEmpty))))
+    }
+    ("sf_small" -> small) ~ ("factor" -> factor) ~
+      ("shuffle_codec" -> spark.conf.get("spark.io.compression.codec", "lz4")) ~
+      ("queries" -> JObject(rows.map(_._3).toList)) ~
+      ("n_over_model" -> rows.count { case (h, e, _) => e > h.bound }) ~
+      ("failed" -> (smallFailed ++ bigFailed).sorted)
+  }
+
+  /** The `cores` mode: `names` over the synthesized `big` corpus at their
+    * scale-path conf, re-run until two samples agree (at most 3); the
+    * JSON reports each query's min and samples. */
+  private[graft] def cores(spark: SparkSession, big: String, factor: Int, names: Seq[String],
+      queries: String => (SparkSession, String) => DataFrame = SparkEntry.queries): JObject = {
+    val (runs, failed) =
+      sampleRuns(spark, names, big, factor, 3, scalePathConf(_, factor), queries)
+    ("cpus" -> spark.sparkContext.defaultParallelism) ~ ("factor" -> factor) ~
+      ("shufflePartitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt) ~
+      ("dir" -> big) ~
+      ("queries" -> JObject(runs.map { case (name, v) =>
+        name -> (("min" -> r3(v.min)) ~ ("samples" -> v.map(r3)))
+      }.toList)) ~
+      ("failed" -> failed.sorted)
+  }
+
+  /** Samples `names` over `dir` with [[Bench.sample]] (`maxRuns` per
+    * query, no time budget). Each run sets the query's `conf` and
+    * restores the prior values afterwards — restore, not unset: the conf
+    * may name a setting the session pins (the shuffle partition count
+    * of `cores` mode), and unset would drop it to Spark's default for
+    * every later query. A run is bounded at 60 s per replica (600 s at
+    * ×10); one that throws or times out adds no sample and lands in the
+    * failed list.
+    *
+    * Each run materializes via count(), not collect(): the audit measures
+    * ENGINE throughput, and a pair-heavy query's big-corpus output
+    * (dedup_minhash_lsh at ×100: 302M rows) would OOM the driver
+    * buffering rows — a harness artifact a real pipeline (which writes
+    * results out) never pays. Under count() EliminateSorts drops the
+    * output presentation sort — deliberately: a global orderBy's
+    * range-sampling pass re-executes the whole pipeline, so timing it
+    * would DOUBLE the measured work (and its shuffle files exceed this
+    * box's disk at ×100). Catalyst column pruning under count() can ALSO
+    * drop trailing projection expressions and unreferenced aggregate
+    * value expressions (only group keys feed the cardinality), so
+    * absolute times can understate full query work — and are NOT
+    * comparable to the collect()-measured SCALE_r7* artifacts. The
+    * exponent is unaffected either way: both scales are timed
+    * identically.
+    *
+    * After each run, OUTSIDE the timed span, the run's cache blocks and
+    * shuffle files are released: ContextCleaner only deletes them after
+    * a JVM GC notices the dropped references, and at ×1000 two reps'
+    * worth of the flagship's exchanges exceeds the box's disk (the
+    * round-10 ENOSPC abort). The cleanup BLOCKS until the deletions
+    * actually land ([[awaitShuffleCleanup]]): a fixed 2 s sleep let rep
+    * 2 start while ~50 GB of rep-1 shuffle files were still queued for
+    * deletion (round-14 abort). */
+  private def sampleRuns(spark: SparkSession, names: Seq[String], dir: String,
+      factor: Int, maxRuns: Int, conf: String => Map[String, String],
+      queries: String => (SparkSession, String) => DataFrame)
+      : (Seq[(String, Vector[Double])], Seq[String]) =
+    Bench.sample(names, maxRuns, Double.PositiveInfinity) { name =>
+      val overrides = conf(name)
+      val prior = overrides.keys.map(k => k -> spark.conf.getOption(k))
+      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+      try ops.GuardOps.timedRun(spark, s"scale-$name", 60000L * factor) {
+        queries(name)(spark, dir).count()
+      } finally {
+        prior.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k)
+        }
+        spark.catalog.clearCache()
+        System.gc()
+        awaitShuffleCleanup()
+      }
+    }
 
   /** Blocks until the driver-local shuffle dirs (`blockmgr-*` under
     * java.io.tmpdir) stop shrinking — the ContextCleaner's deletions are

@@ -649,70 +649,43 @@ object DedupOps {
         col("n_lsh"))
   }
 
-  /** One persisted digest table per (application, corpus), shared by
-    * BOTH day-2 dedup forms and across repeated registry runs — before
-    * this cache each call pinned its own copy for the session lifetime,
-    * so a full-registry run leaked one cached digest table per day-2
-    * query (r14 advice). The cache is DELIBERATELY session-lifetime: in
-    * production this IS the written digest table, rebuilt per ingest,
-    * not per query. A `clearCache()` (the ScaleStress between-reps
-    * barrier) drops the storage; the `storageLevel == NONE` check then
-    * rebuilds rather than silently running the consumers uncached. */
-  private val digestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** The TOKEN-SET projection of the PPJoin family's input,
+    * (doc_id, source, sorted-distinct token set, n), pinned once per
+    * corpus ([[PinCache.pinned]]): [[ngramJaccardPairs]],
+    * [[ngramContainment]] and [[dedupYieldCurve]] all read it, and
+    * before the pin each persisted a PRIVATE copy per call for the
+    * session lifetime (r15 advice). In production it IS the written
+    * shingle-set table, rebuilt per ingest.
+    *
+    * NOTE (r18, measured): a rarest-first (df-ascending) prefix order —
+    * the canonical PPJoin global order — was tried here and REVERTED. On
+    * this corpus the candidate join's output is only ~1.34× the true
+    * pair volume (3.85 M collisions for 2.88 M verified pairs at sf0.1:
+    * near-dup families dominate, and family members collide under ANY
+    * order), so the reorder cut nothing while its (source, token) df
+    * aggregate + join added ~2 s to every consumer's tokset build (the
+    * bench clears the cache per query, so five queries pay it). On a
+    * corpus whose candidate volume is collision-driven (hot tokens,
+    * length spread) the df-ordered prefix is the right production lever
+    * — it steers candidates only, never results. */
+  private def toksetTable(spark: SparkSession, sfDir: String): DataFrame =
+    PinCache.pinned(graft.Tables.spreadCompactSource(Tables.documents(spark, sfDir))
+      // compact source must not serialize the pipeline (guarded spread)
+      .select(col("doc_id"), col("source"),
+        array_sort(array_distinct(toks)).as("tokset"))
+      .withColumn("n", size(col("tokset"))))
 
-  /** One persisted TOKEN-SET projection per (application, corpus) —
-    * the [[digestCache]] doctrine applied to the PPJoin family's input
-    * (r15 advice): [[ngramJaccardPairs]], [[ngramContainment]] and
-    * [[dedupYieldCurve]] all project documents to
-    * (doc_id, source, sorted-distinct token set, n) and previously each
-    * persisted a PRIVATE copy per call for the session lifetime —
-    * three copies of essentially the same data. Deliberately
-    * session-lifetime like the digest table (in production it IS the
-    * written shingle-set table, rebuilt per ingest); a `clearCache()`
-    * drops the storage and the `storageLevel == NONE` check rebuilds. */
-  private val toksetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def toksetTable(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "|" + sfDir
-    toksetCache.compute(key, (_, old) =>
-      if (old != null &&
-          old.storageLevel != org.apache.spark.storage.StorageLevel.NONE) old
-      else graft.Tables.spreadCompactSource(Tables.documents(spark, sfDir))
-        // compact source must not serialize the pipeline (guarded spread)
-        .select(col("doc_id"), col("source"),
-          array_sort(array_distinct(toks)).as("tokset"))
-        .withColumn("n", size(col("tokset")))
-        .persist())
-        // NOTE (r18, measured): a rarest-first (df-ascending) prefix
-        // order — the canonical PPJoin global order — was tried here and
-        // REVERTED. On this corpus the candidate join's output is only
-        // ~1.34× the true pair volume (3.85 M collisions for 2.88 M
-        // verified pairs at sf0.1: near-dup families dominate, and
-        // family members collide under ANY order), so the reorder cut
-        // nothing while its (source, token) df aggregate + join added
-        // ~2 s to every consumer's tokset build (the bench clears the
-        // cache per query, so five queries pay it). On a corpus whose
-        // candidate volume is collision-driven (hot tokens, length
-        // spread) the df-ordered prefix is the right production lever —
-        // it steers candidates only, never results.
-  }
-
-  /** Shared day-2 preamble: the per-doc digest table (persisted once per
-    * corpus via [[digestCache]]; doc_id + 16-byte hash, ~25 B a row at
-    * any corpus size, computed in ONE corpus pass) with every row
-    * carrying the broadcast snapshot/batch `cut` (max(doc_id) DIV 2 — no
-    * driver-side collect). Both day-2 dedup forms and both their oracles
-    * key off this ONE split definition. */
+  /** Shared day-2 preamble: the per-doc digest table (doc_id + 16-byte
+    * hash, ~25 B a row at any corpus size, computed in ONE corpus pass),
+    * pinned once per corpus ([[PinCache.pinned]]) and shared by BOTH
+    * day-2 dedup forms — in production it IS the written digest table,
+    * rebuilt per ingest (r14 advice) — with every row carrying the
+    * broadcast snapshot/batch `cut` (max(doc_id) DIV 2 — no driver-side
+    * collect). Both day-2 dedup forms and both their oracles key off this
+    * ONE split definition. */
   private def snapshotBatchSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "|" + sfDir
-    val docs = digestCache.compute(key, (_, old) =>
-      if (old != null &&
-          old.storageLevel != org.apache.spark.storage.StorageLevel.NONE) old
-      else Tables.documents(spark, sfDir)
-        .select(col("doc_id"), TextOps.bagFingerprint.as("content_hash"))
-        .persist())
+    val docs = PinCache.pinned(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), TextOps.bagFingerprint.as("content_hash")))
     docs.crossJoin(broadcast(docs.agg(expr("max(doc_id) DIV 2").as("cut"))))
   }
 

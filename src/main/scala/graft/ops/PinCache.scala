@@ -11,17 +11,17 @@ import org.apache.spark.storage.StorageLevel
   * builder that wants a multi-consumer intermediate pinned routes it
   * through [[pinned]] instead: ONE persisted copy per (application,
   * canonical plan), rebuilt transparently if evicted (`clearCache()`
-  * drops the storage and the `storageLevel == NONE` check rebuilds — the
-  * `toksetCache` doctrine, generalized).
+  * drops the storage and the `storageLevel == NONE` check rebuilds).
   *
   * The cache key is the CANONICALIZED analyzed plan itself, compared
   * structurally (plus the application id), so it needs no per-site key
   * discipline: two calls that build the same plan over the same source
   * share the entry, while a different corpus dir (different scan path)
   * or a different steering conf (different literals baked into the plan
-  * — e.g. `sem.nprobe`'s rank bound) keys separately by construction. Deliberately session-lifetime, like the
-  * digest table: in production these ARE the materialized intermediate
-  * tables of the ingest, rebuilt per corpus version, not per query.
+  * — e.g. `sem.nprobe`'s rank bound) keys separately by construction.
+  * Deliberately session-lifetime: in production these ARE the
+  * materialized intermediate tables of the ingest (the token-set and
+  * digest tables among them), rebuilt per corpus version, not per query.
   */
 private[graft] object PinCache {
   // keyed on the canonicalized LogicalPlan OBJECT (structural equality),

@@ -376,8 +376,9 @@ object StreamOps {
   /** The generation-swap shape on the replay driver: each micro-batch
     * folds into the previous generation (`merge(batch, prev)`, `prev` =
     * None on the first batch), written as a fresh `gen_<id>` dir under a
-    * temp state root and then repointed to — an atomic swap. Returns the
-    * last generation. */
+    * temp state root and then repointed to — an atomic swap. Only the
+    * last generation is ever read, so the one it supersedes is deleted
+    * once the new one is written. Returns the last generation. */
   private[graft] def replayFold(spark: SparkSession, staged: String, glob: String)(
       merge: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
     val stateRoot = java.nio.file.Files.createTempDirectory("graft_fold_state")
@@ -386,6 +387,10 @@ object StreamOps {
       val out = stateRoot.resolve(s"gen_$id").toString
       merge(batch, current.map(spark.read.parquet(_)))
         .write.mode("overwrite").parquet(out)
+      current.filter(_ != out).foreach { prev =>
+        val p = new org.apache.hadoop.fs.Path(prev)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
       current = Some(out)
     }
     spark.read.parquet(current.get)

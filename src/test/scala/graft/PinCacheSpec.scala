@@ -31,7 +31,10 @@ class PinCacheSpec extends SparkSpec {
     // the postings cap is the only caller of its pin
     "dedup_substring_spans" -> Seq("spark.graft.spans.maxDf" -> "8"),
     "mix_corpora" -> Nil,
-    "dsir_resample" -> Nil
+    "dsir_resample" -> Nil,
+    // the day-2 digest table and the PPJoin token-set table
+    "dedup_incremental" -> Nil,
+    "dedup_containment" -> Nil
   ).foreach { case (name, conf) =>
     test(s"$name: a pinned intermediate is not served across corpora") {
       val other = spark.newSession()

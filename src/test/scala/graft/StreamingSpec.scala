@@ -802,8 +802,12 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch incremental MERGE equals the one-shot batch aggregate") {
-    val streamed = StreamOps.upsertMergeRun(spark, sf)
-      .orderBy("u_custkey").collect()
+    val store = StreamOps.upsertMergeRun(spark, sf)
+    // four staged slices, four generations: only the last stays on disk
+    val stateRoot = new java.io.File(new java.net.URI(store.inputFiles.head))
+      .getParentFile.getParentFile
+    assert(stateRoot.list().filter(_.startsWith("gen_")).toSeq === Seq("gen_3"))
+    val streamed = store.orderBy("u_custkey").collect()
     val batch = Tables.orders(spark, sf)
       .filter(col("o_orderstatus") === "O")
       .groupBy(col("o_custkey").as("u_custkey"))
