@@ -24,9 +24,11 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *    timed action) and `execute` — the phases never sum past the wall;
   *  - `jobs`, `stages`, `tasks` and, per completed stage, executor run,
   *    CPU and GC time, shuffle read and write, and memory/disk spill;
-  *  - `fixpoint_round_jobs` and `fixpoint_fallback_jobs`: the jobs among
-  *    `jobs` that [[ops.Fixpoint]] ran as round checkpoints and as
-  *    fallback counts after a missed observation;
+  *  - `fixpoint_round_jobs`, `fixpoint_fallback_jobs` and
+  *    `fixpoint_local_jobs`: the jobs among `jobs` that [[ops.Fixpoint]]
+  *    ran as round checkpoints, as fallback counts after a missed
+  *    observation, and as the collect of a driver-local finish — so a
+  *    record shows which path a fixpoint took;
   *  - `plan_shape`: Exchange, ReusedExchange, Sort and WholeStageCodegen
   *    counts of the final plan (adaptive stages and subqueries included);
   *  - `plan`: that final executed plan.
@@ -159,6 +161,7 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
           ("physical_s" -> ms(physical)) ~ ("execute_s" -> ms(left))) ~
         ("jobs" -> nJobs) ~ ("fixpoint_round_jobs" -> fixpoint("round")) ~
         ("fixpoint_fallback_jobs" -> fixpoint("fallback")) ~
+        ("fixpoint_local_jobs" -> fixpoint("local")) ~
         ("stages" -> ran.size) ~ ("tasks" -> ran.map(_._1).sum) ~
         ("stage_metrics" -> ran.map(_._2)) ~
         ("plan_shape" -> Seq("exchanges", "reused_exchanges", "sorts", "codegen_stages")

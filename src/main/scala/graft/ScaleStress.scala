@@ -536,27 +536,38 @@ object ScaleStress {
         }
         spark.catalog.clearCache()
         System.gc()
-        awaitShuffleCleanup()
+        awaitShuffleCleanup(spark)
       }
     }
 
-  /** Blocks until the driver-local shuffle dirs (`blockmgr-*` under
-    * java.io.tmpdir) stop shrinking — the ContextCleaner's deletions are
-    * asynchronous, and the between-reps barrier must observe them
-    * COMPLETE, not merely enqueued, before the next rep starts writing.
-    * Bounded at ~2 min; re-GCs halfway in case the first GC ran before
-    * the last RDD references were dropped. */
-  private def awaitShuffleCleanup(): Unit = {
-    def shuffleBytes: Long = {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      val roots = Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("blockmgr-"))
-      def du(f: java.io.File): Long =
-        if (f.isFile) f.length()
-        else Option(f.listFiles()).getOrElse(Array.empty).map(du).sum
-      roots.map(du).sum
-    }
-    var prev = shuffleBytes
+  /** The roots Spark creates its `blockmgr-*` dirs under, looked up in
+    * Spark's own order: `SPARK_LOCAL_DIRS`, else `spark.local.dir`, else
+    * java.io.tmpdir (each a comma-separated list). */
+  private[graft] def localDirs(env: Map[String, String],
+      conf: org.apache.spark.SparkConf): Seq[java.io.File] =
+    env.get("SPARK_LOCAL_DIRS").filter(_.trim.nonEmpty)
+      .getOrElse(conf.get("spark.local.dir", System.getProperty("java.io.tmpdir")))
+      .split(",").map(_.trim).filter(_.nonEmpty).map(new java.io.File(_)).toSeq
+
+  /** Bytes under the `blockmgr-*` dirs of this JVM's local dirs. */
+  private[graft] def shuffleBytes(spark: SparkSession): Long = {
+    def du(f: java.io.File): Long =
+      if (f.isFile) f.length()
+      else Option(f.listFiles()).getOrElse(Array.empty).map(du).sum
+    localDirs(sys.env, spark.sparkContext.getConf)
+      .flatMap(root => Option(root.listFiles()).getOrElse(Array.empty))
+      .filter(f => f.isDirectory && f.getName.startsWith("blockmgr-"))
+      .map(du).sum
+  }
+
+  /** Blocks until the driver-local shuffle dirs ([[shuffleBytes]]) stop
+    * shrinking — the ContextCleaner's deletions are asynchronous, and
+    * the between-reps barrier must observe them COMPLETE, not merely
+    * enqueued, before the next rep starts writing. Bounded at ~2 min;
+    * re-GCs halfway in case the first GC ran before the last RDD
+    * references were dropped. */
+  private def awaitShuffleCleanup(spark: SparkSession): Unit = {
+    var prev = shuffleBytes(spark)
     var stable = 0
     var rounds = 0
     // wait while the footprint is large and still moving; exit once it
@@ -564,7 +575,7 @@ object ScaleStress {
     while (prev > (2L << 30) && stable < 3 && rounds < 60) {
       Thread.sleep(2000)
       if (rounds == 10) System.gc()
-      val cur = shuffleBytes
+      val cur = shuffleBytes(spark)
       if (cur >= prev) stable += 1 else stable = 0
       prev = cur
       rounds += 1

@@ -644,10 +644,4 @@ object VectorFunctions {
   /** Single-pass 64-bit SimHash of a token-array column. */
   def simhash64(tokens: Column): Column =
     ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
-
-  /** Cosine similarity given precomputed squared norms. */
-  def cosineWithNorms(a: Column, b: Column, na: Column, nb: Column): Column = {
-    import org.apache.spark.sql.functions.sqrt
-    vecDot(a, b) / sqrt(na * nb)
-  }
 }

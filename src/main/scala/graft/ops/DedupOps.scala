@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication suite over `documents` — the north-star LLM-pipeline
   * operators (BASELINE.json north_star; SURVEY.md §2b Q9/Q26).
@@ -420,10 +421,11 @@ object DedupOps {
     * turns pairwise similarity into dedup DECISIONS (one keeper per
     * cluster, the rest dropped).
     *
-    * Algorithm: [[connectedComponents]] over the pair graph — min-label
+    * Algorithm: [[connectedComponents]] over the pair graph — union-find
+    * on the driver when the pairs fit its row budget, else min-label
     * propagation plus pointer jumping as pure DataFrame ops, one
-    * [[Fixpoint]] round each; a round's only driver-side value is the
-    * count of labels it changed, no collect.
+    * [[Fixpoint]] round each. Cluster sizes are a window count over the
+    * label, so the labels are not joined back to their own aggregate.
     *
     * Scale: near-dup clusters at J ≥ 0.9 are near-cliques (diameter ≤ ~3),
     * so the loop converges in a handful of rounds even at 100 TB, and
@@ -433,13 +435,10 @@ object DedupOps {
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = ngramJaccardPairs(spark, sfDir).select(col("doc_a"), col("doc_b"))
     val nodes = Tables.documents(spark, sfDir).select(col("doc_id"))
-    val labels = connectedComponents(nodes, pairs)
-    val sizes = labels.groupBy(col("label").as("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
-      .join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("cluster_id")).as("is_keeper"))
+    connectedComponents(nodes, pairs)
+      .select(col("doc_id"), col("label").as("cluster_id"),
+        count(lit(1)).over(Window.partitionBy("label")).as("cluster_size"),
+        (col("doc_id") === col("label")).as("is_keeper"))
       .orderBy("doc_id")
   }
 
@@ -468,21 +467,46 @@ object DedupOps {
   private[graft] def SigK: Int = K
 
   /** Reusable connected components: `nodes` (doc_id) + undirected `pairs`
-    * (doc_a, doc_b) → (doc_id, label) with label = min node id reachable.
-    * Each round is min-label propagation over edges PLUS pointer jumping
-    * (label ← label's label): propagation alone needs O(diameter) rounds
-    * — catastrophic for the adversarial long-chain components a 100 TB
-    * dedup graph can contain — while the jump step halves pointer-chain
-    * depth every round, so convergence is O(log diameter) (a 10M-node
-    * chain resolves in ~25 rounds, not 10M). Every label value is itself
-    * a node id, so the jump is a plain self-equi-join. Rounds run on
-    * [[Fixpoint.run]]; `pairs` is checkpointed once on entry (its two
-    * edge directions would otherwise each re-execute the pair
-    * enumeration). The loop runs only over edge-involved nodes — per-round
-    * work scales with the duplicate subgraph, not the corpus — and
-    * isolated nodes rejoin afterwards with their own id as label. */
-  def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    val p = Fixpoint.eagerCheckpoint(pairs)
+    * (doc_a, doc_b) of Long ids → (doc_id, label) with label = min node
+    * id reachable. `pairs` is checkpointed once on entry (its two edge
+    * directions would otherwise each re-execute the pair enumeration),
+    * and that checkpoint's action also counts its rows.
+    *
+    * A pair graph of at most [[localFinishRows]] rows never runs a round:
+    * its rows are collected once (a `local` [[Fixpoint]] job) and
+    * labelled by min-root union-find on the driver ([[minRootLabels]]).
+    *
+    * A larger one runs [[Fixpoint.run]] rounds of min-label propagation
+    * over edges PLUS pointer jumping (label ← label's label): propagation
+    * alone needs O(diameter) rounds — catastrophic for the adversarial
+    * long-chain components a 100 TB dedup graph can contain — while the
+    * jump step halves pointer-chain depth every round, so convergence is
+    * O(log diameter) (a 10M-node chain resolves in ~25 rounds, not 10M).
+    * Every label value is itself a node id, so the jump is a plain
+    * self-equi-join. Both paths give the same labels.
+    *
+    * Only edge-involved nodes are labelled — the work scales with the
+    * duplicate subgraph, not the corpus — and isolated nodes rejoin
+    * afterwards with their own id as label. */
+  def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame =
+    connectedComponents(nodes, pairs, localFinishRows)
+
+  /** [[connectedComponents]] with a driver budget of `localRows` pair
+    * rows; `0` forces the rounds. */
+  private[graft] def connectedComponents(nodes: DataFrame, pairs: DataFrame,
+      localRows: Int): DataFrame = {
+    val (p, nPairs) = Fixpoint.checkpointAndCount(pairs, lit(true), role = None)
+    val labels =
+      if (localRows > 0 && nPairs <= localRows) minRootLabels(p.sparkSession, Fixpoint.collectLocal(p))
+      else roundLabels(p)
+    nodes.select(col(nodes.columns(0)).as("doc_id"))
+      .join(labels, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
+  }
+
+  /** [[connectedComponents]]' distributed rounds over the checkpointed
+    * pairs `p`. */
+  private def roundLabels(p: DataFrame): DataFrame = {
     val edges = p.select(col(p.columns(0)).as("src"), col(p.columns(1)).as("dst"))
       .union(p.select(col(p.columns(1)).as("src"), col(p.columns(0)).as("dst")))
       .persist()
@@ -493,7 +517,7 @@ object DedupOps {
     // Isolated nodes rejoin with label = own id after convergence.
     val init = Fixpoint.eagerCheckpoint(edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id")))
-    val labels = try Fixpoint.run("connectedComponents", init) { (labels, _) =>
+    try Fixpoint.run("connectedComponents", init) { (labels, _) =>
       val nbrMin = edges.join(labels, col("src") === col("doc_id"))
         .groupBy(col("dst"))
         .agg(min("label").as("nbr_min"))
@@ -512,9 +536,58 @@ object DedupOps {
           .select(col("doc_id"), col("prev"), col("p_label").as("label")),
         col("label") =!= col("prev"), _.select("doc_id", "label"))
     } finally edges.unpersist()
-    nodes.select(col(nodes.columns(0)).as("doc_id"))
-      .join(labels, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
+  }
+
+  /** Driver heap one pair row of [[connectedComponents]]' driver-local
+    * finish may allocate: the collected row, the union-find arrays and
+    * up to two rows of the label map joined back as a local relation.
+    * Allocation bounds what the finish holds at once. `FixpointSpec`
+    * measures the allocation slope on the worst shape, a matching (two
+    * label rows a pair): ~1.4 KB a pair row on JDK 17 / Spark 4.1. */
+  private[graft] val LocalFinishBytesPerRow: Long = 2048
+
+  /** Row cap of the driver-local finish on any heap, which keeps the
+    * label map riding the query's plan to a few MB of ids. */
+  private[graft] val LocalFinishMaxRows: Int = 1 << 18
+
+  /** Pair rows [[connectedComponents]] finishes on the driver: an eighth
+    * of the driver's max heap at [[LocalFinishBytesPerRow]] a row, capped
+    * at [[LocalFinishMaxRows]] (reached from a 4 GiB heap up; a 1 GiB
+    * heap finishes up to 65,536 pairs). */
+  private[graft] def localFinishRows: Int = math.min(LocalFinishMaxRows.toLong,
+    Runtime.getRuntime.maxMemory / 8 / LocalFinishBytesPerRow).toInt
+
+  /** Min-root union-find over collected edge rows `(x, y)` of Long ids,
+    * on the driver: every id that occurs maps to the least id connected
+    * to it, returned as a local relation `(doc_id, label)`. The ids are
+    * sorted once and a union keeps the smaller index as root, so a root
+    * is always its set's minimum. Rows with a null end are skipped, as
+    * the rounds' equi-joins skip them. State beside the rows: the two
+    * id columns, the sorted ids and one Int parent per id. */
+  private def minRootLabels(spark: SparkSession, rows: Array[Row]): DataFrame = {
+    val ends = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val xs = ends.map(_.getLong(0))
+    val ys = ends.map(_.getLong(1))
+    val ids = xs ++ ys
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for (i <- xs.indices) {
+      val (rx, ry) = (find(at(xs(i))), find(at(ys(i))))
+      if (rx < ry) parent(ry) = rx else if (ry < rx) parent(rx) = ry
+    }
+    val out = new java.util.ArrayList[Row](n)
+    for (i <- 0 until n) out.add(Row(ids(i), ids(find(i))))
+    spark.createDataFrame(out, StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("label", LongType, nullable = false))))
   }
 
   /** Cross-document repeated-span detection — the substring-level exact

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** The one driver of the engine's DataFrame fixpoint loops
@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   * copies of the input and the driver becomes the bottleneck (60 s of
   * driver CPU at sf0.1 vs ~4 s checkpointed).
   *
-  * Round jobs carry the local property [[JobKey]]: `round` on the
+  * Fixpoint jobs carry the local property [[JobKey]]: `round` on the
   * checkpoint action, `fallback` on the count job run after a missed
-  * observation ([[graft.Probe]] reports both). */
+  * observation, `local` on the collect of a driver-local finish that
+  * replaces the rounds ([[collectLocal]]; [[graft.Probe]] reports all
+  * three). */
 object Fixpoint {
   /** Round cap of every loop. CC's rounds are ≈ log₂(diameter) with
     * pointer jumping, so 50 covers any graph with Long ids; BFS's are
@@ -60,13 +62,20 @@ object Fixpoint {
   /** Eagerly checkpoints `frame` and counts its rows where `progress`
     * holds, in one action: the count rides the checkpoint as an observed
     * metric. A missed observation falls back to a count job over the
-    * checkpointed frame, which delays the round and never changes it. */
-  private def checkpointAndCount(frame: DataFrame, progress: Column): (DataFrame, Long) = {
+    * checkpointed frame, which delays the round and never changes it.
+    * The checkpoint job is tagged `role` (none: an input checkpoint, not
+    * a round). */
+  private[graft] def checkpointAndCount(frame: DataFrame, progress: Column,
+      role: Option[String] = Some("round")): (DataFrame, Long) = {
     val obs = Observation()
-    val cp = tagged(frame, "round")(eagerCheckpoint(
+    val cp = tagged(frame, role.orNull)(eagerCheckpoint(
       frame.observe(obs, count(when(progress, lit(1))).as("progress"))))
     (cp, observedLong(obs, "progress")(tagged(cp, "fallback")(cp.filter(progress).count())))
   }
+
+  /** All rows of `df`, collected in one job tagged `local`: the input of
+    * a driver-local finish whose row count is already known to fit. */
+  private[graft] def collectLocal(df: DataFrame): Array[Row] = tagged(df, "local")(df.collect())
 
   private def tagged[T](df: DataFrame, role: String)(job: => T): T = {
     val sc = df.sparkSession.sparkContext

@@ -307,13 +307,10 @@ object SimOps {
       .filter(col("cos") >= ClusterCosThreshold)
       .select(col("a_vec_id").as("vec_a"), col("b_vec_id").as("vec_b"))
     val nodes = Tables.embeddings(spark, sfDir).select(col("vec_id"))
-    val labels = DedupOps.connectedComponents(nodes, pairs)
-    val sizes = labels.groupBy(col("label").as("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.select(col("doc_id").as("vec_id"), col("label").as("cluster_id"))
-      .join(sizes, "cluster_id")
-      .select(col("vec_id"), col("cluster_id"), col("cluster_size"),
-        (col("vec_id") === col("cluster_id")).as("is_keeper"))
+    DedupOps.connectedComponents(nodes, pairs)
+      .select(col("doc_id").as("vec_id"), col("label").as("cluster_id"),
+        count(lit(1)).over(Window.partitionBy("label")).as("cluster_size"),
+        (col("doc_id") === col("label")).as("is_keeper"))
       .orderBy("vec_id")
   }
 
@@ -597,16 +594,15 @@ object SimOps {
       .select(col("a_vec_id").as("vec_a"), col("b_vec_id").as("vec_b"))
     val labels = DedupOps.connectedComponents(assigned.select(col("vec_id")), pairs)
       .select(col("doc_id").as("vec_id"), col("label").as("group_id"))
-    val sizes = labels.groupBy("group_id")
-      .agg(count(lit(1)).as("group_size"))
+    // one window spec for both: the size counts the whole partition
     val wKeep = Window.partitionBy("group_id")
       .orderBy(col("ccos").asc, col("vec_id").asc)
     labels
       .join(assigned.select("vec_id", "cell", "ccos"), "vec_id")
-      .withColumn("rnk", row_number().over(wKeep))
-      .join(sizes, "group_id")
-      .select(col("vec_id"), col("cell"), col("group_id"), col("group_size"),
-        (col("rnk") === 1).as("is_keeper"))
+      .select(col("vec_id"), col("cell"), col("group_id"),
+        count(lit(1)).over(wKeep.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as("group_size"),
+        (row_number().over(wKeep) === 1).as("is_keeper"))
       .orderBy("vec_id")
   }
 
@@ -1921,19 +1917,6 @@ object SimOps {
   private def sqlPqCentList(m: Int, k: Int): String =
     pqCent(m, k).map(x => if (x == x.floor) s"${x.toLong}.0" else x.toString)
       .mkString("[", ", ", "]")
-
-  /** [[sqlPqCentList]] over an arbitrary literal book (the refine tier's
-    * second book). */
-  private def sqlPqCentListOf(cb: Map[(Int, Int), Seq[Double]],
-      m: Int, k: Int): String =
-    cb((m, k)).map(x => if (x == x.floor) s"${x.toLong}.0" else x.toString)
-      .mkString("[", ", ", "]")
-
-  /** [[sqlPqDist]] over an arbitrary literal book. */
-  private def sqlPqDistOf(cb: Map[(Int, Int), Seq[Double]],
-      m: Int, k: Int): String =
-    s"list_sum(list_transform(list_zip(d[${1 + m * PqSub}:${(m + 1) * PqSub}], " +
-      s"${sqlPqCentListOf(cb, m, k)}), z -> (z[1] - z[2]) * (z[1] - z[2])))"
 
   /** Squared-L2 distance of subspace m against codebook entry k — the
     * same left-to-right element fold the Spark `aggregate` performs. */

@@ -9,11 +9,6 @@ import org.apache.spark.sql.functions._
   * conf it touched. */
 class ConfParamSpec extends SparkSpec {
 
-  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
-    try { kvs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   test("chunk_documents: halving the chunk window doubles-ish the chunk count") {
     val base = q("chunk_documents").count()
     val fine = withConf(

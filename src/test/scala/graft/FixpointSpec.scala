@@ -80,17 +80,18 @@ class FixpointSpec extends SparkSpec {
     } finally new scala.reflect.io.Directory(dir).deleteRecursively()
   }
 
-  /** Round jobs (tagged `round` by the driver) run inside `body`,
-    * counted once the listener bus has delivered every job start. */
-  private def roundJobs[T](body: => T): (Int, scala.util.Try[T]) = {
+  /** Fixpoint jobs by role (`round`, `fallback`, `local`) run inside
+    * `body`, counted once the listener bus has delivered every job start. */
+  private def fixpointJobs[T](body: => T): (Map[String, Int], scala.util.Try[T]) = {
     val sc = spark.sparkContext
-    val rounds = new AtomicInteger(0)
+    val roles = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
     val markerSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(key: String) = Option(e.properties).flatMap(p => Option(p.getProperty(key)))
         if (prop("graft.test.marker").isDefined) markerSeen.countDown()
-        else if (prop(ops.Fixpoint.JobKey).contains("round")) rounds.incrementAndGet()
+        else prop(ops.Fixpoint.JobKey).foreach(
+          roles.computeIfAbsent(_, _ => new AtomicInteger(0)).incrementAndGet())
       }
     }
     sc.addSparkListener(listener)
@@ -102,17 +103,70 @@ class FixpointSpec extends SparkSpec {
       assert(markerSeen.await(10, TimeUnit.SECONDS), "marker job never reached the listener")
       r
     } finally sc.removeSparkListener(listener)
-    (rounds.get, result)
+    import scala.jdk.CollectionConverters._
+    (roles.asScala.map { case (k, v) => k -> v.get }.toMap.withDefaultValue(0), result)
+  }
+
+  /** Connected components of a path graph 0 — 1 — … — (n−1) plus one
+    * isolated node n at a driver budget of `localRows` pair rows, as
+    * (doc_id, label) pairs. */
+  private def chainComponents(n: Int, localRows: Int): Seq[(Long, Long)] = {
+    import spark.implicits._
+    val pairs = (0L until n - 1L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    ops.DedupOps.connectedComponents(spark.range(n + 1L).toDF("doc_id"), pairs, localRows)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sortBy(_._1)
+  }
+
+  test("connectedComponents finishes a graph within the budget on the driver: no round, one local job") {
+    val (jobs, labels) = fixpointJobs(chainComponents(10, ops.DedupOps.localFinishRows))
+    assert(labels.get === (0L until 10L).map(_ -> 0L) :+ (10L -> 10L))
+    assert(jobs("round") === 0 && jobs("local") === 1, jobs.toString)
+  }
+
+  test("connectedComponents runs the rounds on budget + 1 pairs, and on any graph at budget 0") {
+    // 9 pairs over budget 8 (each round is several jobs: its joins'
+    // stages run as jobs under adaptive execution)
+    val (jobs, labels) = fixpointJobs(chainComponents(10, 8))
+    assert(labels.get === (0L until 10L).map(_ -> 0L) :+ (10L -> 10L))
+    assert(jobs("round") > 0 && jobs("local") === 0, jobs.toString)
+    val (forced, same) = fixpointJobs(chainComponents(10, 0))
+    assert(same.get === labels.get)
+    assert(forced("round") > 0 && forced("local") === 0, forced.toString)
+  }
+
+  test("the driver-local finish allocates at most LocalFinishBytesPerRow of driver heap a pair row") {
+    import scala.jdk.CollectionConverters._
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    // the driver's share of the finish: this thread (decoding the
+    // collected rows, union-find, the local relation) and the threads
+    // that deserialize task results
+    def driverThreads = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t == Thread.currentThread || t.getName.startsWith("task-result-getter"))
+      .map(_.getId)
+    // a matching (2i, 2i+1) puts two ids in the label map per pair, the most a pair can
+    def allocatedFor(n: Long): Long = {
+      val pairs = spark.range(n).select((col("id") * 2).as("doc_a"), (col("id") * 2 + 1).as("doc_b"))
+      val before = driverThreads.map(id => id -> mx.getThreadAllocatedBytes(id)).toMap
+      ops.DedupOps.connectedComponents(spark.range(0).toDF("doc_id"), pairs, n.toInt)
+      driverThreads.map(id => mx.getThreadAllocatedBytes(id) - before.getOrElse(id, 0L)).sum
+    }
+    val (small, large) = (20000L, 100000L)
+    allocatedFor(small) // warm-up: JIT and the result threads
+    // the slope cancels the fixed cost of planning and the checkpoint job
+    val perRow = (allocatedFor(large) - allocatedFor(small)).toDouble / (large - small)
+    info(f"driver-local finish: $perRow%.0f B allocated a pair row")
+    assert(perRow > 0 && perRow <= ops.DedupOps.LocalFinishBytesPerRow, f"$perRow%.0f B a row")
   }
 
   test("a loop that never stops progressing throws after exactly the cap's round jobs") {
     val frame = spark.range(3).toDF("id") // one job per checkpoint: no shuffle
-    val (jobs, result) = roundJobs {
+    val (jobs, result) = fixpointJobs {
       ops.Fixpoint.run("neverConverges", frame) { (df, _) =>
         ops.Fixpoint.Round(df, lit(true), cp => cp)
       }
     }
-    assert(jobs === ops.Fixpoint.MaxRounds, "one round job per round, up to the cap")
+    assert(jobs("round") === ops.Fixpoint.MaxRounds, "one round job per round, up to the cap")
     val e = result.failed.get
     assert(e.isInstanceOf[IllegalStateException], e.toString)
     assert(e.getMessage.contains("neverConverges") &&
@@ -122,13 +176,13 @@ class FixpointSpec extends SparkSpec {
   test("a loop stops after its first round without progress") {
     // each round drops the zeros and decrements the rest: {0..3} reaches
     // {0} in 3 rounds, and the third is the first with no positive id
-    val (jobs, result) = roundJobs {
+    val (jobs, result) = fixpointJobs {
       ops.Fixpoint.run("countdown", spark.range(4).toDF("id")) { (df, _) =>
         ops.Fixpoint.Round(df.filter(col("id") > 0).select((col("id") - 1).as("id")),
           col("id") > 0, cp => cp)
       }
     }
-    assert(jobs === 3)
+    assert(jobs("round") === 3)
     assert(result.get.collect().map(_.getLong(0)).toSeq === Seq(0L))
   }
 

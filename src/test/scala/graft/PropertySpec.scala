@@ -41,8 +41,11 @@ class PropertySpec extends SparkSpec {
       val pairs =
         if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
         else edges.toDF("doc_a", "doc_b")
-      val got = graft.ops.DedupOps.connectedComponents(nodes, pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // the driver-local finish (default budget) and the rounds (budget
+      // 0) must both give the reference labels
+      def labels(localRows: Int) =
+        graft.ops.DedupOps.connectedComponents(nodes, pairs, localRows)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // BFS reference
       val adj = scala.collection.mutable.Map.empty[Long, List[Long]].withDefaultValue(Nil)
       edges.foreach { case (a, b) => adj(a) = b :: adj(a); adj(b) = a :: adj(b) }
@@ -59,7 +62,8 @@ class PropertySpec extends SparkSpec {
           seen.foreach(v => ref(v) = label)
         }
       }
-      assert(got === ref.toMap, s"n=$n edges=$edges")
+      for (localRows <- Seq(graft.ops.DedupOps.localFinishRows, 0))
+        assert(labels(localRows) === ref.toMap, s"localRows=$localRows n=$n edges=$edges")
     }
   }
 

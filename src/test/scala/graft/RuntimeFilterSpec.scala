@@ -16,18 +16,8 @@ import org.apache.spark.sql.functions._
   * injection-eligible, not to re-test Spark's defaults. */
 class RuntimeFilterSpec extends SparkSpec {
 
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("selective fact-fact join gets a runtime bloom filter on the probe side") {
-    withConfs(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtimeFilter.number.threshold" -> "10",

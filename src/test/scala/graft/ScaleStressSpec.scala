@@ -37,6 +37,24 @@ class ScaleStressSpec extends SparkSpec {
 
   private def keys(v: JValue): Set[String] = v.asInstanceOf[JObject].obj.map(_._1).toSet
 
+  test("shuffle footprint: local dirs in Spark's order, non-zero after a shuffle") {
+    val conf = new org.apache.spark.SparkConf(false).set("spark.local.dir", "/l1,/l2")
+    def paths(env: Map[String, String], c: org.apache.spark.SparkConf) =
+      ScaleStress.localDirs(env, c).map(_.getPath)
+    assert(paths(Map("SPARK_LOCAL_DIRS" -> "/e1, /e2"), conf) === Seq("/e1", "/e2"))
+    assert(paths(Map.empty, conf) === Seq("/l1", "/l2"))
+    assert(paths(Map.empty, new org.apache.spark.SparkConf(false)) ===
+      Seq(System.getProperty("java.io.tmpdir")))
+    // the live session, wherever its local dirs were set: a shuffle still
+    // referenced here keeps its files on disk
+    val shuffled = spark.sparkContext.parallelize(1 to 100000, 4)
+      .map(i => (i % 97, i.toLong)).reduceByKey(_ + _)
+    assert(shuffled.count() === 97)
+    assert(ScaleStress.shuffleBytes(spark) > 0,
+      s"no blockmgr-* bytes under ${ScaleStress.localDirs(sys.env, spark.sparkContext.getConf)}")
+    assert(shuffled.values.sum() === (1 to 100000).map(_.toLong).sum)
+  }
+
   test("exponent: two samples per query and corpus, a throwing query is failed, the conf is restored") {
     val (builds, queries) = recording()
     val before = spark.conf.get(Partitions)

@@ -169,13 +169,13 @@ class TextDedupSpec extends SparkSpec {
     // a path graph of diameter 1999: plain min-propagation needs ~2000
     // rounds and would exhaust the 50-iteration bound; pointer jumping
     // converges in O(log d) ≈ 11 rounds. This test is the differentiator
-    // that keeps the scalability claim honest.
-    import spark.implicits._
+    // that keeps the scalability claim honest, so it pins the driver
+    // budget to 0: the chain would otherwise finish by union-find.
     val n = 2000L
     val nodes = spark.range(n).toDF("doc_id")
     val pairs = spark.range(n - 1)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val labels = graft.ops.DedupOps.connectedComponents(nodes, pairs)
+    val labels = graft.ops.DedupOps.connectedComponents(nodes, pairs, localRows = 0)
     assert(labels.filter(col("label") =!= 0L).count() === 0)
     assert(labels.count() === n)
   }
