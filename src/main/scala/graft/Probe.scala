@@ -29,6 +29,9 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *    ran as round checkpoints, as fallback counts after a missed
   *    observation, and as the collect of a driver-local finish — so a
   *    record shows which path a fixpoint took;
+  *  - `driver_result_bytes`: the serialized task results the driver
+  *    received over the query (the sum of task `resultSize`), e.g. what
+  *    a driver-local finish pulled;
   *  - `plan_shape`: Exchange, ReusedExchange, Sort and WholeStageCodegen
   *    counts of the final plan (adaptive stages and subqueries included);
   *  - `plan`: that final executed plan.
@@ -75,7 +78,7 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
   private val barrierStages = mutable.Set[Int]()
   private var jobs = 0
   private val fixpointJobs = mutable.Map[String, Int]().withDefaultValue(0) // by role
-  private val stages = mutable.ArrayBuffer[(Int, JObject)]() // (tasks, metrics)
+  private val stages = mutable.ArrayBuffer[(Int, Long, JObject)]() // (tasks, result bytes, metrics)
 
   sc.addSparkListener(new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = Probe.this.synchronized {
@@ -90,13 +93,14 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
       if (!barrierStages(si.stageId)) {
         val m = si.taskMetrics
         def mb(bytes: Long) = r3(bytes / 1048576.0)
-        stages += si.numTasks -> (("id" -> si.stageId) ~ ("name" -> si.name) ~ ("tasks" -> si.numTasks) ~
+        stages += ((si.numTasks, m.resultSize,
+          ("id" -> si.stageId) ~ ("name" -> si.name) ~ ("tasks" -> si.numTasks) ~
           ("run_s" -> r3(m.executorRunTime / 1e3)) ~ ("cpu_s" -> r3(m.executorCpuTime / 1e9)) ~
           ("gc_s" -> r3(m.jvmGCTime / 1e3)) ~
           ("shuffle_read_mb" -> mb(m.shuffleReadMetrics.totalBytesRead)) ~
           ("shuffle_write_mb" -> mb(m.shuffleWriteMetrics.bytesWritten)) ~
           ("spill_mem_mb" -> mb(m.memoryBytesSpilled)) ~
-          ("spill_disk_mb" -> mb(m.diskBytesSpilled)))
+          ("spill_disk_mb" -> mb(m.diskBytesSpilled))))
       }
     }
   })
@@ -162,8 +166,9 @@ class Probe(spark: SparkSession) extends AdaptiveSparkPlanHelper {
         ("jobs" -> nJobs) ~ ("fixpoint_round_jobs" -> fixpoint("round")) ~
         ("fixpoint_fallback_jobs" -> fixpoint("fallback")) ~
         ("fixpoint_local_jobs" -> fixpoint("local")) ~
+        ("driver_result_bytes" -> ran.map(_._2).sum) ~
         ("stages" -> ran.size) ~ ("tasks" -> ran.map(_._1).sum) ~
-        ("stage_metrics" -> ran.map(_._2)) ~
+        ("stage_metrics" -> ran.map(_._3)) ~
         ("plan_shape" -> Seq("exchanges", "reused_exchanges", "sorts", "codegen_stages")
           .map(k => k -> shape.count(_ == k)).toMap) ~
         ("plan" -> counted.executedPlan.toString)

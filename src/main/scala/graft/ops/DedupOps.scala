@@ -1,10 +1,15 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.Platform
 
 /** Deduplication suite over `documents` — the north-star LLM-pipeline
   * operators (BASELINE.json north_star; SURVEY.md §2b Q9/Q26).
@@ -472,9 +477,10 @@ object DedupOps {
     * directions would otherwise each re-execute the pair enumeration),
     * and that checkpoint's action also counts its rows.
     *
-    * A pair graph of at most [[localFinishRows]] rows never runs a round:
-    * its rows are collected once (a `local` [[Fixpoint]] job) and
-    * labelled by min-root union-find on the driver ([[minRootLabels]]).
+    * A pair graph of at most [[Fixpoint.localFinishRows]] rows never runs
+    * a round: its rows are packed to the driver once (a `local`
+    * [[Fixpoint]] job) and labelled by min-root union-find there
+    * ([[minRootLabels]]).
     *
     * A larger one runs [[Fixpoint.run]] rounds of min-label propagation
     * over edges PLUS pointer jumping (label ← label's label): propagation
@@ -489,7 +495,7 @@ object DedupOps {
     * duplicate subgraph, not the corpus — and isolated nodes rejoin
     * afterwards with their own id as label. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame =
-    connectedComponents(nodes, pairs, localFinishRows)
+    connectedComponents(nodes, pairs, Fixpoint.localFinishRows)
 
   /** [[connectedComponents]] with a driver budget of `localRows` pair
     * rows; `0` forces the rounds. */
@@ -497,7 +503,7 @@ object DedupOps {
       localRows: Int): DataFrame = {
     val (p, nPairs) = Fixpoint.checkpointAndCount(pairs, lit(true), role = None)
     val labels =
-      if (localRows > 0 && nPairs <= localRows) minRootLabels(p.sparkSession, Fixpoint.collectLocal(p))
+      if (Fixpoint.fitsLocal(nPairs, localRows)) minRootLabels(p.sparkSession, Fixpoint.collectLocal(p))
       else roundLabels(p)
     nodes.select(col(nodes.columns(0)).as("doc_id"))
       .join(labels, Seq("doc_id"), "left_outer")
@@ -538,56 +544,42 @@ object DedupOps {
     } finally edges.unpersist()
   }
 
-  /** Driver heap one pair row of [[connectedComponents]]' driver-local
-    * finish may allocate: the collected row, the union-find arrays and
-    * up to two rows of the label map joined back as a local relation.
-    * Allocation bounds what the finish holds at once. `FixpointSpec`
-    * measures the allocation slope on the worst shape, a matching (two
-    * label rows a pair): ~1.4 KB a pair row on JDK 17 / Spark 4.1. */
-  private[graft] val LocalFinishBytesPerRow: Long = 2048
-
-  /** Row cap of the driver-local finish on any heap, which keeps the
-    * label map riding the query's plan to a few MB of ids. */
-  private[graft] val LocalFinishMaxRows: Int = 1 << 18
-
-  /** Pair rows [[connectedComponents]] finishes on the driver: an eighth
-    * of the driver's max heap at [[LocalFinishBytesPerRow]] a row, capped
-    * at [[LocalFinishMaxRows]] (reached from a 4 GiB heap up; a 1 GiB
-    * heap finishes up to 65,536 pairs). */
-  private[graft] def localFinishRows: Int = math.min(LocalFinishMaxRows.toLong,
-    Runtime.getRuntime.maxMemory / 8 / LocalFinishBytesPerRow).toInt
-
-  /** Min-root union-find over collected edge rows `(x, y)` of Long ids,
-    * on the driver: every id that occurs maps to the least id connected
-    * to it, returned as a local relation `(doc_id, label)`. The ids are
-    * sorted once and a union keeps the smaller index as root, so a root
-    * is always its set's minimum. Rows with a null end are skipped, as
-    * the rounds' equi-joins skip them. State beside the rows: the two
-    * id columns, the sorted ids and one Int parent per id. */
-  private def minRootLabels(spark: SparkSession, rows: Array[Row]): DataFrame = {
-    val ends = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-    val xs = ends.map(_.getLong(0))
-    val ys = ends.map(_.getLong(1))
-    val ids = xs ++ ys
-    java.util.Arrays.sort(ids)
-    var n = 0
-    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+  /** Min-root union-find over packed edge rows `(x, y)` of Long ids, on
+    * the driver: every id that occurs maps to the least id connected to
+    * it, returned as a local relation `(doc_id, label)`. Ids are ranked
+    * by [[Fixpoint.Packed.index]] and a union keeps the smaller rank as
+    * root, so a root is always its set's minimum. Rows with a null end
+    * join nothing, as the rounds' equi-joins skip them. The label rows
+    * are `UnsafeRow`s over one shared buffer (8 B of null bits and two
+    * longs each), so the relation costs no `Row` or boxed id. */
+  private[graft] def minRootLabels(spark: SparkSession, p: Fixpoint.Packed): DataFrame = {
+    val (ids, end) = p.index
+    val n = ids.length
     val parent = Array.range(0, n)
     def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
-    for (i <- xs.indices) {
-      val (rx, ry) = (find(at(xs(i))), find(at(ys(i))))
+    for (i <- 0 until p.rows) if (end(2 * i) >= 0 && end(2 * i + 1) >= 0) {
+      val rx = find(end(2 * i))
+      val ry = find(end(2 * i + 1))
       if (rx < ry) parent(ry) = rx else if (ry < rx) parent(rx) = ry
     }
-    val out = new java.util.ArrayList[Row](n)
-    for (i <- 0 until n) out.add(Row(ids(i), ids(find(i))))
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("label", LongType, nullable = false))))
+    val RowBytes = 24
+    val buf = new Array[Byte](n * RowBytes)
+    val rows = Array.tabulate[InternalRow](n) { i =>
+      val at = Platform.BYTE_ARRAY_OFFSET + i.toLong * RowBytes
+      Platform.putLong(buf, at + 8, ids(i))
+      Platform.putLong(buf, at + 16, ids(find(i)))
+      val row = new UnsafeRow(2)
+      row.pointTo(buf, at, RowBytes)
+      row
+    }
+    ColumnBridge.ofRows(spark, LocalRelation(
+      Seq(AttributeReference("doc_id", LongType, nullable = false)(),
+        AttributeReference("label", LongType, nullable = false)()),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(rows)))
   }
 
   /** Cross-document repeated-span detection — the substring-level exact

@@ -1,11 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** The one driver of the engine's DataFrame fixpoint loops
   * ([[DedupOps.connectedComponents]], [[GraphOps.bfs]]): [[run]] owns the
-  * round counter, the round cap and the loud failure at the cap.
+  * round counter, the round cap and the loud failure at the cap. It also
+  * owns the driver-local finish that connected components, triangles and
+  * PageRank share: an input whose row count, observed on its checkpoint,
+  * fits [[localFinishRows]] is packed to the driver by [[collectLocal]]
+  * and answered there instead of by distributed joins.
   *
   * A round is one barrier: [[checkpointAndCount]] materializes the
   * round's frame with an EAGER checkpoint whose action also counts the
@@ -73,9 +79,103 @@ object Fixpoint {
     (cp, observedLong(obs, "progress")(tagged(cp, "fallback")(cp.filter(progress).count())))
   }
 
-  /** All rows of `df`, collected in one job tagged `local`: the input of
-    * a driver-local finish whose row count is already known to fit. */
-  private[graft] def collectLocal(df: DataFrame): Array[Row] = tagged(df, "local")(df.collect())
+  /** Rows of a two-column frame of Long ids, packed on the driver: row
+    * `i` is (`values(2i)`, `values(2i + 1)`), and `nulls` lists, in
+    * ascending order, the positions in `values` whose column was null
+    * (their value reads 0). */
+  final case class Packed(values: Array[Long], nulls: Array[Int]) {
+    def rows: Int = values.length / 2
+    def isNull(pos: Int): Boolean =
+      nulls.length > 0 && java.util.Arrays.binarySearch(nulls, pos) >= 0
+
+    /** The distinct non-null values, ascending, as `ids` (a value's index
+      * there is its rank, so a kernel keeps per-id state in arrays), and
+      * the rank of the value at every position, -1 for a null. Values
+      * meet through one open-addressing table (load ≤ ½), so only the
+      * distinct ids are sorted and no value is binary-searched. */
+    def index: (Array[Long], Array[Int]) = {
+      val mask = Integer.highestOneBit(math.max(4 * values.length - 1, 1)) - 1
+      val keys = new Array[Long](mask + 1)
+      val slot = new Array[Int](mask + 1) // 1 + first-seen order; 0 = empty
+      val ranks = new Array[Int](values.length)
+      var n = 0
+      for (pos <- values.indices) ranks(pos) = if (isNull(pos)) -1 else {
+        val v = values(pos)
+        var h = java.lang.Long.hashCode(v * 0x9E3779B97F4A7C15L) & mask
+        while (slot(h) != 0 && keys(h) != v) h = (h + 1) & mask
+        if (slot(h) == 0) { keys(h) = v; n += 1; slot(h) = n }
+        slot(h) - 1
+      }
+      val ids = new Array[Long](n)
+      for (h <- slot.indices) if (slot(h) != 0) ids(slot(h) - 1) = keys(h)
+      java.util.Arrays.sort(ids)
+      val rankOf = new Array[Int](n)
+      for (h <- slot.indices) if (slot(h) != 0)
+        rankOf(slot(h) - 1) = java.util.Arrays.binarySearch(ids, keys(h))
+      for (pos <- ranks.indices) if (ranks(pos) >= 0) ranks(pos) = rankOf(ranks(pos))
+      (ids, ranks)
+    }
+  }
+
+  /** The first two columns of `df`, as Longs, packed by [[Packed]] in one
+    * job tagged `local`: the input of a driver-local finish whose row
+    * count is already known to fit. Each task sends one `long[]` of its
+    * partition (16 B a row) instead of a row per record, and the driver
+    * decodes no `Row`. Row order follows the partitions; every kernel
+    * over it is order-free. */
+  private[graft] def collectLocal(df: DataFrame): Packed = {
+    val rdd = df.select(df.columns.take(2).map(c => df.col(c).cast(LongType)).toIndexedSeq: _*)
+      .queryExecution.toRdd
+    val parts = tagged(df, "local")(rdd.mapPartitions(rows => Iterator(pack(rows))).collect())
+    val values = new Array[Long](parts.map(_._1.length).sum)
+    val nulls = new Array[Int](parts.map(_._2.length).sum)
+    var (v, n) = (0, 0)
+    for ((vs, ns) <- parts) {
+      for (pos <- ns) { nulls(n) = v + pos; n += 1 }
+      System.arraycopy(vs, 0, values, v, vs.length)
+      v += vs.length
+    }
+    Packed(values, nulls)
+  }
+
+  private def pack(rows: Iterator[InternalRow]): (Array[Long], Array[Int]) = {
+    val values = new scala.collection.mutable.ArrayBuilder.ofLong
+    val nulls = new scala.collection.mutable.ArrayBuilder.ofInt
+    var pos = 0
+    rows.foreach { r =>
+      for (c <- 0 to 1) {
+        if (r.isNullAt(c)) { nulls += pos; values += 0L } else values += r.getLong(c)
+        pos += 1
+      }
+    }
+    (values.result(), nulls.result())
+  }
+
+  /** Driver heap one input row of a driver-local finish may allocate:
+    * the packed collect, the kernel's arrays and its output relation.
+    * Allocation bounds what the finish holds at once. `FixpointSpec`
+    * measures the allocation slope of each kernel on its worst-case
+    * input, a matching (the most ids a row can bring): connected
+    * components ~400 B a row (two label rows a pair), PageRank ~220 B,
+    * triangles ~175 B on JDK 17 / Spark 4.1. The largest reading,
+    * rounded up to a power of two, sets this bound. */
+  private[graft] val LocalFinishBytesPerRow: Long = 512
+
+  /** Row cap of the driver-local finish on any heap, which keeps a label
+    * map riding the query's plan to a few MB of ids. */
+  private[graft] val LocalFinishMaxRows: Int = 1 << 18
+
+  /** Input rows a driver-local finish takes: an eighth of the driver's
+    * max heap at [[LocalFinishBytesPerRow]] a row, capped at
+    * [[LocalFinishMaxRows]] (reached from a 1 GiB heap up; a 512 MiB
+    * heap finishes up to 131,072 rows). */
+  private[graft] def localFinishRows: Int = math.min(LocalFinishMaxRows.toLong,
+    Runtime.getRuntime.maxMemory / 8 / LocalFinishBytesPerRow).toInt
+
+  /** Whether `rows` input rows fit a budget of `localRows` (`0` forces
+    * the distributed path). */
+  private[graft] def fitsLocal(rows: Long, localRows: Int): Boolean =
+    localRows > 0 && rows <= localRows
 
   private def tagged[T](df: DataFrame, role: String)(job: => T): T = {
     val sc = df.sparkSession.sparkContext

@@ -4,7 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Observation
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Pins for [[ops.Fixpoint]], the driver of the fixpoint loops: the
@@ -66,19 +66,24 @@ class FixpointSpec extends SparkSpec {
       "empty round must observe 0 (the CC/BFS loops terminate on it)")
   }
 
-  /** A path graph as a two-column `lineitem.parquet` in a fresh sf dir:
-    * part i links to suppliers i-1 and i (those below `suppliers`), so
-    * BFS from part 0 reaches part i at hop 2i and supplier i at 2i+1. */
-  private def withPathGraph[T](parts: Int, suppliers: Int)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bfs_path").toFile
+  /** `rows` of (l_orderkey, l_partkey, l_suppkey), `None` for a null, as
+    * the `lineitem.parquet` of a fresh sf dir. */
+  private def withLineitem[T](rows: Seq[(Option[Long], Option[Long], Option[Long])])(
+      body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lineitem").toFile
     try {
-      val rows = for (i <- 0 until parts; s <- Seq(i - 1, i) if s >= 0 && s < suppliers)
-        yield (i.toLong, s.toLong)
-      spark.createDataFrame(rows).toDF("l_partkey", "l_suppkey")
+      spark.createDataFrame(rows).toDF("l_orderkey", "l_partkey", "l_suppkey")
         .coalesce(1).write.parquet(s"${dir.getPath}/lineitem.parquet")
       body(dir.getPath)
     } finally new scala.reflect.io.Directory(dir).deleteRecursively()
   }
+
+  /** A path graph: part i links to suppliers i-1 and i (those below
+    * `suppliers`), so BFS from part 0 reaches part i at hop 2i and
+    * supplier i at 2i+1. */
+  private def withPathGraph[T](parts: Int, suppliers: Int)(body: String => T): T =
+    withLineitem(for (i <- 0 until parts; s <- Seq(i - 1, i) if s >= 0 && s < suppliers)
+      yield (Some(i.toLong), Some(i.toLong), Some(s.toLong)))(body)
 
   /** Fixpoint jobs by role (`round`, `fallback`, `local`) run inside
     * `body`, counted once the listener bus has delivered every job start. */
@@ -118,7 +123,7 @@ class FixpointSpec extends SparkSpec {
   }
 
   test("connectedComponents finishes a graph within the budget on the driver: no round, one local job") {
-    val (jobs, labels) = fixpointJobs(chainComponents(10, ops.DedupOps.localFinishRows))
+    val (jobs, labels) = fixpointJobs(chainComponents(10, ops.Fixpoint.localFinishRows))
     assert(labels.get === (0L until 10L).map(_ -> 0L) :+ (10L -> 10L))
     assert(jobs("round") === 0 && jobs("local") === 1, jobs.toString)
   }
@@ -138,25 +143,64 @@ class FixpointSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]
-    // the driver's share of the finish: this thread (decoding the
-    // collected rows, union-find, the local relation) and the threads
-    // that deserialize task results
+    // the driver's share of the finish: this thread (the packed collect,
+    // the kernel, its local relation) and the threads that deserialize
+    // task results
     def driverThreads = Thread.getAllStackTraces.keySet.asScala.toSeq
       .filter(t => t == Thread.currentThread || t.getName.startsWith("task-result-getter"))
       .map(_.getId)
-    // a matching (2i, 2i+1) puts two ids in the label map per pair, the most a pair can
-    def allocatedFor(n: Long): Long = {
-      val pairs = spark.range(n).select((col("id") * 2).as("doc_a"), (col("id") * 2 + 1).as("doc_b"))
+    // a matching (2i, 2i+1) brings two fresh ids a row, the most a row
+    // can: two label rows for connected components, two nodes of degree
+    // one for triangles and PageRank
+    def allocatedFor(n: Long)(finish: ops.Fixpoint.Packed => DataFrame): Long = {
+      val pairs = spark.range(n).select((col("id") * 2).as("a"), (col("id") * 2 + 1).as("b"))
       val before = driverThreads.map(id => id -> mx.getThreadAllocatedBytes(id)).toMap
-      ops.DedupOps.connectedComponents(spark.range(0).toDF("doc_id"), pairs, n.toInt)
+      finish(ops.Fixpoint.collectLocal(pairs))
       driverThreads.map(id => mx.getThreadAllocatedBytes(id) - before.getOrElse(id, 0L)).sum
     }
+    val kernels = Seq[(String, ops.Fixpoint.Packed => DataFrame)](
+      "connected components" -> (ops.DedupOps.minRootLabels(spark, _)),
+      "triangles" -> (ops.GraphOps.localTriangles(spark, _)),
+      "pagerank" -> (ops.GraphOps.localPagerank(spark, _)))
     val (small, large) = (20000L, 100000L)
-    allocatedFor(small) // warm-up: JIT and the result threads
-    // the slope cancels the fixed cost of planning and the checkpoint job
-    val perRow = (allocatedFor(large) - allocatedFor(small)).toDouble / (large - small)
-    info(f"driver-local finish: $perRow%.0f B allocated a pair row")
-    assert(perRow > 0 && perRow <= ops.DedupOps.LocalFinishBytesPerRow, f"$perRow%.0f B a row")
+    val perRow = kernels.map { case (name, finish) =>
+      allocatedFor(small)(finish) // warm-up: JIT and the result threads
+      // the slope cancels the fixed cost of planning and the collect job
+      val slope = (allocatedFor(large)(finish) - allocatedFor(small)(finish)).toDouble / (large - small)
+      info(f"$name: $slope%.0f B allocated an input row")
+      name -> slope
+    }
+    assert(perRow.forall { case (_, b) => b > 0 && b <= ops.Fixpoint.LocalFinishBytesPerRow },
+      perRow.toString)
+  }
+
+  /** Rows of `df` with each double as its raw bits, and the schema. */
+  private def bits(df: DataFrame) = (df.schema, df.collect().toSeq.map(_.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case v         => v
+  }))
+
+  test("graph_triangles and graph_pagerank give the same rows, bit for bit, on the driver and distributed") {
+    val rnd = new scala.util.Random(14)
+    // random baskets (orders of 1-6 parts, a supplier each) with a
+    // (pk, null) and a (null, sk) row: the distributed PageRank counts a
+    // null end in the other end's out-degree
+    def randomLineitem(orders: Int, parts: Int, suppliers: Int) =
+      (for (o <- 0 until orders; _ <- 0 until 1 + rnd.nextInt(6))
+        yield (Some(o.toLong), Some(rnd.nextInt(parts).toLong), Some(rnd.nextInt(suppliers).toLong))) ++
+        Seq((Some(0L), Some(0L), None), (Some(1L), None, Some(1L)))
+    val kernels = Seq[(String, (String, Int) => DataFrame)](
+      "graph_triangles" -> (ops.GraphOps.graphTriangles(spark, _, _)),
+      "graph_pagerank" -> (ops.GraphOps.graphPagerank(spark, _, _)))
+    def check(dir: String): Unit = for ((name, kernel) <- kernels) {
+      val (localJobs, local) = fixpointJobs(bits(kernel(dir, ops.Fixpoint.localFinishRows)))
+      val (distJobs, dist) = fixpointJobs(bits(kernel(dir, 0)))
+      assert(local.get === dist.get, s"$name on $dir")
+      assert(localJobs("local") === 1 && distJobs("local") === 0, s"$name: $localJobs / $distJobs")
+    }
+    check(sf)
+    for ((orders, parts, suppliers) <- Seq((4, 6, 2), (60, 40, 12), (200, 120, 30)))
+      withLineitem(randomLineitem(orders, parts, suppliers))(check)
   }
 
   test("a loop that never stops progressing throws after exactly the cap's round jobs") {

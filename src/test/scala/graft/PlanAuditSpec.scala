@@ -10,10 +10,12 @@ class PlanAuditSpec extends SparkSpec {
 
   /** AQE's wrapper plan elides scan details and codegen spans until
     * execution; audits read the non-adaptive physical plan. */
-  private def planOf(name: String): String = {
+  private def planOf(name: String): String = planOf(q(name))
+
+  private def planOf(build: => org.apache.spark.sql.DataFrame): String = {
     val adaptiveWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try q(name).queryExecution.executedPlan.toString
+    try build.queryExecution.executedPlan.toString
     finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveWas)
   }
 
@@ -136,7 +138,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("graph_triangles never broadcasts the edge set or nests loops over it") {
-    val plan = planOf("graph_triangles")
+    // at budget 0: sf0.001's edge list would otherwise finish on the driver
+    val plan = planOf(ops.GraphOps.graphTriangles(spark, sf, localRows = 0))
     assert(!plan.contains("CartesianProduct"), s"cartesian in:\n$plan")
     // the only BNLJs permitted are the three single-row aggregate combines
     val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).length
@@ -961,7 +964,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("graph_pagerank: the checkpointed edge table feeds every iteration exchange-free and sort-free") {
-    val plan = planOf("graph_pagerank")
+    // at budget 0: sf0.001's pairs would otherwise finish on the driver
+    val plan = planOf(ops.GraphOps.graphPagerank(spark, sf, localRows = 0))
     // r19: eo is hash-partitioned + sorted by the iteration join key at
     // checkpoint time (Dataset.checkpoint preserves partitioning and
     // ordering), so the unrolled power iterations must carry NO exchange

@@ -28,6 +28,17 @@ class ProbeSpec extends SparkSpec {
     assert((rec \ "plan").extract[String].nonEmpty)
   }
 
+  test("a record sums the task result bytes the driver received: a local finish's packed edges") {
+    val rec = probe.record("graph_triangles")(SparkEntry.queries("graph_triangles")(_, sf))
+    assert((rec \ "fixpoint_local_jobs").extract[Int] === 1)
+    // the packed collect sends 16 B an edge (two longs) on top of each
+    // task's own metrics
+    val nEdges = ops.GraphOps.graphTriangles(spark, sf).collect().head.getAs[Long]("n_edges")
+    assert(nEdges > 0)
+    val bytes = (rec \ "driver_result_bytes").extract[Long]
+    assert(bytes >= 16 * nEdges, s"$bytes B for $nEdges edges")
+  }
+
   test("a query that throws is an error record with no wall sample") {
     val rec = probe.record("boom")(_ => throw new IllegalStateException("boom"))
     assert((rec \ "status").extract[String] === "error")

@@ -62,7 +62,7 @@ class PropertySpec extends SparkSpec {
           seen.foreach(v => ref(v) = label)
         }
       }
-      for (localRows <- Seq(graft.ops.DedupOps.localFinishRows, 0))
+      for (localRows <- Seq(graft.ops.Fixpoint.localFinishRows, 0))
         assert(labels(localRows) === ref.toMap, s"localRows=$localRows n=$n edges=$edges")
     }
   }

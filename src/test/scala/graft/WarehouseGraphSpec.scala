@@ -52,7 +52,9 @@ class WarehouseGraphSpec extends SparkSpec {
   }
 
   test("graph_triangles: matches the naive triple-join count on the small graph") {
-    val row = q("graph_triangles").collect().head
+    // the distributed plan (budget 0); FixpointSpec pins the driver-local
+    // census to it bit for bit
+    val row = ops.GraphOps.graphTriangles(spark, sf, localRows = 0).collect().head
     val li = Tables.lineitem(spark, sf)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
     val e = li.as("a").join(li.as("b"),
@@ -150,7 +152,8 @@ class WarehouseGraphSpec extends SparkSpec {
   }
 
   test("graph_pagerank: ranks exceed the damping floor and descend in order") {
-    val rows = q("graph_pagerank").collect()
+    // the distributed plan (budget 0), as for graph_triangles
+    val rows = ops.GraphOps.graphPagerank(spark, sf, localRows = 0).collect()
     assert(rows.length === 20)
     // every rank ≥ 0.15 (the damping floor) and the result is ordered
     rows.foreach(r => assert(r.getAs[Double]("pr") >= 0.15))
