@@ -478,9 +478,9 @@ object DedupOps {
     * and that checkpoint's action also counts its rows.
     *
     * A pair graph of at most [[Fixpoint.localFinishRows]] rows never runs
-    * a round: its rows are packed to the driver once (a `local`
-    * [[Fixpoint]] job) and labelled by min-root union-find there
-    * ([[minRootLabels]]).
+    * a round: [[Fixpoint.localFinish]] packs its rows to the driver once
+    * (a `local` [[Fixpoint]] job) and they are labelled by min-root
+    * union-find there ([[minRootLabels]]).
     *
     * A larger one runs [[Fixpoint.run]] rounds of min-label propagation
     * over edges PLUS pointer jumping (label ← label's label): propagation
@@ -501,10 +501,8 @@ object DedupOps {
     * rows; `0` forces the rounds. */
   private[graft] def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       localRows: Int): DataFrame = {
-    val (p, nPairs) = Fixpoint.checkpointAndCount(pairs, lit(true), role = None)
-    val labels =
-      if (Fixpoint.fitsLocal(nPairs, localRows)) minRootLabels(p.sparkSession, Fixpoint.collectLocal(p))
-      else roundLabels(p)
+    val labels = Fixpoint.localFinish(pairs, localRows)(
+      minRootLabels(pairs.sparkSession, _))(roundLabels)
     nodes.select(col(nodes.columns(0)).as("doc_id"))
       .join(labels, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))

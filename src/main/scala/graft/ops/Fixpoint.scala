@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.LongType
   * ([[DedupOps.connectedComponents]], [[GraphOps.bfs]]): [[run]] owns the
   * round counter, the round cap and the loud failure at the cap. It also
   * owns the driver-local finish that connected components, triangles and
-  * PageRank share: an input whose row count, observed on its checkpoint,
-  * fits [[localFinishRows]] is packed to the driver by [[collectLocal]]
-  * and answered there instead of by distributed joins.
+  * PageRank share ([[localFinish]]): an input whose row count, observed
+  * on its checkpoint, fits [[localFinishRows]] is packed to the driver by
+  * [[collectLocal]] and answered there instead of by distributed joins.
   *
   * A round is one barrier: [[checkpointAndCount]] materializes the
   * round's frame with an EAGER checkpoint whose action also counts the
@@ -71,7 +71,7 @@ object Fixpoint {
     * checkpointed frame, which delays the round and never changes it.
     * The checkpoint job is tagged `role` (none: an input checkpoint, not
     * a round). */
-  private[graft] def checkpointAndCount(frame: DataFrame, progress: Column,
+  private def checkpointAndCount(frame: DataFrame, progress: Column,
       role: Option[String] = Some("round")): (DataFrame, Long) = {
     val obs = Observation()
     val cp = tagged(frame, role.orNull)(eagerCheckpoint(
@@ -172,10 +172,16 @@ object Fixpoint {
   private[graft] def localFinishRows: Int = math.min(LocalFinishMaxRows.toLong,
     Runtime.getRuntime.maxMemory / 8 / LocalFinishBytesPerRow).toInt
 
-  /** Whether `rows` input rows fit a budget of `localRows` (`0` forces
-    * the distributed path). */
-  private[graft] def fitsLocal(rows: Long, localRows: Int): Boolean =
-    localRows > 0 && rows <= localRows
+  /** The driver-local finish: eagerly checkpoints `input` and counts its
+    * rows in the same action. Within a budget of `localRows` rows (`0`
+    * forces the distributed path), the checkpoint is packed to the driver
+    * by [[collectLocal]] and answered by `local`; otherwise `distributed`
+    * runs over the checkpoint. */
+  private[graft] def localFinish[T](input: DataFrame, localRows: Int)(local: Packed => T)(
+      distributed: DataFrame => T): T = {
+    val (cp, rows) = checkpointAndCount(input, lit(true), role = None)
+    if (localRows > 0 && rows <= localRows) local(collectLocal(cp)) else distributed(cp)
+  }
 
   private def tagged[T](df: DataFrame, role: String)(job: => T): T = {
     val sc = df.sparkSession.sparkContext

@@ -26,31 +26,32 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * Driver state is bounded by [[Fixpoint.localFinishRows]]: a triangle
   * census whose edge list, or a PageRank whose part↔supplier pairs, fit
   * that budget (the count rides the input's checkpoint) is packed to the
-  * driver ([[Fixpoint.collectLocal]]) and answered there with the same
+  * driver ([[Fixpoint.localFinish]]) and answered there with the same
   * arithmetic. Larger graphs keep no driver state.
   */
 object GraphOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Shared basket-graph derivation for the triangle family: deduped
-    * co-purchase edges, undirected degrees, and the (degree, id)-
-    * oriented DAG. The basket self-join + distinct is the expensive
-    * stage and every consumer references it several times (degree,
-    * orientation, counts), so the edge list is CHECKPOINTED once, and
-    * the checkpoint's action also counts its rows —
-    * per-branch column pruning otherwise defeats exchange reuse and
-    * re-runs the pair join per reference (the same lesson as
-    * `pmi_bigrams`). The oriented list is left lazy: both kernels read it
-    * only through [[sortedAdjacency]], whose own checkpoint computes it
-    * once. Orientation's total order: (degree, id),
-    * ties on degree broken by id, so each triangle has exactly one edge
-    * between its two order-smallest nodes. */
-  private def basketGraph(spark: SparkSession, sfDir: String) = {
+  /** Deduped co-purchase edges (x < y) of the triangle family: the
+    * basket self-join + distinct, the expensive stage. Every consumer
+    * references the edge list several times (degree, orientation,
+    * counts), so callers CHECKPOINT it once — per-branch column pruning
+    * otherwise defeats exchange reuse and re-runs the pair join per
+    * reference (the same lesson as `pmi_bigrams`). */
+  private def basketEdges(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-    val (e, nEdges) = Fixpoint.checkpointAndCount(li.as("a").join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .select(col("a.pk").as("x"), col("b.pk").as("y")).distinct(), lit(true), role = None)
+    li.as("a").join(li.as("b"), col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+      .select(col("a.pk").as("x"), col("b.pk").as("y")).distinct()
+  }
+
+  /** Undirected degrees and the (degree, id)-oriented DAG of the
+    * checkpointed edge list `e`. The oriented list is left lazy: both
+    * kernels read it only through [[sortedAdjacency]], whose own
+    * checkpoint computes it once. Orientation's total order: (degree, id),
+    * ties on degree broken by id, so each triangle has exactly one edge
+    * between its two order-smallest nodes. */
+  private def orient(e: DataFrame): (DataFrame, DataFrame) = {
     val deg = e.select(col("x").as("node")).unionAll(e.select(col("y").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     val oriented = e
@@ -62,7 +63,7 @@ object GraphOps {
           .otherwise(struct(col("y").as("u"), col("x").as("v")))
           .as("o"))
       .select(col("o.u").as("u"), col("o.v").as("v"))
-    (e, nEdges, deg, oriented)
+    (deg, oriented)
   }
 
   /** Out-neighbor adjacency of the oriented DAG, SORTED AT BUILD TIME:
@@ -101,13 +102,12 @@ object GraphOps {
   /** [[graphTriangles]] with a driver budget of `localRows` edges; `0`
     * forces the distributed plan. */
   private[graft] def graphTriangles(spark: SparkSession, sfDir: String,
-      localRows: Int): DataFrame = {
-    val (e, nEdges, deg, oriented) = basketGraph(spark, sfDir)
-    if (Fixpoint.fitsLocal(nEdges, localRows)) localTriangles(spark, Fixpoint.collectLocal(e))
-    else distributedTriangles(e, deg, oriented)
-  }
+      localRows: Int): DataFrame =
+    Fixpoint.localFinish(basketEdges(spark, sfDir), localRows)(
+      localTriangles(spark, _))(distributedTriangles)
 
-  private def distributedTriangles(e: DataFrame, deg: DataFrame, oriented: DataFrame): DataFrame = {
+  private def distributedTriangles(e: DataFrame): DataFrame = {
+    val (deg, oriented) = orient(e)
     // adjacency-intersection closing (instead of materializing the wedge
     // pair space and shuffle-joining it against the edge set): a triangle
     // {a,b,c} is counted exactly once, at the edge between its two
@@ -220,17 +220,14 @@ object GraphOps {
   /** [[graphPagerank]] with a driver budget of `localRows` part↔supplier
     * pairs; `0` forces the distributed plan. */
   private[graft] def graphPagerank(spark: SparkSession, sfDir: String,
-      localRows: Int): DataFrame = {
-    // the (pk, sk) distinct feeds BOTH static-table checkpoints below;
-    // exchange reuse does not cross checkpoint jobs, so without its own
-    // checkpoint the 600k-row scan + distinct re-ran once per consumer
-    // job (measured: three 590k-record exchange writes per build at
-    // sf0.1 — one for outdeg, two for eo's union branches). The
-    // checkpoint's action also counts the pairs for the budget.
-    val (li, nPairs) = Fixpoint.checkpointAndCount(partSupplier(spark, sfDir), lit(true), role = None)
-    if (Fixpoint.fitsLocal(nPairs, localRows)) localPagerank(spark, Fixpoint.collectLocal(li))
-    else distributedPagerank(li)
-  }
+      localRows: Int): DataFrame =
+    // the (pk, sk) distinct feeds BOTH static-table checkpoints of the
+    // distributed plan; exchange reuse does not cross checkpoint jobs, so
+    // without its own checkpoint the 600k-row scan + distinct re-ran once
+    // per consumer job (measured: three 590k-record exchange writes per
+    // build at sf0.1 — one for outdeg, two for eo's union branches)
+    Fixpoint.localFinish(partSupplier(spark, sfDir), localRows)(
+      localPagerank(spark, _))(distributedPagerank)
 
   private def distributedPagerank(li: DataFrame): DataFrame = {
     val edges = partSupplierEdges(li)
@@ -338,7 +335,7 @@ object GraphOps {
     * IEEE division of exact longs. Degree-1 nodes have no defined
     * coefficient and are filtered (both engines). */
   def graphLocalCc(spark: SparkSession, sfDir: String): DataFrame = {
-    val (_, _, deg, oriented) = basketGraph(spark, sfDir)
+    val (deg, oriented) = orient(Fixpoint.eagerCheckpoint(basketEdges(spark, sfDir)))
     val adj = sortedAdjacency(oriented)
     // adjacency-explode instead of `oriented ⋈ adj(u)` — see the
     // [[graphTriangles]] note (one exchange + sort of the edge list
